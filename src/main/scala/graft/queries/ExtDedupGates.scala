@@ -449,7 +449,7 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
     s.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val docsSchema = s.read.parquet(s"$dir/documents.parquet").schema
+      val docsSchema = Tables.schema(s, dir, "documents")
       val tmp = streamTmpDir("graft_x55_stream_")
       val out = tmp.resolve("out").toString
       val ckpt = tmp.resolve("ckpt").toString

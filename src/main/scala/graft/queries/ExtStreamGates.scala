@@ -304,7 +304,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     s.conf.set(provKey,
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     try {
-      val embSchema = s.read.parquet(s"$dir/embeddings.parquet").schema
+      val embSchema = Tables.schema(s, dir, "embeddings")
       val tmp = streamTmpDir("graft_x82_stream_")
       val out = tmp.resolve("out").toString
       val ckpt = tmp.resolve("ckpt").toString
@@ -539,7 +539,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
 
   def x12_events_tumbling_stream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = Tables.schema(s, dir, "events")
     val tmp = streamTmpDir("graft_x12_stream_")
     val out = tmp.resolve("out").toString
     val ckpt = tmp.resolve("ckpt").toString
@@ -607,7 +607,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
   def x13_events_sessions_stream(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.streaming.Trigger
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = Tables.schema(s, dir, "events")
     val tmp = streamTmpDir("graft_x13_stream_")
     val out = tmp.resolve("out").toString
     val ckpt = tmp.resolve("ckpt").toString
@@ -692,7 +692,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     * Sink: per-batch overwrite dirs (x13's at-least-once discipline). */
   def x65_stream_dedup_replay(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
-    val batchSchema = s.read.parquet(s"$dir/events.parquet").schema
+    val batchSchema = Tables.schema(s, dir, "events")
     val tmp = streamTmpDir("graft_x65_stream_")
     val out = tmp.resolve("out").toString
     val ckpt = tmp.resolve("ckpt").toString

@@ -1,15 +1,24 @@
 package graft.tables
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet tables (TESTDATA.md).
   *
   * The reference workload runs against a pre-loaded MySQL catalog
   * (`use chinook`, reference SQL_file.sql:1); our analog is a loader that
   * resolves each table of the star schema from a scale-factor directory.
-  * Schemas are fixed by the parquet footers (FIXTURES.md §2), so no
-  * inference happens at read time — `spark.read.parquet` uses the embedded
-  * schema, which both Spark and the DuckDB oracle see identically.
+  * Schemas are fixed by the parquet footers (FIXTURES.md §2), which both
+  * Spark and the DuckDB oracle see identically. A plain
+  * `spark.read.parquet` reads that footer schema with a one-task Spark job
+  * on every call — a fixed cost paid each time a query is built. So the
+  * schema is read once per table layout, held in [[footers]], and every
+  * [[load]] passes it to `spark.read.schema(...)`, which starts no job.
+  * Only the schema is memoized: each load still builds a fresh relation
+  * with fresh attribute ids, so self-joins analyze as before.
   *
   * Scale note: each table is a plain parquet path; at cluster scale these
   * would be directories of many files (or partitioned layouts) and the same
@@ -21,18 +30,68 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Session settings that change the schema Spark reads from a footer
+    * (string/int96/NTZ/nanos surfacing; mergeSchema picks which footers). */
+  private val schemaConfs = Seq(
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.mergeSchema")
 
-  /** Planned scan parallelism per path — one physical-planning pass the
-    * first time a corpus table is loaded, no job. Keyed by path alone
-    * (the split count is a property of the file layout, not the session)
-    * so entries never pin stopped SparkSessions in memory; a path whose
-    * files are REWRITTEN with a different layout mid-process would read a
-    * stale count, which can only mis-skip the optional fan-out, never
-    * affect results. */
-  private val partCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Int]
+  /** A table layout: its path, every file under it as (name, length,
+    * modification time) from one driver-side listing, and the session's
+    * [[schemaConfs]] values. A table rewritten in place gets a new key.
+    * No session in the key, so entries never pin stopped sessions. */
+  private final case class FooterKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Seq[String])
+
+  /** What one layout's footers determine: the schema, and the planned
+    * scan split count once a fan-out has asked for it. */
+  private final case class Footer(schema: StructType, splits: Option[Int])
+
+  /** Two threads missing the same key at once (warmCaches' Futures) may
+    * both read the footer; the value is deterministic, so either insert
+    * is correct and a plain TrieMap suffices. */
+  private val footers = TrieMap.empty[FooterKey, Footer]
+
+  private def footer(spark: SparkSession, path: String): (FooterKey, Footer) = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    def files(p: Path): Seq[(String, Long, Long)] = fs.listStatus(p).toSeq
+      .flatMap(f => if (f.isDirectory) files(f.getPath)
+        else Seq((f.getPath.toString, f.getLen, f.getModificationTime)))
+    // A missing path keys as empty, so the miss below raises Spark's own
+    // path-not-found error, as a plain read would.
+    val key = FooterKey(path, if (fs.exists(p)) files(p).sorted else Nil,
+      schemaConfs.map(spark.conf.get))
+    key -> footers.getOrElseUpdate(key,
+      Footer(spark.read.parquet(path).schema, None))
+  }
+
+  private def pathOf(dir: String, name: String): String = s"$dir/$name.parquet"
+
+  /** The footer schema of table `name`, exactly as `spark.read.parquet`
+    * surfaces it (before any of [[events]]' ts normalization). */
+  def schema(spark: SparkSession, dir: String, name: String): StructType =
+    footer(spark, pathOf(dir, name))._2.schema
+
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    spark.read.schema(schema(spark, sfDir, name)).parquet(pathOf(sfDir, name))
+
+  /** [[load]] and the table's planned scan split count, found by one
+    * physical-planning pass (no job) the first time per layout. */
+  private def loadCounted(spark: SparkSession, dir: String,
+                          name: String): (DataFrame, Int) = {
+    val p = pathOf(dir, name)
+    val (key, f) = footer(spark, p)
+    val df = spark.read.schema(f.schema).parquet(p)
+    df -> f.splits.getOrElse {
+      val n = df.rdd.getNumPartitions
+      footers.put(key, f.copy(splits = Some(n)))
+      n
+    }
+  }
 
   /** Starved-scan fan-out for the CPU-heavy per-row corpora (documents,
     * embeddings): a pathologically-compacted input (one parquet row group
@@ -58,10 +117,8 @@ object Tables {
     * aggregates opt into their own key-aligned repartition instead
     * (q06). */
   private def fanOut(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val df = load(spark, dir, name)
+    val (df, parts) = loadCounted(spark, dir, name)
     val cores = spark.sparkContext.defaultParallelism
-    val parts = partCountCache.getOrElseUpdate(s"$dir/$name",
-      df.rdd.getNumPartitions)
     if (parts * 4 < cores) df.repartition(cores) else df
   }
 
@@ -110,10 +167,9 @@ object Tables {
     * bar; on a real multi-file events feed mappers ≫ cores and this is the
     * same exact no-op. */
   def eventsFanned(spark: SparkSession, dir: String): DataFrame = {
-    val df = events(spark, dir)
+    val (raw, parts) = loadCounted(spark, dir, "events")
+    val df = surfaceEventTs(raw)
     val cores = spark.sparkContext.defaultParallelism
-    val parts = partCountCache.getOrElseUpdate(s"$dir/events",
-      load(spark, dir, "events").rdd.getNumPartitions)
     if (parts < cores) df.repartition(cores) else df
   }
 
