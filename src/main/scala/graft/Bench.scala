@@ -17,6 +17,9 @@ object Bench {
     "s06_risk_profile", "s07_clv", "s10_schema_evolution",
     "s11_country_metrics")
 
+  /** The stdout JSON line must fit in this many chars (see its use). */
+  private val StdoutWindow = 1880
+
   /** Measurement protocol (run-to-run variance at sf0.1 is ±30% on single
     * runs, so single-shot numbers are noise):
     *  - every query runs `reps` times (default 3) and reports the MEDIAN;
@@ -69,10 +72,8 @@ object Bench {
         }
       } catch { case _: Throwable => () }
       finally {
-        // each clear individually guarded: a throwing clear (e.g. stopped
-        // context) must neither abort the bench before any JSON line is
-        // emitted nor skip the other registry's release
-        try graft.queries.Chinook.clearCaches(spark) catch { case _: Throwable => () }
+        // guarded: a throwing clear (e.g. stopped context) must not abort
+        // the bench before any JSON line is emitted
         try graft.ext.ExtCaches.clearCaches() catch { case _: Throwable => () }
       }
     } else System.err.println(
@@ -226,7 +227,6 @@ object Bench {
     // warm for s13's set-ops consumers — released after the family.
     val sExt = all.filterNot(Headline).filter(_.startsWith("s"))
     val extendedS = run(sExt, coldCaches = false)
-    graft.queries.Chinook.clearCaches(spark)
     graft.ext.ExtCaches.clearCaches()
     // Family 3: LLM-pipeline extensions (x*), each self-contained: its
     // first rep pays its own cache build cold. The component-fixpoint
@@ -251,7 +251,7 @@ object Bench {
     // Family 5 carve-out (round 16, closing the round-15 verdict's #4):
     // the trained-index consumers share one coarse quantizer + one PQ
     // codebook chain (ExtAnnGates.sharedCellStats / sharedPqState — the
-    // ccLabelsCache discipline), so like family 4 the training is built
+    // minhashDupLabels discipline), so like family 4 the training is built
     // ONCE, timed as its own ann_trained_build line, and the consumers
     // run warm; previously x88 re-trained the chain x76 had just paid
     // for, and the two trainings dominated the two largest extended
@@ -284,8 +284,8 @@ object Bench {
     val extendedX = run(xExt, coldCaches = true)
     graft.ext.ExtCaches.clearCaches()
     // Family 4: the connected-component consumers. The eager fixpoints are
-    // shared (one CC run serves x20/x23/x26/x36 — see ccLabelsCache), so like
-    // family 1 they are built ONCE, timed as their own lines, and the
+    // shared (one CC run serves x20/x23/x26/x36 — see minhashDupLabels), so
+    // like family 1 they are built ONCE, timed as their own lines, and the
     // consumers run warm; previously the build cost hid in median-discarded
     // first reps and x20 read as free (round-4 verdict).
     val ccBuild = timedBuild("cc_fixpoint_build")(
@@ -401,7 +401,8 @@ object Bench {
     // window: shorten the sf dir to its basename, then decisecond precision
     // for the extended map (every per-query number still visible — strictly
     // better than losing the map), and only as a last resort drop the
-    // extended map (its total survives).
+    // extended map (its total survives). If even that overflows, fail
+    // loudly: a line outside the window parses as null, silently.
     val base = new java.io.File(sfDir).getName
     val candidates = Seq(
       line(fmt, extMap = true, sfDir),
@@ -409,7 +410,15 @@ object Bench {
       line(fmt, extMap = true, base, fmtAt(1)),
       line(fmtAt(1), extMap = true, base, fmtAt(1)),
       line(fmt, extMap = false, sfDir))
-    println(candidates.find(_.length <= 1880).getOrElse(candidates.last))
+    val fitting = candidates.find(_.length <= StdoutWindow)
+    fitting.foreach(println)
     spark.stop()
+    if (fitting.isEmpty) {
+      System.err.println(s"[bench] stdout JSON line overflows the " +
+        s"$StdoutWindow-char parse window: the last tier (no extended " +
+        s"map) is ${candidates.last.length} chars; the full record is in " +
+        "bench_detail.json")
+      sys.exit(1)
+    }
   }
 }

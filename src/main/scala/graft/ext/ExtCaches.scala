@@ -1,23 +1,39 @@
 package graft.ext
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.concurrent.TrieMap
+import scala.concurrent.{Await, Future, TimeoutException}
+import scala.concurrent.duration._
+import scala.util.Success
 
-/** Registry for relations the extension operators persist() as join-reuse
-  * barriers (shingle indexes, minhash band rows, quantized embedding
-  * tables, corpus statistics). Each operator registers what it caches;
-  * a long-lived session (or the bench harness between query families)
-  * calls [[clearCaches]] to release executor storage memory. Mirrors
-  * `graft.queries.Chinook.clearCaches` for the reference-workload caches.
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+/** The one registry of shared state the operators and queries build from
+  * lineage and reuse until released (the Shark model: a cached relation
+  * is built once, then read by every consumer until it is dropped):
+  *  - tracked persists ([[persistTracked]]) and checkpoint block sets
+  *    ([[checkpointTracked]]) — executor storage;
+  *  - [[anchor]]s — session-keyed driver-side values built from those
+  *    relations (trained quantizers, component labels, the reference
+  *    workload's view aggregate), built once per cache epoch.
+  *
+  * [[clearCaches]] ends the epoch: it releases all storage and drops
+  * every anchor, so the next use rebuilds from source. It is the only
+  * release path; a long-lived session (or the bench harness between
+  * query families) calls it to free executor storage memory.
   */
 object ExtCaches {
   private val cached = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-  private val clearHooks = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
 
-  /** Persist `df` and remember it for a later [[clearCaches]]. */
-  def persistTracked(df: DataFrame): DataFrame = synchronized {
+  /** Persist `df` and remember it for a later [[clearCaches]]. The
+    * persist() runs outside the registry lock: it plans the query (the
+    * cached relation takes its executed plan), and concurrent warm chains
+    * would otherwise plan one at a time. */
+  def persistTracked(df: DataFrame): DataFrame = {
     val p = df.persist()
-    cached += p
-    fills += 1
+    synchronized {
+      cached += p
+      fills += 1
+    }
     p
   }
 
@@ -71,24 +87,32 @@ object ExtCaches {
   }
 
   /** Eager localCheckpoint with its blocks tracked for release at
-    * [[clearCaches]] — the Similarity-trainer lineage discipline
-    * (Similarity.cpTracked's hazard note applies verbatim) exposed for
-    * the OTHER iterative trainers. Round 16, measured: the BPE merge
-    * loops chained lazy persists, and because every round references
-    * the previous round TWICE (pair statistic + fold input), the
-    * analyzed plan grows 2^k — Catalyst re-renders the cached subtree
-    * per reference, and at k = 6 (x110c) the formatted plan was 940 KB
-    * with driver-side planning dominating the query (11.8 s vs the
-    * 4-round char twin's 1.7 s). Rooting each round at a LogicalRDD
-    * keeps the plan O(1) per round.
+    * [[clearCaches]] — the lineage discipline of every iterative trainer
+    * (Lloyd rounds, PQ codebooks, BPE merges, component fixpoints). A
+    * persist() is NOT enough there: the persisted round's ANALYZED plan
+    * still contains the full previous-round tree, and because each round
+    * re-references the corpus and the previous round, the downstream
+    * plan is a DAG that Catalyst's visitors traverse as a TREE. Measured:
+    * x77 (cell training + residuals + PQ training + bias joins) reached
+    * 8,000+ InMemoryTableScan references / 166k rendered plan lines for
+    * its codes relation alone, ~3 s of driver-side plan work per action
+    * (x77 25.6 → 3.9 s cold, x76 5.2 → 2.5 s once checkpointed); the BPE
+    * merge loop's plan grew 2^k, 940 KB formatted at k = 6 (x110c,
+    * 11.8 s vs the 4-round char twin's 1.7 s). Rooting each round at a
+    * LogicalRDD keeps the plan O(1) per round. Counted in [[fillCount]]
+    * like every other tracked materialization.
     *
-    * HOLD-ACROSS-clearCaches HAZARD (same as cpTracked): once
-    * clearCaches releases the blocks, a held derivative CANNOT
-    * recompute — it fails loudly with a missing-block error. Every
-    * registry query constructs, runs, and dumps its result before any
-    * clearCaches, which is the intended contract. Counted in
-    * [[fillCount]] like every other tracked materialization so the
-    * bench's cf attribution column sees checkpoint fills too. */
+    * HOLD-ACROSS-clearCaches HAZARD (deliberate, and different from
+    * [[persistTracked]]): localCheckpoint TRUNCATES lineage, so once
+    * [[clearCaches]] releases the blocks, a still-held derivative CANNOT
+    * recompute — its next action fails with a missing-block error, where
+    * a released persist would silently (and expensively) recompute. That
+    * loud failure is the intended contract: every registry query
+    * constructs, runs, and dumps its result before any clearCaches, and
+    * a caller that stashes a derivative across a clearCaches has a
+    * stale-model bug this surfaces instead of masking. Consumers that
+    * outlive a cache epoch re-invoke the query function (retraining from
+    * source), not re-act on the held frame. */
   def checkpointTracked(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
     synchronized { fills += 1 }
@@ -107,24 +131,69 @@ object ExtCaches {
     releasables += release
   }
 
-  /** Register a callback run by every [[clearCaches]] — for KEYED caches
-    * holding references to tracked relations (e.g. the component-label
-    * registry), which must drop their entries when the persists beneath
-    * them are released: a kept reference would silently re-evaluate the
-    * un-persisted lineage on next use. */
-  def registerClearHook(h: () => Unit): Unit = synchronized {
-    clearHooks += h
+  /** A value built on first use. Its `lazy val` is the single-flight
+    * guard: concurrent first callers wait on this holder's monitor while
+    * one of them builds, and a build that throws leaves it unset, so the
+    * next call builds again. */
+  private final class Held(build: () => Any) {
+    lazy val value: Any = build()
   }
 
-  /** Unpersist every tracked relation (blocking, so storage memory is
-    * actually free when this returns — the bench harness relies on that),
-    * then run the registered keyed-cache hooks. */
+  private val anchors = TrieMap.empty[(String, SparkSession, Any), Held]
+
+  /** The value `build` returns for (`name`, `s`, `key`), built at most
+    * once per cache epoch: every caller until the next [[clearCaches]]
+    * gets the same value. `name` identifies the call site (one value
+    * type per name); `key` is whatever else selects the value (a data
+    * dir, a canonicalized plan). A losing racer on the map only discards
+    * an unevaluated holder, and the build never runs under the registry
+    * lock (builds run Spark jobs and call [[persistTracked]]), so an
+    * anchor's build may use other anchors. */
+  def anchor[V](name: String, s: SparkSession, key: Any)(build: => V): V =
+    anchors.getOrElseUpdate((name, s, key), new Held(() => build))
+      .value.asInstanceOf[V]
+
+  /** How long [[warmChains]] waits for its chains: far above any warm
+    * build this repo runs (seconds at sf0.1), so reaching it means a
+    * chain is wedged, not slow. */
+  val WarmDeadline: FiniteDuration = 30.minutes
+
+  /** Run independent warm chains concurrently on the global execution
+    * context and wait until EVERY chain has settled — a failure must not
+    * hand the caller a session with a detached in-flight job. Throws the
+    * first failing chain's error (in argument order) with the other
+    * failures attached as suppressed; a chain still running at
+    * [[WarmDeadline]] fails the call with an error naming it. Each Lloyd
+    * / PQ chain is a string of tiny serial jobs that leaves most task
+    * slots idle, so overlapping independent chains shortens the build. */
+  def warmChains(chains: (String, () => Any)*): Unit = {
+    import scala.concurrent.ExecutionContext.Implicits.global
+    val running = chains.map { case (n, c) => n -> Future(c()) }
+    try Await.ready(
+      Future.traverse(running)(_._2.transform(Success(_))), WarmDeadline)
+    catch {
+      case _: TimeoutException =>
+        throw new TimeoutException(s"warm chains still running after " +
+          s"$WarmDeadline: ${running.filterNot(_._2.isCompleted)
+            .map(_._1).mkString(", ")}")
+    }
+    val failures = running.flatMap(_._2.value.flatMap(_.failed.toOption))
+    failures.headOption.foreach { first =>
+      failures.tail.filterNot(_ eq first).foreach(first.addSuppressed)
+      throw first
+    }
+  }
+
+  /** End the cache epoch: unpersist every tracked relation and release
+    * every checkpoint block set (blocking, so storage memory is actually
+    * free when this returns — the bench harness relies on that), then
+    * drop every anchor. */
   def clearCaches(): Unit = synchronized {
     cached.foreach(_.unpersist(blocking = true))
     cached.clear()
     releasables.foreach(_.apply())
     releasables.clear()
-    clearHooks.foreach(_.apply())
+    anchors.clear()
   }
 
   /** Number of currently tracked cached relations (for tests). */

@@ -1327,13 +1327,14 @@ object Similarity {
                     vecCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val q = quantizedWithLabel(df, idCol, labelCol, vecCol)
-    // cpTracked (see its Scaladoc): chained per-round persists leave a
-    // plan DAG that re-plans exponentially at every downstream action.
-    var stats = cpTracked(
+    // checkpointTracked (see its Scaladoc): chained per-round persists
+    // leave a plan DAG that re-plans exponentially at every downstream
+    // action.
+    var stats = ExtCaches.checkpointTracked(
       centroidStats(q.select(col("label").as("c_label"), col("v"))))
     val perRound = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
-      stats = cpTracked(centroidStats(lloydAssign(q, stats)))
+      stats = ExtCaches.checkpointTracked(centroidStats(lloydAssign(q, stats)))
       perRound += stats.select(
         lit(r.toLong).as("round"), col("c_label"),
         col("n").as("n_vecs"),
@@ -1424,46 +1425,12 @@ object Similarity {
     * and query vectors are re-expressed RELATIVE to their cell before
     * PQ coding, so the stats feed both the probe ranking and the
     * [[roundedCentroids]] subtraction. */
-  /** Eager localCheckpoint for the tiny per-round Lloyd state (|cells|
-    * rows), blocks handed to ExtCaches for release at clearCaches — the
-    * [[Dedup.connectedComponents]] lineage discipline applied to the
-    * training loops. A persist() here is NOT enough: the persisted
-    * round's ANALYZED plan still contains the full previous-round tree,
-    * and because the chains re-reference `q` and each other, the
-    * downstream plan is a DAG that Catalyst's visitors traverse as a
-    * TREE — measured on x77 (the deepest composition: cell training +
-    * residuals + PQ training + bias joins) at 8,000+ InMemoryTableScan
-    * references / 166k rendered plan lines for the CODES relation alone,
-    * costing ~3 s of driver-side plan work per action and ~25 s for the
-    * full query. Checkpointing each round roots it at a LogicalRDD and
-    * the whole family re-plans in milliseconds (x77 25.6 → 3.9 s cold,
-    * x76 5.2 → 2.5 s — same hash-gated output).
-    *
-    * HOLD-ACROSS-clearCaches HAZARD (deliberate, and different from
-    * [[ExtCaches.persistTracked]]): localCheckpoint TRUNCATES lineage,
-    * so once [[ExtCaches.clearCaches]] releases the checkpoint blocks, a
-    * still-held DataFrame derived from these stats CANNOT recompute —
-    * its next action fails with a missing-block error, where a released
-    * persist would silently (and expensively) recompute. That loud
-    * failure is the intended contract: every registry query constructs,
-    * runs, and dumps its result before any clearCaches, and a caller
-    * that stashes a trained-stats derivative across a clearCaches has a
-    * stale-model bug this surfaces instead of masking. Consumers that
-    * legitimately outlive a cache epoch must re-invoke the query
-    * function (retraining from source), not re-act on the held frame. */
-  private def cpTracked(df: DataFrame): DataFrame = {
-    val cp = df.localCheckpoint(true)
-    ExtCaches.trackReleasable(() =>
-      org.apache.spark.sql.graftfn.Lineage.release(cp, blocking = true))
-    cp
-  }
-
   private[graft] def trainedCellStats(q: DataFrame, cells: Int,
                                lloydRounds: Int): DataFrame = {
-    var stats = cpTracked(centroidStats(
+    var stats = ExtCaches.checkpointTracked(centroidStats(
       q.select(pmod(col("id"), lit(cells.toLong)).as("c_label"), col("v"))))
     for (_ <- 1 to lloydRounds)
-      stats = cpTracked(centroidStats(lloydAssign(q, stats)))
+      stats = ExtCaches.checkpointTracked(centroidStats(lloydAssign(q, stats)))
     stats
   }
 
@@ -1610,15 +1577,15 @@ object Similarity {
     val svRel = ExtCaches.persistTracked(q.select(col("id"),
       posexplode(array((0 until m).map(s =>
         slice(col("v"), s * sub + 1, sub)): _*)).as(Seq("sub", "sv"))))
-    // cpTracked, not persistTracked: see its Scaladoc — the PQ chain is
-    // one of the two Lloyd loops whose chained plans made every
+    // checkpointTracked, not persistTracked: see its Scaladoc — the PQ
+    // chain is one of the two Lloyd loops whose chained plans made every
     // downstream action re-traverse the full training DAG.
-    var stats = cpTracked(centroidStats(svRel.select(
+    var stats = ExtCaches.checkpointTracked(centroidStats(svRel.select(
       (col("sub").cast(LongType) * codes +
         pmod(col("id"), lit(codes.toLong))).as("c_label"),
       col("sv").as("v"))))
     for (_ <- 1 to lloydRounds)
-      stats = cpTracked(centroidStats(
+      stats = ExtCaches.checkpointTracked(centroidStats(
         svRel.join(broadcast(packCents(stats)))
           .select(pqArgmin(codes)(col("cents")).getField("c_label")
             .as("c_label"), col("sv").as("v"))))

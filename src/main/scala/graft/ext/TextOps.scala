@@ -610,25 +610,19 @@ object TextOps {
     * ships. [[bpeApplyVocab]] (x113) is that shipped forward pass: one
     * |vocab|-sized broadcast join over raw unseen text, never a
     * re-derivation — the claim is hash-gated, not scaladoc. Same
-    * vocab-bounded scale shape as the trainer. */
-  /** Session-keyed memo of the CHECKPOINTED vocabulary (round 17 — the
-    * r16 verdict's #7): the final eager localCheckpoint is what roots
-    * compositions at a LogicalRDD, but unlike the lazy persists it is
-    * NOT deduped by the CacheManager — every warm re-construction
-    * re-materialized the full pass (x113's warm reps paid 0.2 s for a
-    * vocabulary the session already held). Keyed on the canonicalized
-    * seed plan + k so distinct corpora/configs never collide; cleared
-    * with the checkpoint blocks by the ExtCaches hook (the
-    * graphCellStatsCache epoch contract — a kept entry would reference
-    * released blocks and fail loudly, which the clear prevents). */
-  private val encodeCharsMemo = scala.collection.concurrent.TrieMap
-    .empty[(org.apache.spark.sql.SparkSession, Any, Int), DataFrame]
-  ExtCaches.registerClearHook(() => encodeCharsMemo.clear())
-
+    * vocab-bounded scale shape as the trainer.
+    *
+    * Anchored per cache epoch (round 17 — the r16 verdict's #7): the final
+    * eager localCheckpoint is what roots compositions at a LogicalRDD,
+    * but unlike the lazy persists it is NOT deduped by the CacheManager —
+    * every warm re-construction re-materialized the full pass (x113's
+    * warm reps paid 0.2 s for a vocabulary the session already held).
+    * Keyed on the canonicalized seed plan + k so distinct corpora and
+    * configs never collide. */
   def bpeEncodeChars(docs: DataFrame, idCol: String, textCol: String,
-                     k: Int): DataFrame = encodeCharsMemo.getOrElseUpdate(
-    (docs.sparkSession,
-      charWordSeqs(docs, textCol).queryExecution.analyzed.canonicalized, k), {
+                     k: Int): DataFrame = ExtCaches.anchor("bpeEncodeChars",
+      docs.sparkSession,
+      (charWordSeqs(docs, textCol).queryExecution.analyzed.canonicalized, k)) {
     // Per-round lazy persists + ONE final eager checkpoint (round 16,
     // measured): the persists let a warm re-construction dedupe against
     // the still-cached rounds (the bench's warm-median contract), while
@@ -643,7 +637,7 @@ object TextOps {
           keep = Seq("word", "freq")))
     }
     ExtCaches.checkpointTracked(cur)
-  })
+  }
 
   /** Char-BPE tokenizer APPLY on raw unseen text (x113) — the forward
     * pass a frozen vocabulary ships for: encode documents that played NO

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
+import graft.ext.ExtCaches
 import graft.ops.{Exact, PairMining, Quality, TopK}
 import graft.tables.Tables
 
@@ -82,15 +83,13 @@ object Chinook {
     *
     * The reference creates the view once and reads it four times; MySQL
     * re-materializes it per consumer (SURVEY §3.1). We do one better and
-    * persist the 6-row aggregated result per (session, sfDir) — the four
-    * consumers then reuse it instead of re-running the star join + agg.
-    * At 100 TB the cached relation is still |genres| rows — caching the
-    * *aggregate*, never the base data, is the scale-safe choice. */
-  private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
+    * persist the 6-row aggregated result once — the four consumers then
+    * reuse it instead of re-running the star join + agg. At 100 TB the
+    * cached relation is still |genres| rows — caching the *aggregate*,
+    * never the base data, is the scale-safe choice. */
   def usaGenreSales(s: SparkSession, dir: String): DataFrame =
-    viewCache.getOrElseUpdate((s, dir), usaGenreSalesPlan(s, dir).persist())
+    ExtCaches.anchor("usaGenreSales", s, dir)(
+      ExtCaches.persistTracked(usaGenreSalesPlan(s, dir)))
 
   private def usaGenreSalesPlan(s: SparkSession, dir: String): DataFrame = {
     val usa = salesStar(s, dir).filter(col("n_name") === USA)
@@ -374,8 +373,8 @@ object Chinook {
   // ---- s04: basket-affinity pair mining (:392–454) ----------------------
 
   /** The three affinity queries differ only in label column; the shared
-    * persisted relation is the label-free part-key pair graph, built with
-    * a single shuffle per (session, dir) — at cluster scale this is the
+    * persisted relation is the label-free part-key pair graph, built once
+    * with a single shuffle — at cluster scale this is the
     * materialized co-purchase edge list every market-basket pass starts
     * from. Pair counts are array-order invariant, so no per-basket sort
     * is needed. */
@@ -389,13 +388,10 @@ object Chinook {
   // dimension — broadcast at test scale, shuffle-on-key at cluster scale,
   // either way a plan Catalyst picks per stats rather than one baked in
   // at build time.
-  private val basketPairsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-
   private def basketPairs(s: SparkSession, dir: String): DataFrame =
-    basketPairsCache.getOrElseUpdate((s, dir),
-      PairMining.coOccurrenceKeyPairs(
-        Tables.lineitem(s, dir), "l_orderkey", "l_partkey").persist())
+    ExtCaches.anchor("basketPairs", s, dir)(
+      ExtCaches.persistTracked(PairMining.coOccurrenceKeyPairs(
+        Tables.lineitem(s, dir), "l_orderkey", "l_partkey")))
 
   private def affinity(s: SparkSession, dir: String, labelCol: String): DataFrame = {
     val lab = Tables.part(s, dir).select(col("p_partkey"), col(labelCol).as("lab"))
@@ -414,45 +410,20 @@ object Chinook {
     * cost can be measured — and charged — separately from the queries
     * that reuse them (the bench reports it as its own line instead of
     * silently loading it onto whichever family member runs first). */
-  def warmCaches(s: SparkSession, dir: String, concurrent: Boolean = true): Unit =
-    if (!concurrent) {
-      // Sequential form, kept for the measured A/B (PLANS.md round 6):
-      // the round-5 driver bench charged shared_cache_build 7.79 s where
-      // round 4's sequential build took 2.77 s, and concurrency was the
-      // prime suspect.
-      usaGenreSales(s, dir).count()
-      basketPairs(s, dir).count()
-      ()
-    } else {
+  def warmCaches(s: SparkSession, dir: String): Unit =
     // The two materializations are independent jobs; submitting them as
     // concurrent actions lets the scheduler overlap the basket build's
     // shuffle with the star join's parquet scan — sequentially, each
-    // job's IO phases leave most task slots idle. (Concurrent actions on
-    // one SparkSession are supported and the two builds touch different
-    // cache maps, so there is no shared mutable state between them.)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    // Settle BOTH jobs before surfacing any failure: throwing on the
-    // first Await while the second job still runs would hand the caller
-    // a session with a detached in-flight job (and swallow its error).
-    val settled = Seq(Future(usaGenreSales(s, dir).count()),
-        Future(basketPairs(s, dir).count()))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
-  }
+    // job's IO phases leave most task slots idle (measured round 6,
+    // PLANS.md: 0.71–0.74 s concurrent vs 1.27–1.33 s sequential).
+    ExtCaches.warmChains(
+      "usaGenreSales" -> (() => usaGenreSales(s, dir).count()),
+      "basketPairs" -> (() => basketPairs(s, dir).count()))
 
-  /** Release the per-session materialized relations (view aggregate,
-    * exploded basket pairs). Long-lived sessions running many
-    * scale-factor dirs call this between corpora; Verify/Bench sessions
-    * just exit. */
-  def clearCaches(s: SparkSession): Unit = {
-    viewCache.filterInPlace { case ((sess, _), df) =>
-      if (sess eq s) { df.unpersist(); false } else true }
-    basketPairsCache.filterInPlace { case ((sess, _), df) =>
-      if (sess eq s) { df.unpersist(); false } else true }
-  }
+  /** Release every shared relation and anchor, of every session, not only
+    * `s`'s — one call to [[ExtCaches.clearCaches]], which holds this
+    * workload's caches too. */
+  def clearCaches(s: SparkSession): Unit = ExtCaches.clearCaches()
 
   def s04_affinity_genre(s: SparkSession, dir: String): DataFrame =
     affinity(s, dir, "p_type")

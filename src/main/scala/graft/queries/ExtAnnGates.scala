@@ -217,30 +217,6 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
   val PqLloydRounds = 2
 
 
-  /** Session-keyed anchors for the trained index state the ANN/retrieval
-    * family shares (round-15 verdict #5 → round 16): x73/x74/x75/x76/
-    * x77/x84/x88 all train the SAME coarse quantizer (ScaledCells ×
-    * ScaledLloydRounds over the raw embeddings) and x74/x75/x76/x88 the
-    * SAME PQ codebooks — re-deriving them per gate run roughly doubled
-    * the family's largest bench lines (x88 re-trained what x76 had just
-    * trained). The ccLabelsCache discipline applied here: keyed by
-    * (session, dir), cleared by the ExtCaches hook so a cache epoch
-    * ends loudly (the underlying localCheckpoint blocks are released by
-    * the same clearCaches — see Similarity.cpTracked's hazard note).
-    * Training is deterministic exact-integer Lloyd over a value-equal
-    * corpus (the x84/x88 arms' semi-joined universe equals raw
-    * embeddings — their orphan guard asserts exactly that), so sharing
-    * changes cost, never results; every consumer's oracle is unchanged
-    * and stays hash-green. */
-  private[queries] val annCellStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private[queries] val annPqStateCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  ExtCaches.registerClearHook(() => {
-    annCellStatsCache.clear(); annPqStateCache.clear()
-  })
-
   /** The quantized (id, v) embedding scan the trained anchors derive
     * from — one spelling, so Spark's cache manager dedupes it against
     * every consumer's own identical scan. */
@@ -249,32 +225,37 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
       .select(col("vec_id").as("id"),
         Similarity.quantize(col("embedding")).as("v")))
 
+  /** The trained index state the ANN/retrieval family shares (round-15
+    * verdict #5 → round 16): x73/x74/x75/x76/x77/x84/x88 all train the
+    * SAME coarse quantizer (ScaledCells × ScaledLloydRounds over the raw
+    * embeddings) and x74/x75/x76/x88 the SAME PQ codebooks — re-deriving
+    * them per gate run roughly doubled the family's largest bench lines
+    * (x88 re-trained what x76 had just trained). Training is
+    * deterministic exact-integer Lloyd over a value-equal corpus (the
+    * x84/x88 arms' semi-joined universe equals raw embeddings — their
+    * orphan guard asserts exactly that), so sharing changes cost, never
+    * results; every consumer's oracle is unchanged and stays hash-green. */
   private[queries] def sharedCellStats(s: SparkSession, dir: String): DataFrame =
-    annCellStatsCache.getOrElseUpdate((s, dir),
+    ExtCaches.anchor("sharedCellStats", s, dir)(
       Similarity.trainedCellStats(quantizedEmbs(s, dir),
         ScaledCells, ScaledLloydRounds))
 
+  /** PQ codebooks + codes over the raw embeddings (see [[sharedCellStats]]). */
   private[queries] def sharedPqState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    annPqStateCache.getOrElseUpdate((s, dir),
+    ExtCaches.anchor("sharedPqState", s, dir)(
       Similarity.pqTrainEncode(quantizedEmbs(s, dir),
         PqM, PqCodes, PqLloydRounds, EmbeddingDims))
 
-  /** Session-keyed RESIDUAL PQ anchor for x77 (round 17): the residual
-    * codebooks + codes are deterministic given (raw embeddings,
-    * [[sharedCellStats]]) — the sharedPqState discipline applied to the
-    * by_residual form, whose joint-Lloyd chain was re-trained per
-    * invocation (the family's largest remaining warm line after the
-    * r16 anchors). Same cache-epoch contract as the anchors above;
-    * bit-identity pinned by ResidualPqAnchorSpec and the oracle. */
-  private[queries] val annResidualPqCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  ExtCaches.registerClearHook(() => annResidualPqCache.clear())
-
+  /** RESIDUAL PQ state for x77 (round 17): the residual codebooks + codes
+    * are deterministic given (raw embeddings, [[sharedCellStats]]) — the
+    * sharedPqState discipline applied to the by_residual form, whose
+    * joint-Lloyd chain was re-trained per invocation (the family's
+    * largest remaining warm line after the r16 anchors). Bit-identity
+    * pinned by ResidualPqAnchorSpec and the oracle. */
   private[queries] def sharedResidualPqState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    annResidualPqCache.getOrElseUpdate((s, dir),
+    ExtCaches.anchor("sharedResidualPqState", s, dir)(
       Similarity.residualPqState(Tables.embeddings(s, dir), "vec_id",
         "embedding", cells = ScaledCells,
         cellLloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
@@ -285,28 +266,16 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * are eager localCheckpoints; the PQ code table is forced here) so
     * the trained-arm family's timed lines run against built state —
     * the warmCcLabels precedent. */
-  def warmAnnShared(s: SparkSession, dir: String): Unit = {
-    // Concurrent independent chains (round 17, guide §2.6 — the
-    // Chinook.warmCaches precedent): each Lloyd/PQ chain is a string of
-    // tiny serial jobs that leaves most task slots idle, and the two
-    // chains below share no ordering constraint (the residual-PQ anchor
-    // consumes sharedCellStats, so it rides the first thread). The keyed
-    // caches are TrieMaps and distinct keys are touched per thread.
-    // Settle both before surfacing a failure (the warmCaches rationale).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val settled = Seq(
-      Future {
+  def warmAnnShared(s: SparkSession, dir: String): Unit =
+    // Two independent chains; the residual-PQ anchor consumes
+    // sharedCellStats, so it rides the first one.
+    ExtCaches.warmChains(
+      "sharedCellStats+sharedResidualPqState" -> { () =>
         sharedCellStats(s, dir)
         // round 17: x77's residual-PQ anchor joins the family-5 build line.
         sharedResidualPqState(s, dir)._1.count()
       },
-      Future(sharedPqState(s, dir)._1.count()))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
-  }
+      "sharedPqState" -> (() => sharedPqState(s, dir)._1.count()))
 
 
   /** Product-quantization ADC top-k (x74) — the third FAISS compression

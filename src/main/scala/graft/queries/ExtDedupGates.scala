@@ -41,20 +41,6 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
 
   // ---- x20: duplicate-cluster resolution over the x03 pair graph ---------
 
-  /** Component labels over the x03 MinHash-LSH pair graph, shared by x20
-    * (cluster summary) and x23 (survivor anti-join) — the fixpoint is
-    * EAGER and iterative (see Dedup.connectedComponents), so running it
-    * once per (session, dir) matters: a real pipeline computes components
-    * once and derives every downstream view from them. The labels sit on
-    * a lineage-truncated (localCheckpoint) final round, so holding the
-    * DataFrame is cheap; the keyed entry is dropped by
-    * ExtCaches.clearCaches via a registered hook, after which the
-    * checkpoint RDDs are reclaimed by the ContextCleaner. */
-  private[queries] val ccLabelsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  ExtCaches.registerClearHook(() => ccLabelsCache.clear())
-
-
   /** The x03 near-dup pair graph — THE one spelling of its tuning, shared
     * by both component forms: x20 and x20_star must stay oracle-equal
     * against the same dupClustersSql, so a parameter change must reach
@@ -65,8 +51,15 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
       .select(col("id_a"), col("id_b"))
 
 
+  /** Component labels over the x03 MinHash-LSH pair graph, shared by x20
+    * (cluster summary) and x23 (survivor anti-join) — the fixpoint is
+    * EAGER and iterative (see Dedup.connectedComponents), so running it
+    * once per epoch matters: a real pipeline computes components once and
+    * derives every downstream view from them. The labels sit on a
+    * lineage-truncated (localCheckpoint) final round, so holding the
+    * DataFrame is cheap. */
   private[queries] def minhashDupLabels(s: SparkSession, dir: String): DataFrame =
-    ccLabelsCache.getOrElseUpdate((s, dir),
+    ExtCaches.anchor("minhashDupLabels", s, dir)(
       Dedup.connectedComponents(minhashPairGraph(s, dir), "id_a", "id_b"))
 
 
@@ -81,16 +74,11 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
 
   /** Same labels as [[minhashDupLabels]] but computed by the O(log n)-round
     * large-star/small-star rewrite (Dedup.connectedComponentsStar) — the
-    * form that survives high-diameter pair graphs at extreme scale. Cached
+    * form that survives high-diameter pair graphs at extreme scale. Held
     * separately so x20 and x20_star each exercise their own algorithm
     * end-to-end; eager like the propagation form. */
-  private[queries] val starLabelsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  ExtCaches.registerClearHook(() => starLabelsCache.clear())
-
-
   private[queries] def minhashDupLabelsStar(s: SparkSession, dir: String): DataFrame =
-    starLabelsCache.getOrElseUpdate((s, dir),
+    ExtCaches.anchor("minhashDupLabelsStar", s, dir)(
       Dedup.connectedComponentsStar(minhashPairGraph(s, dir), "id_a", "id_b"))
 
 
@@ -201,7 +189,7 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
   /** The survivor policy production dedup actually ships: keep each
     * near-dup cluster's BEST-QUALITY member (x09 score, smallest-id
     * tiebreak), not x23's smallest-id canonical. Rides the SHARED x20
-    * component fixpoint (ccLabelsCache — one CC run serves x20/x23/x26
+    * component fixpoint (minhashDupLabels — one CC run serves x20/x23/x26
     * and this) plus the x09 scoring pass; the selection itself is the
     * q06 sort-free max_by idiom (see Dedup.clusterRepresentatives). */
   def x36_cluster_reps(s: SparkSession, dir: String): DataFrame =
@@ -252,7 +240,7 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
     * that size, n_docs they hold), plus the size-1 row for documents
     * outside the pair graph — together a partition of the corpus, so the
     * histogram doubles as a mass audit (Σ n_docs = |corpus|). Reuses the
-    * SHARED x20 component fixpoint (ccLabelsCache — the same labels
+    * SHARED x20 component fixpoint (minhashDupLabels — the same labels
     * x20/x23/x26/x36/x53 consume; bench family 4); the two aggregates
     * after it are |clusters|- then |distinct sizes|-row, and the
     * singleton row is a 1-row×1-row anchor join. Output bounded by

@@ -60,21 +60,16 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * wanting true semantic neighborhoods builds the graph with the
     * trained coarse quantizer instead (x89, recall 0.70-0.74 vs ~0.01)
     * and clusters ITS mutual edges. */
-  /** The banded mutual-kNN component labels, computed ONCE per
-    * (session, dir, corpus) and shared by x81 + x92 (raw corpus — the
-    * two gates consume the IDENTICAL graph → mutual-edge → star-CC
-    * chain and previously each re-ran it) and by x95 (planted corpus)
-    * — the ccLabelsCache discipline (x20's fixpoint serves five
-    * consumers) applied to the graph family's clustering layer.
-    * Cleared by the ExtCaches hook like every keyed label cache. */
-  private[queries] val mutualCcCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  ExtCaches.registerClearHook(() => mutualCcCache.clear())
-
+  /** The banded mutual-kNN component labels, computed ONCE per corpus
+    * and shared by x81 + x92 (raw corpus — the two gates consume the
+    * IDENTICAL graph → mutual-edge → star-CC chain and previously each
+    * re-ran it) and by x95 (planted corpus) — the minhashDupLabels
+    * discipline (x20's fixpoint serves five consumers) applied to the
+    * graph family's clustering layer. */
   private[queries] def bandedMutualCcLabels(s: SparkSession, dir: String,
                                             corpus: DataFrame,
                                             key: String): DataFrame =
-    mutualCcCache.getOrElseUpdate((s, dir, key), {
+    ExtCaches.anchor("bandedMutualCcLabels", s, (dir, key)) {
       val g = Similarity.knnGraph(corpus, "vec_id", "embedding",
           k = KnnGraphK, bands = SampledBands,
           bitsPerBand = SampledBandBits, dims = EmbeddingDims,
@@ -86,7 +81,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
         .select(col("nbr_id").as("id_a"), col("src_id").as("id_b"))
       val mutual = fwd.join(rev, Seq("id_a", "id_b"), "left_semi")
       Dedup.connectedComponentsStar(mutual, "id_a", "id_b")
-    })
+    }
 
   def x81_semantic_clusters(s: SparkSession, dir: String): DataFrame =
     Dedup.clusterSummary(
@@ -256,80 +251,61 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   }
 
 
-  /** Session-keyed trained-quantizer anchors for the graph family's two
-    * NON-raw corpora (round 16 — the [[ExtAnnGates]] sharedCellStats
-    * discipline extended sideways): x102/x103/x104 each train the SAME
-    * ScaledCells coarse quantizer over the twin-augmented corpus, and
-    * x97/x106 the same one over the planted corpus. Training is
-    * deterministic exact-integer Lloyd over a value-equal quantized
-    * relation (`quantize` commutes with the DoubleType widening
-    * twinEmbCorpus applies), so sharing changes cost, never results —
-    * every consumer's oracle stays hash-green. Cleared with the ANN
-    * anchors by the ExtCaches hook (same cache-epoch contract). */
-  // TrieMap (round 17): warmGraphShared overlaps the independent anchor
-  // builds from a small thread pool (§2.6 — each Lloyd chain is a string
-  // of tiny serial jobs that leave most task slots idle), so the keyed
-  // caches must be thread-safe. Distinct keys per builder ⇒ no duplicated
-  // training under the race getOrElseUpdate allows.
-  private[queries] val graphCellStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), DataFrame]
-  ExtCaches.registerClearHook(() => graphCellStatsCache.clear())
-
+  /** Trained-quantizer state for the graph family's two NON-raw corpora
+    * (round 16 — the [[ExtAnnGates]] sharedCellStats discipline extended
+    * sideways): x102/x103/x104 each train the SAME ScaledCells coarse
+    * quantizer over the twin-augmented corpus, and x97/x106 the same one
+    * over the planted corpus. Training is deterministic exact-integer
+    * Lloyd over a value-equal quantized relation (`quantize` commutes
+    * with the DoubleType widening twinEmbCorpus applies), so sharing
+    * changes cost, never results — every consumer's oracle stays
+    * hash-green. */
   private[queries] def twinCellStats(s: SparkSession, dir: String): DataFrame =
-    graphCellStatsCache.getOrElseUpdate((s, dir, "twin"), {
+    ExtCaches.anchor("twinCellStats", s, dir) {
       val (u, _) = twinEmbCorpus(s, dir)
       Similarity.trainedCellStats(
         ExtCaches.persistTracked(u.select(col("vec_id").as("id"),
           Similarity.quantize(col("embedding")).as("v"))),
         ScaledCells, ScaledLloydRounds)
-    })
+    }
 
   /** Twin-corpus PQ codebooks + codes (the sharedPqState discipline for
     * the twin universe): x98's IVF×PQ arm trains the same joint-Lloyd
     * chain over the same values — under its own orphan guard, which
     * asserts the docs∩embs universe IS the embedding corpus. */
-  private[queries] val twinPqStateCache =
-    scala.collection.concurrent.TrieMap
-      .empty[(SparkSession, String), (DataFrame, DataFrame, DataFrame)]
-  ExtCaches.registerClearHook(() => twinPqStateCache.clear())
-
   private[queries] def twinPqState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
-    twinPqStateCache.getOrElseUpdate((s, dir), {
+    ExtCaches.anchor("twinPqState", s, dir) {
       val (u, _) = twinEmbCorpus(s, dir)
       Similarity.pqTrainEncode(
         ExtCaches.persistTracked(u.select(col("vec_id").as("id"),
           Similarity.quantize(col("embedding")).as("v"))),
         PqM, PqCodes, PqLloydRounds, EmbeddingDims)
-    })
+    }
 
+  /** The planted-corpus twin of [[twinCellStats]]. */
   private[queries] def plantedCellStats(s: SparkSession, dir: String): DataFrame =
-    graphCellStatsCache.getOrElseUpdate((s, dir, "planted"), {
+    ExtCaches.anchor("plantedCellStats", s, dir) {
       val pe = graft.ext.Planted.vectors(
         Tables.embeddings(s, dir).select(col("vec_id")), "vec_id")
       Similarity.trainedCellStats(
         ExtCaches.persistTracked(pe.select(col("vec_id").as("id"),
           Similarity.quantize(col("embedding")).as("v"))),
         ScaledCells, ScaledLloydRounds)
-    })
+    }
 
-  /** Session-keyed RESIDUAL SUB-QUANTIZER anchor for x106 (round 17 —
-    * the r16 verdict's #3): under [[PlantedFenceCap]] every Lloyd cell
-    * overflows, so each invocation re-trained the level-1 sub-Lloyd
-    * chain over the big-cell residuals — the dominant remaining cost
-    * after the coarse anchor landed (7.4 s driver line). The state is
-    * deterministic given (planted corpus, coarse stats), so the
-    * [[Similarity.residualSubStats]] builder trains it once per epoch
-    * and [[Similarity.knnGraphIvfResidual]] consumes it bit-identically
-    * (CellFenceSpec's shared-vs-per-call pin now covers the sub state).
-    * Same cache-epoch contract as the coarse anchors above. */
-  private[queries] val plantedSubStatsCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Option[DataFrame]]
-  ExtCaches.registerClearHook(() => plantedSubStatsCache.clear())
-
+  /** RESIDUAL SUB-QUANTIZER state for x106 (round 17 — the r16 verdict's
+    * #3): under [[PlantedFenceCap]] every Lloyd cell overflows, so each
+    * invocation re-trained the level-1 sub-Lloyd chain over the big-cell
+    * residuals — the dominant remaining cost after the coarse anchor
+    * landed (7.4 s bench line). The state is deterministic given
+    * (planted corpus, coarse stats), so the
+    * [[Similarity.residualSubStats]] trainer runs once per epoch and
+    * [[Similarity.knnGraphIvfResidual]] consumes it bit-identically
+    * (CellFenceSpec's shared-vs-per-call pin covers the sub state). */
   private[queries] def plantedSubStats(s: SparkSession, dir: String)
       : Option[DataFrame] =
-    plantedSubStatsCache.getOrElseUpdate((s, dir), {
+    ExtCaches.anchor("plantedSubStats", s, dir) {
       Similarity.residualSubStats(
         graft.ext.Planted.vectors(
           Tables.embeddings(s, dir).select(col("vec_id")), "vec_id"),
@@ -337,37 +313,26 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
         lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
         maxCellSize = PlantedFenceCap, subCells = ResidualSubCells,
         cellStats = Some(plantedCellStats(s, dir)))
-    })
+    }
 
   /** Bench pre-warm for the graph family's shared anchors (the
     * warmAnnShared precedent): the Lloyd chains are eager
     * localCheckpoints, so invoking the two builders materializes both
     * trained states. */
-  def warmGraphShared(s: SparkSession, dir: String): Unit = {
-    // Concurrent independent chains (round 17, guide §2.6 — the
-    // warmAnnShared/warmCaches discipline): the twin-cell, planted and
-    // twin-PQ trainings are independent; x106's residual sub-quantizer
-    // anchor (round 17 — eager localCheckpoints, so invoking the builder
-    // materializes the trained state) consumes plantedCellStats and
-    // rides its thread. TrieMap caches, distinct keys per thread. The
-    // twin-corpus quantized scan is value-shared by threads 1 and 3 —
-    // a concurrent first fill may compute a partition twice (the
-    // persistEager race note), which costs one cheap projection pass
-    // and buys overlapping the three Lloyd chains' serial job strings.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val settled = Seq(
-      Future(twinCellStats(s, dir)),
-      Future {
+  def warmGraphShared(s: SparkSession, dir: String): Unit =
+    // Three independent trainings; x106's residual sub-quantizer consumes
+    // plantedCellStats and rides its chain. The twin-corpus quantized
+    // scan is value-shared by chains 1 and 3 — a concurrent first fill
+    // may compute a partition twice (the persistEager race note), which
+    // costs one cheap projection pass and buys overlapping the three
+    // Lloyd chains' serial job strings.
+    ExtCaches.warmChains(
+      "twinCellStats" -> (() => twinCellStats(s, dir)),
+      "plantedCellStats+plantedSubStats" -> { () =>
         plantedCellStats(s, dir)
         plantedSubStats(s, dir)
       },
-      Future(twinPqState(s, dir)._1.count()))
-      .map(f => scala.util.Try(Await.result(f, Duration.Inf)))
-    settled.collectFirst { case scala.util.Failure(e) => throw e }
-    ()
-  }
+      "twinPqState" -> (() => twinPqState(s, dir)._1.count()))
 
 
   /** Planted relevance of the IVF-probed graph (x102) — x89's builder
@@ -604,7 +569,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     // probes, the stored graph below) canonicalized differently per rep
     // and the CacheManager could never dedupe — each warm rep re-ran
     // the training AND the full base build it feeds.
-    val baseStats = graphCellStatsCache.getOrElseUpdate((s, dir, "x99base"),
+    val baseStats = ExtCaches.anchor("x99BaseCellStats", s, dir)(
       Similarity.trainedCellStats(
         ExtCaches.persistTracked(base.select(col("vec_id").as("id"),
           Similarity.quantize(col("embedding")).as("v"))),

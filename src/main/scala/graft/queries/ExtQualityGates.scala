@@ -193,7 +193,7 @@ private[queries] trait ExtQualityGates { this: ExtCore =>
     *      a groupBy on the digest plus a semi-join back, never a sort;
     *   4. near-dup dedup (x03→x20→x23): anti-join against the dropped
     *      side of the SHARED component-label fixpoint (one CC run serves
-    *      x20, x23 and x26 via ccLabelsCache);
+    *      x20, x23 and x26 via minhashDupLabels);
     *   5. the deliverable: per-language corpus report — doc counts and
     *      exact integer token/char totals (what a tokenizer-budget plan
     *      consumes), min/max quality as the gate audit.
@@ -240,7 +240,7 @@ private[queries] trait ExtQualityGates { this: ExtCore =>
     *      C4/Lee-et-al granularity between whole-doc exact and near-dup;
     *   5. near-dup anti-join against the dropped side of the SHARED
     *      component fixpoint (one CC run still serves x20/x23/x26/x53
-    *      and this query via ccLabelsCache);
+    *      and this query via minhashDupLabels);
     *   6. x53's leakage-safe split as the final stage: every near-dup
     *      family draws ONE split from its cluster label, so no family
     *      straddles train/val/test;

@@ -88,7 +88,7 @@ object PlanReport {
         |   1.28). The r5 driver executed minutes after the 86-query correctness
         |   sweep; a slowdown this uniform across UNCHANGED queries is machine
         |   contention, and the idle rerun bounds the code's actual cost.
-        |2. **Concurrent vs sequential warmCaches** (`graft.tools.DiagWarm`,
+        |2. **Concurrent vs sequential warmCaches** (PLANS.md round 6,
         |   12 timed builds, caches cleared between reps): concurrent settles at
         |   **0.71–0.74 s**, sequential at **1.27–1.33 s** — the concurrent
         |   build is ~1.8x FASTER on idle hardware (the two builds overlap scan

@@ -31,7 +31,6 @@ object R16Time {
       catch { case e: Throwable =>
         System.err.println(s"[r16] warm $name failed: ${e.getMessage}") }
     }
-    try graft.queries.Chinook.clearCaches(spark) catch { case _: Throwable => () }
     ExtCaches.clearCaches()
     val headline = graft.Bench.Headline
     if (args.exists(headline)) {

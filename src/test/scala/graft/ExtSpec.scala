@@ -1,7 +1,11 @@
 package graft
 
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import java.util.concurrent.atomic.{AtomicBoolean, AtomicInteger}
+
 import org.apache.spark.sql.functions._
-import graft.ext.{Dedup, Multimodal, Similarity, TextOps}
+import org.apache.spark.storage.StorageLevel
+import graft.ext.{Dedup, ExtCaches, Multimodal, Similarity, TextOps}
 
 /** Specs for the LLM-pipeline extension operators (SURVEY.md §7.6). */
 class TextOpsSpec extends SparkSpec {
@@ -3247,5 +3251,89 @@ class DsirBoundarySpec extends SparkSpec {
       }
       graft.ext.ExtCaches.clearCaches()
     }
+  }
+}
+
+/** The shared-state registry: an anchor builds once per cache epoch,
+  * even under concurrent first use; a failed build is not kept;
+  * ExtCaches.clearCaches releases every workload's shared relations;
+  * warmChains settles every chain and reports every failure. */
+class AnchorSpec extends SparkSpec {
+  import spark.implicits._
+
+  test("two threads released together on one anchor run its build once") {
+    val runs = new AtomicInteger
+    val go = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val calls = (1 to 2).map(_ => pool.submit(new Callable[Int] {
+        def call(): Int = {
+          go.await()
+          ExtCaches.anchor("spec.singleFlight", spark, "k") {
+            runs.incrementAndGet()
+            Thread.sleep(300) // hold the build open while the other caller arrives
+            42
+          }
+        }
+      }))
+      go.countDown()
+      assert(calls.map(_.get(60, TimeUnit.SECONDS)) == Seq(42, 42))
+      assert(runs.get == 1)
+    } finally {
+      pool.shutdown()
+      ExtCaches.clearCaches()
+    }
+  }
+
+  test("a build that throws reaches its caller and the next call builds again") {
+    val runs = new AtomicInteger
+    def use(): Int = ExtCaches.anchor("spec.retry", spark, "k") {
+      if (runs.incrementAndGet() == 1) throw new IllegalStateException("first build")
+      7
+    }
+    try {
+      assert(intercept[IllegalStateException](use()).getMessage == "first build")
+      assert(use() == 7 && use() == 7)
+      assert(runs.get == 2)
+    } finally ExtCaches.clearCaches()
+  }
+
+  test("ExtCaches.clearCaches alone releases Chinook's shared view relation") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_anchor").toString
+    def write(name: String, df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.parquet(s"$dir/$name.parquet")
+    write("nation", Seq((0L, graft.queries.Chinook.USA), (1L, "NATION_1"))
+      .toDF("n_nationkey", "n_name"))
+    write("customer", Seq((1L, 0L), (2L, 1L)).toDF("c_custkey", "c_nationkey"))
+    write("orders", Seq((10L, 1L), (11L, 2L)).toDF("o_orderkey", "o_custkey"))
+    write("part", Seq((5L, "ROCK"), (6L, "JAZZ")).toDF("p_partkey", "p_type"))
+    write("lineitem", Seq((10L, 5L, 100.0, 0.1), (10L, 6L, 50.0, 0.0),
+        (11L, 5L, 70.0, 0.0))
+      .toDF("l_orderkey", "l_partkey", "l_extendedprice", "l_discount"))
+    val view = graft.queries.Chinook.usaGenreSales(spark, dir)
+    assert(view.count() == 2)
+    assert(view.storageLevel != StorageLevel.NONE)
+    ExtCaches.clearCaches()
+    assert(ExtCaches.trackedCount == 0)
+    assert(view.storageLevel == StorageLevel.NONE)
+    val rebuilt = graft.queries.Chinook.usaGenreSales(spark, dir)
+    assert((rebuilt ne view) && rebuilt.storageLevel != StorageLevel.NONE)
+    ExtCaches.clearCaches()
+  }
+
+  test("warmChains settles every chain, then throws the first failure with the rest suppressed") {
+    val slowSettled = new AtomicBoolean(false)
+    val fast = new IllegalArgumentException("fast chain")
+    val slow = new IllegalStateException("slow chain")
+    val e = intercept[IllegalArgumentException](ExtCaches.warmChains(
+      "fast" -> (() => throw fast),
+      "slow" -> { () =>
+        Thread.sleep(500)
+        slowSettled.set(true)
+        throw slow
+      }))
+    assert(e eq fast)
+    assert(slowSettled.get, "returned before the slow chain settled")
+    assert(e.getSuppressed.toSeq == Seq(slow))
   }
 }

@@ -499,7 +499,7 @@ class PlanSpec extends SparkSpec {
         if (planLines <= maxPlanLines) Nil
         else Seq(s"$name: rendered plan is $planLines lines (> $maxPlanLines) " +
           "— an iterative construction is chaining lineage again; truncate " +
-          "per round (localCheckpoint, see Similarity.cpTracked)")
+          "per round (localCheckpoint, see ExtCaches.checkpointTracked)")
       sizeViolation ++ physicalTrees(plan).flatMap(_.collect {
         case c: CartesianProductExec =>
           Some(s"$name: CartesianProduct\n${c.simpleStringWithNodeId()}")
