@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
   /** The headline set: the reference workload's own 26 queries (the
     * surface BASELINE measures — SURVEY §2.12). The engine's extension
@@ -42,17 +44,26 @@ object Bench {
     spark.sparkContext.setLogLevel("ERROR")
     // Warm-up: initialize parquet reader, codegen compiler, shuffle system
     // once so the first timed query doesn't absorb one-time JVM setup.
-    // Running the HEADLINE family (plus the shared-cache consumers) against
-    // the TINY sf dir compiles and JIT-profiles the exact whole-stage-
-    // codegen classes the timed sf0.1 runs need — the generated source is
+    // Running the full registry (plus the shared-cache consumers) against
+    // the TINY sf dir compiles and JIT-profiles the whole-stage-codegen
+    // classes the timed sf0.1 runs need — the generated source is mostly
     // identical (literals and operators, not paths, appear in it), so the
-    // Janino cache hits and the same loaded classes run hot. Measured
-    // round 5: without this, whichever heavy star query ran FIRST absorbed
-    // the fleet's one-time JIT (q02 reps at sf0.1: 5.4 s, 3.0 s, 1.3 s —
-    // a median of 3.0 s for a query whose steady state is 1.3 s; round 3
-    // hid the same cost inside its then-34 s cache build). Only the tiny
-    // dir is touched — every data cache is dropped before timing starts,
-    // so this warms the JVM, never the measured data path.
+    // timed reps find those classes in Spark's generated-class cache.
+    // That holds only because GraftSession sizes the cache above what a
+    // whole run compiles: 2,227 compiles at sf0.1 (1,787 of them here)
+    // against CodegenCacheEntries = 4096; at Spark's default of 100
+    // entries the cache kept only the last ~100 classes and every timed
+    // rep recompiled. The `cg` column and `codegen_compiles` below show
+    // what the timed reps still compile: the five streaming lines (x12,
+    // x13, x55, x65, x82) compile their classes again on every rep (each
+    // stream runs in a cloned session whose tasks get a new class loader,
+    // and the cache key includes the loader), and a few lines compile 2 on
+    // one rep. Measured round 5: without this
+    // pre-warm, whichever heavy star query ran FIRST absorbed the fleet's
+    // one-time JIT (q02 reps at sf0.1: 5.4 s, 3.0 s, 1.3 s — a median of
+    // 3.0 s for a query whose steady state is 1.3 s). Only the tiny dir is
+    // touched — every data cache is dropped before timing starts, so this
+    // warms the JVM, never the measured data path.
     try SparkEntry.entry(spark).count() catch { case _: Throwable => () }
     val tiny = "/root/testdata/sf0.001"
     if (new java.io.File(tiny).isDirectory) {
@@ -80,11 +91,6 @@ object Bench {
       s"[bench] $tiny missing — codegen pre-warm skipped")
 
     val errors = scala.collection.mutable.ListBuffer.empty[String]
-    def time(body: => Unit): Double = {
-      val t0 = System.nanoTime()
-      body
-      (System.nanoTime() - t0) / 1e9
-    }
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
     // ---- self-attribution telemetry (round-8 verdict: the official
@@ -103,7 +109,11 @@ object Bench {
     //        query's reps (heap pressure shows up here, not in medians),
     //   cf — ExtCaches relations BUILT during the reps (cache-fill work
     //        the query paid), sm — block-manager storage KB after (KB, not
-    //        MB: sf0.001 smoke relations are sub-MB and would read 0).
+    //        MB: sf0.001 smoke relations are sub-MB and would read 0),
+    //   cg — generated classes COMPILED in each rep (one entry per `r`
+    //        entry; Spark's CodegenMetrics compile count). A warm rep
+    //        should read 0: a nonzero warm entry is a plan whose generated
+    //        source differs from the previous rep's.
     val detail = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val benchT0 = System.nanoTime()
     val startedMs = System.currentTimeMillis()
@@ -115,6 +125,13 @@ object Bench {
     def heapMb: Long = {
       val rt = Runtime.getRuntime
       (rt.totalMemory - rt.freeMemory) >> 20
+    }
+    // Metaspace in use: the generated classes the codegen cache holds.
+    def metaspaceMb: Long = {
+      import scala.jdk.CollectionConverters._
+      java.lang.management.ManagementFactory.getMemoryPoolMXBeans.asScala
+        .find(_.getName == "Metaspace").map(_.getUsage.getUsed >> 20)
+        .getOrElse(-1L)
     }
     def loadAvg: Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean
@@ -174,17 +191,24 @@ object Bench {
     }
     def fmt3(v: Double): String =
       String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
-    def measured(name: String)(reps: => Seq[Double]): Seq[Double] = {
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    /** Runs `body` once: its seconds and the classes it compiled. */
+    def timedRep(body: => Unit): (Double, Long) = {
+      val (c0, t0) = (compiles, System.nanoTime())
+      body
+      ((System.nanoTime() - t0) / 1e9, compiles - c0)
+    }
+    def measured(name: String)(reps: => Seq[(Double, Long)]): Seq[Double] = {
       val (h0, gc0, la, cf0, st0) =
         (heapMb, gcMs, loadAvg, graft.ext.ExtCaches.fillCount, stealJiffies)
       val t = (System.nanoTime() - benchT0) / 1e9
-      val times = reps
+      val (times, cgs) = reps.unzip
       val stD = if (st0 < 0) -1L else stealJiffies - st0
       detail(name) =
         s"""{"r":[${times.map(fmt3).mkString(",")}],"t":${fmt3(t)},""" +
           s""""la":${fmt3(la)},"h0":$h0,"h1":$heapMb,"gc":${gcMs - gc0},""" +
           s""""cf":${graft.ext.ExtCaches.fillCount - cf0},"sm":$storageKb,""" +
-          s""""st":$stD}"""
+          s""""cg":[${cgs.mkString(",")}],"st":$stD}"""
       times
     }
 
@@ -193,7 +217,7 @@ object Bench {
         val times = measured(name) {
           (1 to reps).flatMap { rep =>
             if (coldCaches && rep == 1) graft.ext.ExtCaches.clearCaches()
-            try Some(time(SparkEntry.queries(name)(spark, sfDir).count()))
+            try Some(timedRep(SparkEntry.queries(name)(spark, sfDir).count()))
             catch {
               case e: Throwable =>
                 errors += name
@@ -212,7 +236,7 @@ object Bench {
     // cost, which the per-query medians absorb).
     def timedBuild(name: String)(body: => Unit): (String, Double) =
       name -> measured(name) {
-        Seq(time(try body catch {
+        Seq(timedRep(try body catch {
           case e: Throwable =>
             errors += name
             System.err.println(s"[bench] $name failed: ${e.getMessage}")
@@ -388,6 +412,7 @@ object Bench {
         s""""steal_end_jiffies":$stealEnd,""" +
         s""""probe_cpu_s":${fmt3(probeCpu)},"probe_mem_s":${fmt3(probeMem)},""" +
         s""""wall_s":${fmt3((System.nanoTime() - benchT0) / 1e9)},""" +
+        s""""codegen_compiles":$compiles,"metaspace_mb":$metaspaceMb,""" +
         s""""queries":${detail.map { case (k, v) => "\"" + k + "\":" + v }
           .mkString("{", ",", "}")}}"""
     val out = new java.io.PrintWriter("bench_detail.json")

@@ -1697,27 +1697,40 @@ object Similarity {
     * no vector ever shuffles. */
   /** The residual-PQ front end [[ivfPqResidualTopK]] and its external
     * anchor builder ([[residualPqState]]) share — one spelling of the
-    * quantized scan, probe relation and own-cell residual relation, so
-    * the persist-tracked copies canonicalize equal and the CacheManager
-    * dedupes them across the two callers. */
+    * quantized scan and probe relation, so the persist-tracked copies
+    * canonicalize equal and the CacheManager dedupes them across the two
+    * callers. */
   private def residualPqFrontEnd(corpus: DataFrame, idCol: String,
                                  vecCol: String, cells: Int,
                                  cellLloydRounds: Int, nprobe: Int,
                                  cellStats: Option[DataFrame])
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+      : (DataFrame, DataFrame, DataFrame) = {
     val q = ExtCaches.persistTracked(
       corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
     val stats = cellStats.getOrElse(trainedCellStats(q, cells, cellLloydRounds))
     val probes = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    val cent = roundedCentroids(stats)
-    // Corpus residuals relative to each row's OWN (rank-1) cell.
+    (q, stats, probes)
+  }
+
+  /** Each corpus row's OWN (rank-1) cell: its (id, cell). */
+  private def ownCell(probes: DataFrame): DataFrame =
+    probes.filter(col("probe_rank") === 1).select(col("id"), col("cell"))
+
+  /** The residual PQ chain trained and encoded over the corpus residuals
+    * relative to each row's own cell — the only reader of the residual
+    * relation, so it is built (and tracked) only when a chain is trained. */
+  private def residualPqTrain(q: DataFrame, stats: DataFrame,
+                              probes: DataFrame, m: Int, codes: Int,
+                              pqLloydRounds: Int, dims: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
     val resRel = ExtCaches.persistTracked(
-      probes.filter(col("probe_rank") === 1).select(col("id"), col("cell"))
+      ownCell(probes)
         .join(q, Seq("id"))
-        .join(broadcast(cent), Seq("cell"))
+        .join(broadcast(roundedCentroids(stats)), Seq("cell"))
         .select(col("id"), col("cell"),
           zip_with(col("v"), col("cbar"), (a, b) => a - b).as("v")))
-    (q, stats, probes, resRel)
+    pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
+      pqLloydRounds, dims)
   }
 
   /** Externally trained RESIDUAL PQ state for [[ivfPqResidualTopK]]
@@ -1731,10 +1744,9 @@ object Similarity {
                       m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
                       cellStats: Option[DataFrame] = None)
       : (DataFrame, DataFrame, DataFrame) = {
-    val (_, _, _, resRel) = residualPqFrontEnd(corpus, idCol, vecCol,
+    val (q, stats, probes) = residualPqFrontEnd(corpus, idCol, vecCol,
       cells, cellLloydRounds, nprobe, cellStats)
-    pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
-      pqLloydRounds, dims)
+    residualPqTrain(q, stats, probes, m, codes, pqLloydRounds, dims)
   }
 
   def ivfPqResidualTopK(corpus: DataFrame, queryIds: DataFrame,
@@ -1747,12 +1759,11 @@ object Similarity {
                           None): DataFrame = {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     val subW = dims / m
-    val (q, stats, probes, resRel) = residualPqFrontEnd(corpus, idCol,
+    val (q, stats, probes) = residualPqFrontEnd(corpus, idCol,
       vecCol, cells, cellLloydRounds, nprobe, cellStats)
     val cent = roundedCentroids(stats)
     val (coded, anchor, _) = pqState.getOrElse(
-      pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
-        pqLloydRounds, dims))
+      residualPqTrain(q, stats, probes, m, codes, pqLloydRounds, dims))
     // LUT from the FULL query subvectors vs the residual codebook —
     // cell-independent, so one table per query (the x74 shape).
     val qsv = q
@@ -1773,7 +1784,7 @@ object Similarity {
       .select(col("id").as("q_id"), col("cell"),
         dotQ(col("v"), col("cbar")).as("bias"))
       .join(lutRows, Seq("q_id"))
-    val members = resRel.select(col("id"), col("cell")).join(coded, Seq("id"))
+    val members = ownCell(probes).join(coded, Seq("id"))
     val scored = members.join(broadcast(qp), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("id").as("c_id"),

@@ -510,8 +510,12 @@ object Chinook {
       .join(Tables.orders(s, dir), col("l_orderkey") === col("o_orderkey"))
       .groupBy(col("o_custkey").as("ic_cust"))
       .agg(count(lit(1)).as("n_items"))
+    // Both sides are aggregates hash-partitioned on the customer key, so a
+    // merge join needs no further exchange. Unhinted, AQE turned it into a
+    // broadcast join whose build side was whichever aggregate finished
+    // first — a plan (and generated code) that changed from rep to rep.
     val base = custRecency(s, dir)
-      .join(itemsPerCust, col("o_custkey") === col("ic_cust"))
+      .join(itemsPerCust.hint("merge"), col("o_custkey") === col("ic_cust"))
       .withColumn("monetary", col("monetary_dec").cast(DoubleType))
       .withColumn("basket", ratio(col("n_items"), col("n_orders")))
     val avgs = base.agg(
