@@ -10,8 +10,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** The one registry of shared state the operators and queries build from
   * lineage and reuse until released (the Shark model: a cached relation
   * is built once, then read by every consumer until it is dropped):
-  *  - tracked persists ([[persistTracked]]) and checkpoint block sets
-  *    ([[checkpointTracked]]) — executor storage;
+  *  - tracked persists ([[persistTracked]]) and the BPE loop's
+  *    checkpoint block sets ([[checkpointTracked]]) — executor storage;
   *  - [[anchor]]s — session-keyed driver-side values built from those
   *    relations (trained quantizers, component labels, the reference
   *    workload's view aggregate), built once per cache epoch.
@@ -87,32 +87,30 @@ object ExtCaches {
   }
 
   /** Eager localCheckpoint with its blocks tracked for release at
-    * [[clearCaches]] — the lineage discipline of every iterative trainer
-    * (Lloyd rounds, PQ codebooks, BPE merges, component fixpoints). A
+    * [[clearCaches]] — the lineage discipline of an iterative loop whose
+    * per-round state is itself a relation. Its one user is the BPE merge
+    * loop in [[TextOps]]: each round's state is the distinct-word
+    * relation (word, freq, symbols), which grows with the vocabulary. A
     * persist() is NOT enough there: the persisted round's ANALYZED plan
-    * still contains the full previous-round tree, and because each round
-    * re-references the corpus and the previous round, the downstream
-    * plan is a DAG that Catalyst's visitors traverse as a TREE. Measured:
-    * x77 (cell training + residuals + PQ training + bias joins) reached
-    * 8,000+ InMemoryTableScan references / 166k rendered plan lines for
-    * its codes relation alone, ~3 s of driver-side plan work per action
-    * (x77 25.6 → 3.9 s cold, x76 5.2 → 2.5 s once checkpointed); the BPE
-    * merge loop's plan grew 2^k, 940 KB formatted at k = 6 (x110c,
-    * 11.8 s vs the 4-round char twin's 1.7 s). Rooting each round at a
-    * LogicalRDD keeps the plan O(1) per round. Counted in [[fillCount]]
-    * like every other tracked materialization.
+    * still contains the full previous-round tree, so the downstream plan
+    * is a DAG that Catalyst's visitors traverse as a TREE — its plan grew
+    * 2^k, 940 KB formatted at k = 6 (x110c, 11.8 s vs the 4-round char
+    * twin's 1.7 s). Rooting each round at a LogicalRDD keeps the plan
+    * O(1) per round. State that is |cells|-sized instead, like the
+    * Lloyd/PQ trainers', is held on the driver (Similarity.centroidFold),
+    * which keeps the plan flat with no storage at all. Counted in
+    * [[fillCount]] like every other tracked materialization.
     *
     * HOLD-ACROSS-clearCaches HAZARD (deliberate, and different from
-    * [[persistTracked]]): localCheckpoint TRUNCATES lineage, so once
-    * [[clearCaches]] releases the blocks, a still-held derivative CANNOT
-    * recompute — its next action fails with a missing-block error, where
-    * a released persist would silently (and expensively) recompute. That
-    * loud failure is the intended contract: every registry query
-    * constructs, runs, and dumps its result before any clearCaches, and
-    * a caller that stashes a derivative across a clearCaches has a
-    * stale-model bug this surfaces instead of masking. Consumers that
-    * outlive a cache epoch re-invoke the query function (retraining from
-    * source), not re-act on the held frame. */
+    * [[persistTracked]] and from driver-held anchors, which stay valid):
+    * localCheckpoint TRUNCATES lineage, so once [[clearCaches]] releases
+    * the blocks, a still-held BPE round or derivative CANNOT recompute —
+    * its next action fails with a missing-block error, where a released
+    * persist would silently (and expensively) recompute. Every registry
+    * query constructs, runs, and dumps its result before any
+    * clearCaches; a consumer that outlives a cache epoch re-invokes the
+    * query function (retraining from source), not re-acts on the held
+    * frame. */
   def checkpointTracked(df: DataFrame): DataFrame = {
     val cp = df.localCheckpoint(true)
     synchronized { fills += 1 }

@@ -1,9 +1,13 @@
 package graft.ext
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
+  StringType, StructField, StructType}
 
 /** Similarity search over embedding columns (SURVEY.md §7.6).
   *
@@ -521,7 +525,7 @@ object Similarity {
       * probe relation, whose cache this action fills a step early).
       * Deliberate driver-side action (round-13 advisor item): the
       * RESIDUAL fallbacks below must train a sub-quantizer EAGERLY
-      * (trainedCellStats localCheckpoints every Lloyd round), so on the
+      * (trainedCellStats runs one job per Lloyd round), so on the
       * gated no-overflow path — exactly the geometry x101's
       * assertUnderCap certifies — the un-short-circuited form paid
       * lloydRounds+1 Spark jobs (plus the oversized-member residual
@@ -611,8 +615,8 @@ object Similarity {
       val sub = subStats.getOrElse(trainedCellStats(rq, subCells, lloydRounds))
       // Both sub-cell assignment relations persist (round 17): they are
       // small (members: one row per oversized member; probers: subNprobe
-      // rows per (src, probed big cell)) and — with the sub state
-      // anchored at a stable LogicalRDD — their canonical plans are
+      // rows per (src, probed big cell)) and — with the sub state held
+      // on the driver as a LocalRelation — their canonical plans are
       // stable, so warm re-invocations hit the cache instead of
       // re-ranking every residual against the packed sub-centroids
       // (the dominant per-rep cost left after the anchor landed).
@@ -1188,23 +1192,19 @@ object Similarity {
     * bit-identical and the (t, label) argmin struct-min is deterministic.
     * The OUTPUT is all-integer; t never leaves the plan.
     *
-    * Scale shape: centroid build = one posexplode + one hash aggregate
-    * (integer sums, map-side combinable, shuffle-order-proof) reduced to
-    * |labels|·d cells, then ONE ungrouped collect_list packs all |labels|
-    * centroids into a single row. Broadcasting that 1-row anchor (the same
-    * bounded-by-construction shape as the q08/q12 scalar anchors) keeps
-    * the assignment a scan-speed per-row argmin over the corpus — no row
-    * amplification (the old |labels|× join fan-out is gone), no shuffle
-    * touches the vectors, and the matrix aggregate reduces to at most
-    * |labels|² rows. The only shuffles are |labels|-sized.
+    * Scale shape: centroid build = ONE job of per-partition integer sums
+    * merged on the driver ([[centroidFold]], order-proof) into |labels|·d
+    * cells, packed into ONE literal array column ([[packCents]]). That
+    * literal keeps the assignment a scan-speed per-row argmin over the
+    * corpus — no row amplification (the old |labels|× join fan-out is
+    * gone), no join and no shuffle touches the vectors, and the matrix
+    * aggregate reduces to at most |labels|² rows.
     *
-    * Ceiling: unlike a |labels|-row broadcast, the 1-row pack concentrates
-    * all |labels|·(d+3) int64 cells into a SINGLE row that must fit one
-    * UnsafeRow / broadcast record (and the per-row argmin re-walks it per
-    * vector). Fine for the benchmarked shapes (labels ≤ 64, d ≤ 512 ⇒
-    * ≲ 264 KB); if labels×d were ever user-parameterized past ~10⁶ cells,
-    * switch back to a |labels|-row broadcast join + groupBy-argmin, which
-    * trades a bounded fan-out for an unbounded row. */
+    * Ceiling: the literal concentrates all |labels|·(d+3) int64 cells into
+    * ONE value that every task deserializes (and the per-row argmin
+    * re-walks per vector) — see [[packCents]] for its size and the point
+    * past which it should become a broadcast variable or a |labels|-row
+    * broadcast join + groupBy-argmin. */
   def nearestCentroidPurity(df: DataFrame, idCol: String, labelCol: String,
                             vecCol: String): DataFrame =
     nearestCentroidAssign(df, idCol, labelCol, vecCol)
@@ -1224,11 +1224,9 @@ object Similarity {
     // Per-row argmin over the centroid array: array_min on (t, c_label)
     // structs is order-insensitive, so collect_list's nondeterministic
     // element order cannot change the result; ties break to min c_label.
-    q.join(broadcast(centroidAnchor(q)))
-      .withColumn("best", array_min(transform(col("cents"), e =>
-        struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))))
-      .select(col("id"), col("label"), col("v"),
-        col("best.c_label").as("assigned_label"))
+    q.select(col("id"), col("label"), col("v"),
+      nearestCell(centroidAnchor(q, "nearestCentroidAssign"))
+        .as("assigned_label"))
   }
 
   /** The (id, label, quantized v) scan shared by the centroid family —
@@ -1240,35 +1238,114 @@ object Similarity {
       df.select(col(idCol).as("id"), col(labelCol).cast(LongType).as("label"),
         quantize(col(vecCol)).as("v")))
 
-  /** Exact-integer centroid statistics of a (c_label, v) relation: one
-    * row per cell — (c_label, n members, ss = Σ s_d² in DECIMAL(38,0),
-    * s = the d-length per-dim integer sum vector). The reduce step both
-    * the seed build (c_label = the metadata label) and every Lloyd
-    * iteration (c_label = the previous round's assignment) share. */
-  private def centroidStats(rel: DataFrame): DataFrame = {
-    val dec = DecimalType(38, 0)
-    rel.select(col("c_label"), posexplode(col("v")).as(Seq("dim", "x")))
-      .groupBy(col("c_label"), col("dim"))
-      .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-      .groupBy(col("c_label"))
-      .agg(max(col("n")).as("n"),
-        sum(col("s").cast(dec) * col("s").cast(dec)).as("ss"),
-        transform(array_sort(collect_list(struct(col("dim"), col("s")))),
-          e => e("s")).as("s"))
+  /** Exact-integer centroid statistics of a (c_label, v) relation, held
+    * on the driver: one row per cell — (c_label, n members, ss = Σ s_d² in
+    * DECIMAL(38,0), s = the d-length per-dim integer sum vector), sorted by
+    * c_label, as a LocalRelation. The reduce step both the seed build
+    * (c_label = the metadata label or a hash split) and every Lloyd round
+    * (c_label = the previous round's assignment) share.
+    *
+    * ONE Spark job: each partition folds its rows into exact Long partial
+    * sums per cell and the driver merges them — Spark MLlib's k-means
+    * step, with integers instead of floats. Integer sums do not depend on
+    * order, so the state is bit-identical to the SQL reduce
+    * `posexplode(v) → GROUP BY (c_label, dim) → GROUP BY c_label` (n = the
+    * largest per-dim count, which for ragged vectors is the number of
+    * rows with at least one coordinate; a row with a null or empty `v`
+    * adds nothing, so a cell with no coordinates has no row). The partial
+    * state is |cells|·d longs per partition whatever the corpus size.
+    * Overflow fails loudly (`Math.addExact`, and the DECIMAL(38,0)
+    * conversion under ANSI mode) instead of wrapping. */
+  private[graft] def centroidFold(rel: DataFrame): DataFrame = {
+    val partials = rel
+      .select(col("c_label").cast(LongType), col("v").cast(ArrayType(LongType)))
+      .queryExecution.toRdd
+      .mapPartitions(rows => Iterator.single(foldCells(rows)))
+      .collect()
+    val cells = scala.collection.mutable.HashMap.empty[Long, CellSum]
+    for (part <- partials; (c, sum) <- part)
+      cells.get(c).fold(cells(c) = sum)(_.add(sum.n, sum.s.length, sum.s(_)))
+    val rows = cells.toSeq.sortBy(_._1).map { case (c, sum) =>
+      val ss = sum.s.foldLeft(java.math.BigInteger.ZERO) { (a, x) =>
+        val b = java.math.BigInteger.valueOf(x)
+        a.add(b.multiply(b))
+      }
+      Row(c, sum.n, new java.math.BigDecimal(ss), sum.s.toSeq)
+    }
+    rel.sparkSession.createDataFrame(rows.asJava, CentroidSchema)
   }
 
-  /** Pack a [[centroidStats]] relation into the 1-row broadcast anchor
-    * (cents = array of (c_label, n, ss, s[]) — |cells|·(d+3) cells,
-    * trivially broadcast-small; see [[nearestCentroidPurity]] for the
-    * exact-integer design and the single-row ceiling). */
-  private[graft] def packCents(stats: DataFrame): DataFrame =
-    stats.agg(
-      collect_list(struct(col("c_label"), col("n"), col("ss"), col("s")))
-        .as("cents"))
+  private val CentroidSchema = StructType(Seq(
+    StructField("c_label", LongType, nullable = false),
+    StructField("n", LongType, nullable = false),
+    StructField("ss", DecimalType(38, 0), nullable = false),
+    StructField("s", ArrayType(LongType, containsNull = false),
+      nullable = false)))
 
-  /** 1-row centroid anchor over a [[quantizedWithLabel]] relation. */
-  private def centroidAnchor(q: DataFrame): DataFrame =
-    packCents(centroidStats(q.select(col("label").as("c_label"), col("v"))))
+  /** One cell's exact partial sums: rows with a coordinate, per-dim Σx
+    * (grown to the longest vector seen). */
+  private final class CellSum(var n: Long, var s: Array[Long])
+      extends Serializable {
+    /** Adds `rows` rows whose per-dim sums are x(0), …, x(d − 1). */
+    def add(rows: Long, d: Int, x: Int => Long): Unit = {
+      if (d > s.length) s = java.util.Arrays.copyOf(s, d)
+      n += rows
+      var i = 0
+      while (i < d) { s(i) = Math.addExact(s(i), x(i)); i += 1 }
+    }
+  }
+
+  /** One partition's (c_label, v) rows folded into per-cell sums. */
+  private def foldCells(rows: Iterator[InternalRow]): Array[(Long, CellSum)] = {
+    val cells = scala.collection.mutable.HashMap.empty[Long, CellSum]
+    rows.foreach { r =>
+      val v = if (r.isNullAt(1)) null else r.getArray(1)
+      if (v != null && v.numElements() > 0) {
+        require(!r.isNullAt(0), "centroidFold: null c_label on a row with coordinates")
+        cells.getOrElseUpdate(r.getLong(0), new CellSum(0L, Array.emptyLongArray))
+          .add(1L, v.numElements(), { i =>
+            require(!v.isNullAt(i), "centroidFold: null vector element")
+            v.getLong(i)
+          })
+      }
+    }
+    cells.toArray
+  }
+
+  /** The cents literal of a driver-held [[centroidFold]] relation:
+    * array<struct<c_label, n, ss, s[]>>, every cell of the state. Built
+    * from the relation's rows on the driver (no job) and shipped inside
+    * the serialized closure every task of a consuming stage deserializes:
+    * one UnsafeArrayData, 8 bytes per value plus ~64 bytes of row header,
+    * offsets and decimal slot per cell — 32 cells × (64 + 3) values =
+    * 18,960 bytes for the coarse quantizer, 512 cells × (8 + 3) values =
+    * 73,800 bytes for the PQ codebooks. Past about 10⁵ values (k·d ≈ 10⁵,
+    * ≈ 1 MB: Spark warns about task binaries over 1000 KiB, and every
+    * task of every consuming stage pays the deserialization) the state
+    * should travel as a broadcast variable read by a custom expression
+    * instead. Throws naming `caller` when `stats` is not driver-held. */
+  private[graft] def packCents(stats: DataFrame, caller: String): Column =
+    org.apache.spark.sql.graftfn.DriverLiteral.rowsArray(stats, caller)
+
+  /** Centroid literal over a [[quantizedWithLabel]] relation's labels. */
+  private def centroidAnchor(q: DataFrame, caller: String): Column =
+    packCents(centroidFold(q.select(col("label").as("c_label"), col("v"))),
+      caller)
+
+  /** The argmin cell of `v` over `cents` (same tScore, ties to the
+    * smaller c_label) — the one assignment spelling every Lloyd round,
+    * the purity matrix and the SemDeDup partition share. */
+  private def nearestCell(cents: Column): Column =
+    array_min(scoredCells(cents))("c_label")
+
+  /** Every cell of `cents` ranked for the row's `v` by (t, c_label) —
+    * element 1 is [[nearestCell]]; mirrors the oracle's
+    * `ORDER BY t, c_label`. */
+  private def rankedCells(cents: Column): Column = array_sort(scoredCells(cents))
+
+  private def scoredCells(cents: Column): Column =
+    transform(cents, e =>
+      struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))
 
   /** The deterministic centroid-distance score t = |s|²/n² − 2(v·s)/n for
     * one centroid entry `e` of the anchor — the expression BOTH engines
@@ -1289,9 +1366,8 @@ object Similarity {
   def nearestCentroidProbes(df: DataFrame, idCol: String, labelCol: String,
                             vecCol: String, nprobe: Int): DataFrame = {
     val q = quantizedWithLabel(df, idCol, labelCol, vecCol)
-    q.join(broadcast(centroidAnchor(q)))
-      .withColumn("scored", array_sort(transform(col("cents"), e =>
-        struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))))
+    q.withColumn("scored",
+        rankedCells(centroidAnchor(q, "nearestCentroidProbes")))
       .select(col("id"), col("label"), col("v"),
         posexplode(slice(col("scored"), 1, nprobe)).as(Seq("pi", "p")))
       .select(col("id"), col("label"), col("v"),
@@ -1316,25 +1392,20 @@ object Similarity {
     * Determinism: the assignment argmin compares bit-identical doubles
     * (see nearestCentroidPurity); centroid recomputation is pure integer
     * arithmetic; the digest renders int64 values identically in both
-    * engines. Scale shape per round: ONE broadcast of the |cells|·(d+3)
-    * anchor + one corpus scan for the assignment + one posexplode hash
-    * aggregate for the new sums — K scans total, map-side combinable,
-    * the vectors never shuffle (the same shape as Spark MLlib's k-means
-    * aggregateByKey step, with exact integers instead of floats). Each
-    * round's statistics persist (tracked) so round r+1's anchor does not
-    * re-run rounds 1..r. */
+    * engines. Scale shape per round: ONE Spark job — a corpus scan that
+    * assigns every vector against the |cells|·(d+3) cents literal and
+    * folds the new sums per partition, merged on the driver
+    * ([[centroidFold]]) — K scans total, the vectors never shuffle. Each
+    * round's statistics are a driver-held LocalRelation, so round r+1
+    * never re-runs rounds 1..r and the output plan stays flat. */
   def kmeansIterate(df: DataFrame, idCol: String, labelCol: String,
                     vecCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val q = quantizedWithLabel(df, idCol, labelCol, vecCol)
-    // checkpointTracked (see its Scaladoc): chained per-round persists
-    // leave a plan DAG that re-plans exponentially at every downstream
-    // action.
-    var stats = ExtCaches.checkpointTracked(
-      centroidStats(q.select(col("label").as("c_label"), col("v"))))
+    var stats = centroidFold(q.select(col("label").as("c_label"), col("v")))
     val perRound = Seq.newBuilder[DataFrame]
     for (r <- 1 to rounds) {
-      stats = ExtCaches.checkpointTracked(centroidStats(lloydAssign(q, stats)))
+      stats = centroidFold(lloydAssign(q, stats))
       perRound += stats.select(
         lit(r.toLong).as("round"), col("c_label"),
         col("n").as("n_vecs"),
@@ -1344,16 +1415,13 @@ object Similarity {
     perRound.result().reduce(_ unionByName _)
   }
 
-  /** One Lloyd assignment against a [[centroidStats]] relation: every
-    * row of `q` ((…, v)) re-labeled with its argmin cell — (c_label, v).
-    * The same broadcast-anchor argmin / tScore / (t, c_label) tie-break
-    * as [[nearestCentroidAssign]], factored so the per-label seed loop
-    * (x72) and the hash-seeded arbitrary-k loop (x73) cannot drift. */
+  /** One Lloyd assignment against a [[centroidFold]] state: every row of
+    * `q` ((…, v)) re-labeled with its argmin cell — (c_label, v). The
+    * [[nearestCell]] spelling, so the per-label seed loop (x72) and the
+    * hash-seeded arbitrary-k loop (x73) cannot drift. */
   private def lloydAssign(q: DataFrame, stats: DataFrame): DataFrame =
-    q.join(broadcast(packCents(stats)))
-      .withColumn("best", array_min(transform(col("cents"), e =>
-        struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))))
-      .select(col("best.c_label").as("c_label"), col("v"))
+    q.select(nearestCell(packCents(stats, "lloydAssign")).as("c_label"),
+      col("v"))
 
   /** The SQ8 search tail shared by every cell-structured ANN variant:
     * `probes` = (id, probe_rank, cell) — probe_rank 1 is the corpus
@@ -1427,19 +1495,16 @@ object Similarity {
     * [[roundedCentroids]] subtraction. */
   private[graft] def trainedCellStats(q: DataFrame, cells: Int,
                                lloydRounds: Int): DataFrame = {
-    var stats = ExtCaches.checkpointTracked(centroidStats(
-      q.select(pmod(col("id"), lit(cells.toLong)).as("c_label"), col("v"))))
-    for (_ <- 1 to lloydRounds)
-      stats = ExtCaches.checkpointTracked(centroidStats(lloydAssign(q, stats)))
+    var stats = centroidFold(
+      q.select(pmod(col("id"), lit(cells.toLong)).as("c_label"), col("v")))
+    for (_ <- 1 to lloydRounds) stats = centroidFold(lloydAssign(q, stats))
     stats
   }
 
   /** Probe projection of [[trainedCellStats]]: (id, probe_rank, cell). */
   private[graft] def probesFromStats(q: DataFrame, stats: DataFrame,
                               nprobe: Int): DataFrame = {
-    q.join(broadcast(packCents(stats)))
-      .withColumn("scored", array_sort(transform(col("cents"), e =>
-        struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))))
+    q.withColumn("scored", rankedCells(packCents(stats, "probesFromStats")))
       .select(col("id"), posexplode(slice(col("scored"), 1, nprobe))
         .as(Seq("pi", "p")))
       .select(col("id"), (col("pi") + 1).cast(LongType).as("probe_rank"),
@@ -1530,8 +1595,8 @@ object Similarity {
     // tables sorted by subspace.
     val lutRows = svRel
       .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
-      .join(broadcast(anchor))
-      .select(col("id").as("q_id"), col("sub"), pqTerms(codes).as("terms"))
+      .select(col("id").as("q_id"), col("sub"),
+        pqTerms(codes, packCents(anchor, "pqCodesAndLut")).as("terms"))
       .groupBy(col("q_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
         e => e("terms")).as("lut"))
@@ -1549,14 +1614,15 @@ object Similarity {
   private def pqArgmin(codes: Int)(cents: Column): Column =
     array_min(transform(pqSubCells(codes)(cents), e =>
       struct(tScore(e, col("sv")).as("t"), e("c_label").as("c_label"))))
+      .getField("c_label")
 
   /** One subspace's ADC term table for the enclosing row's subvector:
     * (code, term = dot(sv, centroid sum)/n — one bigint→double cast and
     * ONE IEEE divide) sorted by code. The SINGLE spelling shared by the
     * raw-vector LUT (x74/x75/x76) and the per-(query, cell) residual
     * LUT (x77) so the double arithmetic cannot drift between them. */
-  private[graft] def pqTerms(codes: Int): Column =
-    array_sort(transform(pqSubCells(codes)(col("cents")), e =>
+  private[graft] def pqTerms(codes: Int, cents: Column): Column =
+    array_sort(transform(pqSubCells(codes)(cents), e =>
       struct(pmod(e("c_label"), lit(codes.toLong)).as("code"),
         (dotQ(col("sv"), e("s")).cast(DoubleType) /
           e("n").cast(DoubleType)).as("term"))))
@@ -1564,42 +1630,48 @@ object Similarity {
   /** PQ training + corpus encoding over an (id, v) relation: the joint
     * Lloyd chain (subspace id rides inside the cell key; seeds = id mod
     * codes per subspace) and the stored per-row code arrays. Returns
-    * (coded = (id, code[m]), anchor = packed codebook centroids,
-    * svRel = the persisted (id, sub, sv) subvector relation). Factored
-    * from [[pqCodesAndLut]] so the residual form (x77) trains on cell
-    * residuals with the IDENTICAL spelling. */
+    * (coded = (id, code[m]), anchor = the driver-held codebook
+    * [[centroidFold]] state, svRel = the persisted (id, sub, sv)
+    * subvector relation). Factored from [[pqCodesAndLut]] so the residual
+    * form (x77) trains on cell residuals with the IDENTICAL spelling. */
   private[graft] def pqTrainEncode(q: DataFrame, m: Int, codes: Int,
                             lloydRounds: Int, dims: Int)
       : (DataFrame, DataFrame, DataFrame) = {
-    require(dims % m == 0, s"dims $dims not divisible by m $m")
-    val sub = dims / m
-    // (id, sub, sv): the m subvectors of every row.
-    val svRel = ExtCaches.persistTracked(q.select(col("id"),
-      posexplode(array((0 until m).map(s =>
-        slice(col("v"), s * sub + 1, sub)): _*)).as(Seq("sub", "sv"))))
-    // checkpointTracked, not persistTracked: see its Scaladoc — the PQ
-    // chain is one of the two Lloyd loops whose chained plans made every
-    // downstream action re-traverse the full training DAG.
-    var stats = ExtCaches.checkpointTracked(centroidStats(svRel.select(
-      (col("sub").cast(LongType) * codes +
-        pmod(col("id"), lit(codes.toLong))).as("c_label"),
-      col("sv").as("v"))))
-    for (_ <- 1 to lloydRounds)
-      stats = ExtCaches.checkpointTracked(centroidStats(
-        svRel.join(broadcast(packCents(stats)))
-          .select(pqArgmin(codes)(col("cents")).getField("c_label")
-            .as("c_label"), col("sv").as("v"))))
-    val anchor = packCents(stats)
+    val svRel = pqSubvectors(q, m, dims)
+    val anchor = pqCodebooks(svRel, codes, lloydRounds)
     // Stored PQ codes: per row, the m code ids ordered by subspace.
     val coded = ExtCaches.persistTracked(
-      svRel.join(broadcast(anchor))
-        .select(col("id"), col("sub"),
-          pmod(pqArgmin(codes)(col("cents")).getField("c_label"),
+      svRel.select(col("id"), col("sub"),
+          pmod(pqArgmin(codes)(packCents(anchor, "pqTrainEncode")),
             lit(codes.toLong)).as("code"))
         .groupBy(col("id"))
         .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
           e => e("code")).as("code")))
     (coded, anchor, svRel)
+  }
+
+  /** (id, sub, sv): the m subvectors of every row, persisted. */
+  private[graft] def pqSubvectors(q: DataFrame, m: Int, dims: Int): DataFrame = {
+    require(dims % m == 0, s"dims $dims not divisible by m $m")
+    val sub = dims / m
+    ExtCaches.persistTracked(q.select(col("id"),
+      posexplode(array((0 until m).map(s =>
+        slice(col("v"), s * sub + 1, sub)): _*)).as(Seq("sub", "sv"))))
+  }
+
+  /** The joint PQ Lloyd chain over [[pqSubvectors]] rows: one
+    * [[centroidFold]] job per round (seed + `lloydRounds`). */
+  private[graft] def pqCodebooks(svRel: DataFrame, codes: Int,
+                                 lloydRounds: Int): DataFrame = {
+    var stats = centroidFold(svRel.select(
+      (col("sub").cast(LongType) * codes +
+        pmod(col("id"), lit(codes.toLong))).as("c_label"),
+      col("sv").as("v")))
+    for (_ <- 1 to lloydRounds)
+      stats = centroidFold(svRel.select(
+        pqArgmin(codes)(packCents(stats, "pqCodebooks")).as("c_label"),
+        col("sv").as("v")))
+    stats
   }
 
   /** Explicit left-assoc m-term ADC score: term s = the query's sub-s
@@ -1771,8 +1843,9 @@ object Similarity {
       .select(col("id"),
         posexplode(array((0 until m).map(s =>
           slice(col("v"), s * subW + 1, subW)): _*)).as(Seq("sub", "sv")))
-    val lutRows = qsv.join(broadcast(anchor))
-      .select(col("id").as("q_id"), col("sub"), pqTerms(codes).as("terms"))
+    val lutRows = qsv
+      .select(col("id").as("q_id"), col("sub"),
+        pqTerms(codes, packCents(anchor, "ivfPqResidualTopK")).as("terms"))
       .groupBy(col("q_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
         e => e("terms")).as("lut"))
@@ -2050,9 +2123,9 @@ object Similarity {
     * structure whose recall at fixed probe cost beats the sign bucket's
     * (x71 measures the comparison at ~equal probed corpus fraction).
     *
-    * Scale shape: centroid build = one posexplode aggregate → 1-row
-    * anchor broadcast; assignment and probe ranking are per-row argmin/
-    * top-nprobe over that anchor (scan-speed, no shuffle of vectors);
+    * Scale shape: centroid build = one driver-merged fold → cents
+    * literal; assignment and probe ranking are per-row argmin/
+    * top-nprobe over that literal (scan-speed, no shuffle of vectors);
     * the search is a broadcast EQUI-join on the cell id. Probed cells
     * are distinct per query (ranked slice of a distinct label set), so
     * no candidate dedup is needed before the rank window. A production

@@ -234,8 +234,10 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * deterministic exact-integer Lloyd over a value-equal corpus (the
     * x84/x88 arms' semi-joined universe equals raw embeddings — their
     * orphan guard asserts exactly that), so sharing changes cost, never
-    * results; every consumer's oracle is unchanged and stays hash-green. */
-  private[queries] def sharedCellStats(s: SparkSession, dir: String): DataFrame =
+    * results; every consumer's oracle is unchanged and stays hash-green.
+    * The value is driver-held (a LocalRelation of the trained cells), so
+    * it holds no executor storage and stays usable after clearCaches. */
+  private[graft] def sharedCellStats(s: SparkSession, dir: String): DataFrame =
     ExtCaches.anchor("sharedCellStats", s, dir)(
       Similarity.trainedCellStats(quantizedEmbs(s, dir),
         ScaledCells, ScaledLloydRounds))
@@ -263,8 +265,8 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
         dims = EmbeddingDims, cellStats = Some(sharedCellStats(s, dir))))
 
   /** Bench pre-warm: materialize both shared anchors (the Lloyd chains
-    * are eager localCheckpoints; the PQ code table is forced here) so
-    * the trained-arm family's timed lines run against built state —
+    * train eagerly, one job per round; the PQ code table is forced here)
+    * so the trained-arm family's timed lines run against built state —
     * the warmCcLabels precedent. */
   def warmAnnShared(s: SparkSession, dir: String): Unit =
     // Two independent chains; the residual-PQ anchor consumes

@@ -316,9 +316,8 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     }
 
   /** Bench pre-warm for the graph family's shared anchors (the
-    * warmAnnShared precedent): the Lloyd chains are eager
-    * localCheckpoints, so invoking the two builders materializes both
-    * trained states. */
+    * warmAnnShared precedent): the Lloyd chains train eagerly on the
+    * driver, so invoking the builders materializes every trained state. */
   def warmGraphShared(s: SparkSession, dir: String): Unit =
     // Three independent trainings; x106's residual sub-quantizer consumes
     // plantedCellStats and rides its chain. The twin-corpus quantized
@@ -563,12 +562,10 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     // (round 16): the stored build and the fold-in each re-derived the
     // identical frozen quantizer — deterministic training means sharing
     // the stats changes cost, never results (the spec pins fold-in ≡
-    // fresh row for row either way). Session-keyed since round 17: the
-    // eager Lloyd chain roots at a FRESH LogicalRDD per invocation, so
-    // without the anchor every downstream persist (quantized base,
-    // probes, the stored graph below) canonicalized differently per rep
-    // and the CacheManager could never dedupe — each warm rep re-ran
-    // the training AND the full base build it feeds.
+    // fresh row for row either way). Session-keyed since round 17, so a
+    // warm rep does not re-run the training; the state is a driver-held
+    // LocalRelation, so the downstream persists (quantized base, probes,
+    // the stored graph below) canonicalize by value and dedupe.
     val baseStats = ExtCaches.anchor("x99BaseCellStats", s, dir)(
       Similarity.trainedCellStats(
         ExtCaches.persistTracked(base.select(col("vec_id").as("id"),

@@ -498,8 +498,9 @@ class PlanSpec extends SparkSpec {
       val sizeViolation =
         if (planLines <= maxPlanLines) Nil
         else Seq(s"$name: rendered plan is $planLines lines (> $maxPlanLines) " +
-          "— an iterative construction is chaining lineage again; truncate " +
-          "per round (localCheckpoint, see ExtCaches.checkpointTracked)")
+          "— an iterative construction is chaining lineage again; hold " +
+          "small per-round state on the driver (Similarity.centroidFold) " +
+          "or truncate a large one (ExtCaches.checkpointTracked)")
       sizeViolation ++ physicalTrees(plan).flatMap(_.collect {
         case c: CartesianProductExec =>
           Some(s"$name: CartesianProduct\n${c.simpleStringWithNodeId()}")
