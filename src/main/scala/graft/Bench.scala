@@ -72,11 +72,12 @@ object Bench {
       // would violate the measurement protocol above.
       try {
         graft.queries.Chinook.warmCaches(spark, tiny)
-        // The FULL registry, not just the headline family: round-8 DiagTail
-        // measured x51's fresh-JVM first run at 10.9 s vs a 2.0 s cold
-        // steady state — pure one-time JIT/codegen that otherwise lands in
-        // whichever extension rep runs it first. Tiny-dir cost for the
-        // extension family is seconds; every timed rep then runs hot.
+        // The FULL registry, not just the headline family: a round-8 A/B
+        // (SURVEY.md's r7 bench row) measured x51's fresh-JVM first run
+        // at 10.9 s vs a 2.0 s cold steady state — pure one-time
+        // JIT/codegen that otherwise lands in whichever extension rep
+        // runs it first. Tiny-dir cost for the extension family is
+        // seconds; every timed rep then runs hot.
         SparkEntry.queries.keys.toSeq.sorted.foreach { name =>
           try SparkEntry.queries(name)(spark, tiny).count()
           catch { case _: Throwable => () }

@@ -179,13 +179,13 @@ object Dedup {
                          w: Int = 3, threshold: Double = 0.5): DataFrame = {
     // Full sets persist once: they feed the df aggregate, the prefix
     // selection, and both sides of the verification join. LAZY on
-    // purpose — the round-7 eager sweep (tools/DiagX51, boiler b30)
-    // measured every persistEager variant of this operator at 69-138 s
-    // against 33-45 s fully lazy: the up-front fills serialize the
-    // operator's two big cache materializations ahead of the candidate
-    // join instead of overlapping them with it, and the self-join
-    // fill race that persistEager exists for is dwarfed here by the
-    // window+verify stages.
+    // purpose — the round-7 eager sweep (boiler b30; SCALING.md
+    // "Findings (round 7)") measured every persistEager variant of this
+    // operator at 69-138 s against 33-45 s fully lazy: the up-front
+    // fills serialize the operator's two big cache materializations
+    // ahead of the candidate join instead of overlapping them with it,
+    // and the self-join fill race that persistEager exists for is
+    // dwarfed here by the window+verify stages.
     val sets = ExtCaches.persistTracked(df.select(col(idCol).as("id"),
       TextOps.shingles(TextOps.tokens(col(textCol)), w).as("sh")))
     val idx = sets.select(col("id"), size(col("sh")).cast(LongType).as("n"),
@@ -312,9 +312,10 @@ object Dedup {
     // Lazy (not persistEager): x03's candidate join is tiny relative to
     // the signature build, and the round-7 sweeps measured the eager
     // variant consistently slightly slower (2.9 -> 3.7 s at x30) — the
-    // same serialize-the-fills effect DiagX51 isolated on x51, in
-    // miniature. The flat shingle/fingerprint indexes (x02/x52/x38),
-    // whose self-join dominates their runtime, are where eager wins.
+    // same serialize-the-fills effect the round-7 eager sweep isolated
+    // on x51 (SCALING.md "Findings (round 7)"), in miniature. The flat
+    // shingle/fingerprint indexes (x02/x52/x38), whose self-join
+    // dominates their runtime, are where eager wins.
     val withSh = ExtCaches.persistTracked(df.select(col(idCol).as("id"),
       TextOps.shingles(TextOps.tokens(col(textCol)), w).as("sh")))
     val sigs = withSh.withColumn("sig", minhashSignature(col("sh"), perms))
@@ -550,7 +551,7 @@ object Dedup {
       // next stage doesn't already do — dropping it removes one full
       // exchange+aggregate of the round's largest relation (|ls| ≤
       // |und| = 2|e| with or without it). Perf-neutral at the x30 soak
-      // (DiagCC: star CC ~1.9 s steady either way — per-round job
+      // (round-6 A/B: star CC ~1.9 s steady either way — per-round job
       // latency dominates at 150k docs), but at cluster scale an extra
       // all-to-all of 2|e| rows per round is the thing to not do.
       // ---- small-star: the ≤-neighborhood (plus u) hooks onto its min --
@@ -764,7 +765,8 @@ object Dedup {
     val rows = perms / bands
     // Lazy (not persistEager): the round-7 boiler soak measured the
     // eager variant at 9-13.5 s on b30 against 4 s lazy — the same
-    // serialize-the-fills effect DiagX51 isolated on x51.
+    // serialize-the-fills effect the round-7 eager sweep isolated on
+    // x51 (SCALING.md "Findings (round 7)").
     def prep(df: DataFrame): DataFrame = ExtCaches.persistTracked(
       df.select(col(idCol).as("id"),
         TextOps.shingles(TextOps.tokens(col(textCol)), w).as("sh")))
@@ -941,8 +943,9 @@ object Dedup {
     *    — fewer than α common grams). With α = |G| − k·q both prefixes
     *    are (k·q+1)-prefixes, so the candidate join is PREFIX × PREFIX —
     *    Σ_g df_pref(g)² instead of the asymmetric Σ_g df_pref(g)·
-    *    df_full(g) the round-8 form paid. Measured (tools/DiagX62,
-    *    sf0.1): raw candidates 981k → 874k (−11%) — modest HERE because
+    *    df_full(g) the round-8 form paid. Measured once at sf0.1 when
+    *    this form landed (this note is the record): raw candidates
+    *    981k → 874k (−11%) — modest HERE because
     *    this corpus's rare grams have near-unit posting lists, so
     *    df_full ≈ df_pref; the df_pref² bound is what survives a
     *    boilerplate-heavy corpus, where template grams blow up df_full

@@ -62,7 +62,8 @@ object ExtCaches {
     * the join (x51's rarity window + verify tail, x03/x55's signature
     * build), eager fills SERIALIZE the big materializations ahead of
     * the join instead of overlapping with it and measured 2-4x SLOWER
-    * at the largest soak scale (tools/DiagX51) — those operators keep
+    * at the largest soak scale (SCALING.md "Findings (round 7)") —
+    * those operators keep
     * lazy persists, with the measurements at each call site. The
     * count() is outside the `synchronized` — it runs a Spark job and
     * must not hold the registry lock. */

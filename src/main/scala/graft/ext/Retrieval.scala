@@ -183,7 +183,8 @@ object Retrieval {
     * tokens, each repeated [[StuffReps]] times, appended to
     * 1-in-[[StuffModulo]] docs by portable hash — repeated tokens AND
     * ~4× length variance, the corpus class where BM25's tf-saturation
-    * and length-norm terms stop being moot (DiagBm25 / Bm25KnobSpec). */
+    * and length-norm terms stop being moot (Bm25KnobSpec; PLANS.md
+    * "BM25 knobs on a non-degenerate corpus"). */
   val StuffTopK = 20
   val StuffReps = 8
   val StuffModulo = 4L
@@ -194,8 +195,8 @@ object Retrieval {
   /** Deterministic token-stuffed corpus: (idCol, textCol) with
     * 1/StuffModulo of docs carrying the global top-StuffTopK tokens
     * appended StuffReps times each, in (count DESC, token) order.
-    * Unlike the diagnostic original (DiagBm25.stuffedDocs), the
-    * stuffing STRING is order-deterministic — collect_list order is not
+    * Bm25KnobSpec prices the knobs on this same corpus. The stuffing
+    * STRING is order-deterministic — collect_list order is not
     * guaranteed, so the (negated-count, token) structs are array_sorted
     * before the repeat/flatten — because the gated scoring runs at
     * SHINGLE granularity, where the stuffing's token order changes the

@@ -184,8 +184,9 @@ object Similarity {
     * expression and the oracle SQL sample identical coordinates by
     * construction, not by parallel reimplementation. */
   /** The driver-side deterministic mixer every seed-derived choice in the
-    * family flows through (band coordinate sampling here, the OPQ
-    * permutation diagnostic in [[graft.tools.DiagOpq]]): splitmix64's
+    * family flows through (band coordinate sampling here, and the OPQ
+    * permutation cell recorded in PLANS.md "OPQ correlated cell"):
+    * splitmix64's
     * finalizer (Steele/Lea/Flood, OOPSLA'13 — public domain reference
     * constants). ONE spelling so a future change cannot silently
     * diverge the consumers' draws. */
@@ -478,7 +479,8 @@ object Similarity {
     * (the probe relation is the same shape).
     *
     * MEASURED on the corpus class that triggers the fence
-    * (DiagPlantedFence + PlantedFenceSpec, planted integer clusters
+    * (PLANS.md "DiagPlantedFence — the fence's fallback measured ON its
+    * trigger class" + PlantedFenceSpec, planted integer clusters
     * where jitter never flips a sign): (1) the fallback's candidate set
     * is EXACTLY Σ over (cell, cluster) cohorts g·(g−1) — every cohort
     * shares one 64-bit signature, so band buckets cannot subdivide it
@@ -563,12 +565,13 @@ object Similarity {
 
     /** Residual sub-quantizer fallback — the BOUNDED alternative to
       * [[bandedScored]] for the corpus class where banding collapses
-      * (DiagPlantedFence: on planted integer clusters the banded
-      * fallback is exactly cohort-quadratic, because a cohort shares
-      * one sign signature, and retraining the COARSE quantizer finer is
-      * inert — extra hash-split seeds converge to equal quantized
-      * centroids and die). The way out is the x77 residual trick turned
-      * from a compression device into a candidate generator: residuals
+      * (PLANS.md "DiagPlantedFence" section: on planted integer
+      * clusters the banded fallback is exactly cohort-quadratic,
+      * because a cohort shares one sign signature, and retraining the
+      * COARSE quantizer finer is inert — extra hash-split seeds
+      * converge to equal quantized centroids and die). The way out is
+      * the x77 residual trick turned from a compression device into a
+      * candidate generator: residuals
       * (v − cbar(cell), exact integers on the quantized grid) inside a
       * collapsed cell are the WITHIN-cluster variance — i.i.d.-like
       * again, exactly the regime Lloyd granularity DOES split — so one
@@ -672,7 +675,8 @@ object Similarity {
       }
 
     /** Recursive form of [[residualScored]] — closes the one gap the
-      * single-level measurement left (DiagPlantedFence coarse=10 vs 32):
+      * single-level measurement left (coarse=10 vs 32, PLANS.md
+      * "Post-close addendum: pure-cell pricing"):
       * when the coarse quantizer MERGED clusters into one cell, level-1
       * residuals are bimodal (mode offset ≫ jitter) and each mode stays
       * glued in one sub-cell — the raw-space problem recursing. Here a
@@ -838,7 +842,8 @@ object Similarity {
     * oversized cells ([[CellFence.residualScored]]) instead of the
     * banded one — the bounded form for corpora whose natural cluster
     * size exceeds `maxCellSize` (tightly clustered corpora are exactly
-    * where a coarse cell collapses, and DiagPlantedFence measured both
+    * where a coarse cell collapses, and PLANS.md's "DiagPlantedFence"
+    * section measured both
     * standard remedies failing there: the banded fallback is cohort-
     * quadratic and finer coarse training is inert). Under-cap cells run
     * the identical exact path, so on a corpus where no cell overflows
@@ -1058,7 +1063,7 @@ object Similarity {
     * ~zero at this depth, exactly what the frozen-candidate x64 audit
     * predicted).
     *
-    * CAVEAT, measured round 12 (DiagOpq planted cells): x94's
+    * CAVEAT, measured round 12 (PLANS.md "OPQ planted cell"): x94's
     * fidelity ≈ 1 is an I.I.D.-corpus fact. On tightly clustered
     * corpora a compression-ranked shortlist loses fidelity in
     * proportion to the near-tie cohort it must order — on the planted
@@ -2024,8 +2029,10 @@ object Similarity {
     * SQuantizer8 shape (Johnson/Douze/Jégou, IEEE TBD'19): a
     * data-dependent per-dimension affine map to int8 RANGE. The
     * compression is an AT-REST property (the stored/shipped index):
-    * parquet bit-packing realizes it — MEASURED by tools/DiagSq8 at
-    * sf0.1 as 2.83× under the raw float column and 3.41× under the
+    * parquet bit-packing realizes it — MEASURED round 8 by writing the
+    * sf0.1 embeddings to parquet three ways (raw floats, fixed-point
+    * longs, SQ8 codes; SURVEY.md's x63 row) as 2.83× under the raw
+    * float column and 3.41× under the
     * exact kernel's fixed-point longs (parquet already encodes both,
     * so the naive 4×/8× width ratios overstate it). In-flight Spark
     * arrays stay widened longs — the integer-dot kernel's input type;

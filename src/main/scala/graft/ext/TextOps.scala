@@ -577,7 +577,8 @@ object TextOps {
     // Eager per-round localCheckpoint — same 2^k-plan-growth argument
     // as bpeMergeLoop (the fix was measured HERE first: x110c's 6-round
     // byte loop rendered a 940 KB plan and ran 11.8 s vs the 4-round
-    // char twin's 1.7 s before the swap). Round-17 profile (DiagX110):
+    // char twin's 1.7 s before the swap). Round-17 profile
+    // (OPTIMIZATION_r17.md "Measured and rejected"):
     // the vocab is ~31 rows, the seed shuffle is 0.55 s and each round
     // ~0.17 s of pure per-job overhead — no §2 partitioning lever
     // applies. A cadence-2 checkpoint (lazy persist on odd rounds) was

@@ -201,8 +201,9 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
   /** x74 PQ geometry: 8 subspaces × 8 dims, 64 codewords per subspace
     * (6-bit codes ⇒ 6 bytes stored per vector vs 256 for raw floats), 2
     * Lloyd training rounds. The codeword count is the fidelity knob and
-    * was CHOSEN BY MEASUREMENT at all three code rates (tools/DiagPq,
-    * PLANS.md): sf0.1 recall@3 / top-50 coverage run 3/30 & 16/30 at 16
+    * was CHOSEN BY MEASUREMENT at all three code rates (the figures
+    * here are the record; SURVEY.md's x74 row summarizes them): sf0.1
+    * recall@3 / top-50 coverage run 3/30 & 16/30 at 16
     * codewords, 9/30 & 22/30 at 64, and 8/30 & 25/30 at 256 (8-bit, the
     * production FAISS rate). 64 stays the shipped default ON this
     * table: at the gated corpus size 256 cells/subspace is data-starved

@@ -446,7 +446,7 @@ private[queries] trait ExtDedupGates { this: ExtCore =>
       val inBase = Sampling.hashThresholdPredicate(col("doc_id"), BaseFrac)
       val base = Tables.documents(s, dir).filter(inBase)
       val incoming = s.readStream.schema(docsSchema)
-        .option("maxFilesPerTrigger", streamMaxFiles)
+        .option("maxFilesPerTrigger", StreamMaxFiles)
         .parquet(landing.toString)
         .filter(!inBase)
       // Multi-band dedup happens PER BATCH in the sink, not as a second

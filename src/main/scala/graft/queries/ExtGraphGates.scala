@@ -203,7 +203,8 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   /** Residual sub-quantizer arm of the x101 residual-fenced graph —
     * sub-cells ∝ the expected oversized-mode size / cap; the (16, 8)
     * point measured recall 0.94 of the full fallback on the planted
-    * twin (PLANS.md round-12 DiagPlantedFence table). */
+    * twin (PLANS.md "knnGraphIvfResidual — the bounded fallback the
+    * fence measurement demanded", row (16, 8): 1412/1500 = 0.94). */
   val ResidualSubCells = 16
 
   val ResidualSubNprobe = 8

@@ -161,8 +161,9 @@ private[queries] trait ExtRetrievalGates { this: ExtCore =>
   /** Stuffed-corpus integer BM25 ladder (x105) — the round-12 verdict's
     * #5 resolved as a GATE, not a documented decision: the registry
     * corpus makes tf-saturation and length-norm moot (tf = 1, uniform
-    * lengths — x87 ships idf-only and documents the knobs), DiagBm25 /
-    * Bm25KnobSpec price them on the deterministic token-stuffed corpus,
+    * lengths — x87 ships idf-only and documents the knobs),
+    * Bm25KnobSpec prices them on the deterministic token-stuffed corpus
+    * (PLANS.md "BM25 knobs on a non-degenerate corpus"),
     * and this line makes the full three-arm ladder (count / idf /
     * saturated-BM25, all-integer scoring) an oracle-gated output on
     * that corpus under the planted twin ground truth. See

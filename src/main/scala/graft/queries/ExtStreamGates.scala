@@ -342,7 +342,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
           "at least the measured max (or shard the hot bucket) before " +
           "gating this corpus.")
       val incoming = s.readStream.schema(embSchema)
-        .option("maxFilesPerTrigger", streamMaxFiles)
+        .option("maxFilesPerTrigger", StreamMaxFiles)
         .parquet(landing.toString)
         .filter(!inBase)
       val q = graft.streaming.AnnStreams.knnIngestStream(
@@ -480,6 +480,17 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
   }
 
 
+  /** Micro-batch granularity of every streaming twin (x12, x13, x55,
+    * x65, x82): one file per trigger. It is load-bearing, not a speed
+    * setting: it puts a batch boundary between any two files, so keyed
+    * state must survive it (x12, x65's replayed copies land in
+    * different batches), and it keeps x13's punctuation sentinel in its
+    * own batch, so the watermark advances before it. A wider value
+    * would still match the oracle but would stop covering state across
+    * boundaries. */
+  private[queries] val StreamMaxFiles = 1
+
+
   /** Stage the events table into a fresh landing directory by symlink —
     * FileStreamSource ingests a DIRECTORY (its basePath is forced to the
     * source path, so a bare file errors), and the symlinks resolve to
@@ -487,19 +498,6 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     * anything written into the landing dir afterwards (the source
     * processes oldest-first). Single-file tables stage as one link; dir
     * tables link every contained parquet file. */
-  /** Micro-batch granularity for the streaming twins. Default 1 file per
-    * trigger — the strictest incremental-state exercise (state must
-    * survive a batch boundary between any two rows of different files).
-    * `SPARK_GRAFT_STREAM_MAX_FILES` widens it for the batch-size
-    * sensitivity measurement (PLANS.md): the OUTPUT is invariant to this
-    * knob by construction — state convergence cannot depend on batch
-    * slicing — so only wall time moves. */
-  private[graft] def streamMaxFiles: Int =
-    sys.props.get("graft.stream.maxFiles")
-      .orElse(sys.env.get("SPARK_GRAFT_STREAM_MAX_FILES"))
-      .map(_.toInt).getOrElse(1)
-
-
   private[queries] def stageEventsLanding(dir: String,
                                  landing: java.nio.file.Path,
                                  tag: String = "events"): Unit =
@@ -546,7 +544,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     val landing = tmp.resolve("landing")
     stageEventsLanding(dir, landing)
     val raw = s.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", streamMaxFiles)
+      .option("maxFilesPerTrigger", StreamMaxFiles)
       .parquet(landing.toString)
     val ev = Tables.surfaceEventTs(raw)
     val q = EventStreams.tumblingStats(ev, "1 hour")
@@ -637,7 +635,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     s.createDataFrame(java.util.List.of(sentinelRow), batchSchema)
       .coalesce(1).write.mode("append").parquet(landing.toString)
     val raw = s.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", streamMaxFiles)
+      .option("maxFilesPerTrigger", StreamMaxFiles)
       .parquet(landing.toString)
     val ev = Tables.surfaceEventTs(raw)
     val q = EventStreams.watermarkedUserSessions(ev, "30 minutes", ReplayLateness)
@@ -700,7 +698,7 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     stageEventsLanding(dir, landing)
     stageEventsLanding(dir, landing, tag = "events-redeliver")
     val raw = s.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", streamMaxFiles)
+      .option("maxFilesPerTrigger", StreamMaxFiles)
       .parquet(landing.toString)
     val ev = Tables.surfaceEventTs(raw)
     val q = EventStreams.dedupedEvents(ev, ReplayLateness)

@@ -2660,7 +2660,8 @@ class ResidualPqAnchorSpec extends SparkSpec {
 }
 
 /** The CellFence's banded fallback ON the corpus class that triggers it
-  * (DiagPlantedFence, round 12): planted structure is simultaneously the
+  * (round 12; PLANS.md "DiagPlantedFence — the fence's fallback
+  * measured ON its trigger class"): planted structure is simultaneously the
   * positive control and sign-LSH's adversarial case — jitter never flips
   * a sign, so an entire (cell, planted-label) cohort shares one 64-bit
   * signature. Three measured facts pinned here (numbers in PLANS.md):
@@ -3051,31 +3052,107 @@ class GraphFoldInSpec extends SparkSpec {
 
 /** The x87 knob experiment (round-12 stretch #8): tf-saturation and
   * length-normalization are moot on the registry corpus (tf = 1,
-  * uniform lengths) and MEASURABLE on the token-stuffed variant —
-  * DiagBm25 prices them; this spec pins the measured direction. */
+  * uniform lengths) and MEASURABLE on the token-stuffed variant
+  * ([[graft.ext.Retrieval.stuffedDocs]], x105's corpus). This spec
+  * prices three double-valued shingle arms on planted hit@k and pins
+  * the measured direction (PLANS.md "BM25 knobs on a non-degenerate
+  * corpus"; x105 is the integer, oracle-gated form of the same
+  * ladder). */
 class Bm25KnobSpec extends SparkSpec {
   private val dir = "/root/testdata/sf0.01"
   import graft.queries.Extensions.{HybridArmK, HybridTopK, RelevanceQueries}
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.types.{DoubleType, LongType}
+  import graft.ext.{Relevance, Retrieval}
 
-  private def hits(corpus: org.apache.spark.sql.DataFrame) =
-    graft.tools.DiagBm25.lexArmsHits(corpus, RelevanceQueries,
-      HybridArmK, HybridTopK)
+  private val K1 = 1.2
+  private val B = 0.75
+
+  /** Planted hit@k of the three lexical arms over a corpus, at SHINGLE
+    * granularity (token-level overlap does not discriminate documents
+    * on this small-vocabulary corpus; w=3 shingles do) but WITH
+    * multiplicity, so tf-saturation has something to saturate:
+    *
+    *   1_count : shared-shingle count — no defense against stuffing;
+    *   2_idf   : Σ idf over shared shingles (x87's damping);
+    *   3_bm25  : full Robertson/Spärck-Jones BM25 (k1 = 1.2, b = 0.75).
+    *
+    * Returns (arm, n_queries, hits_at_1, hits_at_k) rows. */
+  private def lexArmsHits(corpus: DataFrame, nQueries: Int, armK: Int,
+                          k: Int): DataFrame = {
+    val udocs = corpus.unionByName(
+      Relevance.twinDocs(corpus, "doc_id", "text", nQueries))
+    // shingle-occurrence tf index: (id, shingle, tf) + per-doc length
+    val occ = udocs.select(col("doc_id").as("id"),
+      explode(org.apache.spark.sql.graftfn.ShingleArray.shingleOccurrences(
+        TextOps.tokens(col("text")), 3)).as("token"))
+    val tf = ExtCaches.persistTracked(occ.groupBy(col("id"), col("token"))
+      .agg(count(lit(1)).as("tf")))
+    val dlen = ExtCaches.persistTracked(
+      tf.groupBy(col("id")).agg(sum(col("tf")).as("dl")))
+    val n = udocs.agg(count(lit(1)).as("n_docs"))
+    val avgdl = dlen.agg((sum(col("dl")).cast(DoubleType) /
+      count(lit(1)).cast(DoubleType)).as("avgdl"))
+    val df = tf.groupBy(col("token")).agg(count(lit(1)).as("df"))
+    val qTf = tf.filter(col("id") < nQueries)
+      .select(col("id").as("q_id"), col("token"))
+    val hits = qTf.join(tf, Seq("token")).filter(col("id") =!= col("q_id"))
+      .join(df, Seq("token"))
+      .crossJoin(broadcast(n)).crossJoin(broadcast(avgdl))
+      .join(dlen, Seq("id"))
+    // idf: the Robertson form ln((N - df + 0.5)/(df + 0.5) + 1)
+    val idf = log((col("n_docs").cast(DoubleType) - col("df") + 0.5) /
+      (col("df") + 0.5) + 1.0)
+    val satTf = (col("tf").cast(DoubleType) * (K1 + 1.0)) /
+      (col("tf").cast(DoubleType) + lit(K1) * (lit(1.0 - B) +
+        lit(B) * col("dl").cast(DoubleType) / col("avgdl")))
+    val scored = hits.groupBy(col("q_id"), col("id"))
+      .agg(count(lit(1)).cast(DoubleType).as("s_count"),
+        sum(idf).as("s_idf"),
+        sum(idf * satTf).as("s_bm25"))
+    def armHits(arm: String, scoreCol: String): DataFrame = {
+      val w = Window.partitionBy(col("q_id"))
+        .orderBy(desc(scoreCol), col("id"))
+      val ranked = scored
+        .withColumn("rnk", row_number().over(w).cast(LongType))
+        .filter(col("rnk") <= armK)
+      val isTwin = col("id") === col("q_id") + Relevance.TwinIdOffset
+      ranked.agg(
+        count(when(isTwin && col("rnk") === 1L, lit(1))).as("hits_at_1"),
+        count(when(isTwin && col("rnk") <= k, lit(1))).as("hits_at_k"))
+        .crossJoin(broadcast(
+          corpus.filter(col("doc_id") < nQueries)
+            .agg(count(lit(1)).as("n_queries"))))
+        .select(lit(arm).as("arm"), col("n_queries"),
+          col("hits_at_1"), col("hits_at_k"))
+    }
+    armHits("1_count", "s_count")
+      .unionByName(armHits("2_idf", "s_idf"))
+      .unionByName(armHits("3_bm25", "s_bm25"))
+      .orderBy(col("arm"))
+  }
+
+  private def plainDocs: DataFrame =
+    graft.tables.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
+
+  private def hits(corpus: DataFrame) =
+    lexArmsHits(corpus, RelevanceQueries, HybridArmK, HybridTopK)
       .collect().map(r => r.getString(0) ->
         (r.getAs[Long]("hits_at_1"), r.getAs[Long]("hits_at_k"))).toMap
 
   test("plain corpus: the three lexical arms are indistinguishable (the knobs are moot)") {
-    val h = hits(graft.tables.Tables.documents(spark, dir)
-      .select(col("doc_id"), col("text")))
+    val h = hits(plainDocs)
     // measured 45/50 @1 and 50/50 @k for ALL three arms — distinct
     // shingles (tf = 1) and uniform lengths give the extra BM25 terms
     // nothing to act on
     assert(h("1_count")._2 == 50L && h("2_idf")._2 == 50L && h("3_bm25")._2 == 50L, s"$h")
     assert(h("1_count")._1 == h("2_idf")._1 && h("2_idf")._1 == h("3_bm25")._1, s"$h")
-    graft.ext.ExtCaches.clearCaches()
+    ExtCaches.clearCaches()
   }
 
   test("stuffed corpus: count degrades, idf recovers, full BM25 restores plain-corpus hits") {
-    val h = hits(graft.tools.DiagBm25.stuffedDocs(spark, dir))
+    val h = hits(Retrieval.stuffedDocs(plainDocs, "doc_id", "text"))
     // measured: count 38/42, idf 44/50, bm25 45/50 — the monotone knob
     // ladder (slack on the @1 cells: double-sum rank near-ties may move
     // a query by one)
@@ -3087,26 +3164,109 @@ class Bm25KnobSpec extends SparkSpec {
       s"knob ladder direction violated: $h")
     assert(h("3_bm25")._1 >= 43L,
       s"full BM25 should restore ~plain-corpus hit@1 (measured 45): $h")
-    graft.ext.ExtCaches.clearCaches()
+    ExtCaches.clearCaches()
   }
 }
 
-/** NN-descent's structured-vs-i.i.d. pair (round 12 — the half of the
-  * round-11 rejection the planted corpus makes falsifiable): the same
-  * descent from the same weak hash-random seed NAVIGATES on planted
-  * structure and stays near its coupon-collection floor on i.i.d.
-  * embeddings. DiagNnd carries the full per-round tables. */
+/** NN-descent (Dong et al., WWW'11) on both sides of its structural
+  * regime — the half of the round-11 rejection the planted corpus makes
+  * falsifiable: the same descent from the same weak hash-random seed
+  * (k arbitrary neighbors per node; the banded seed is already perfect
+  * on planted structure, x96 = 1.0, so it cannot show climbing)
+  * NAVIGATES on planted structure and stays near its coupon-collection
+  * floor on i.i.d. embeddings. The measured rounds are in PLANS.md
+  * "The planted corpus's remaining verdict-#1 sub-items". */
 class NndSpec extends SparkSpec {
+  import org.apache.spark.sql.{Column, DataFrame}
+  import org.apache.spark.sql.expressions.Window
+  import org.apache.spark.sql.types.{LongType, StringType}
+
+  private val K = 3
+  /** Reverse-neighbor cap per node (Dong's sampling knob). */
+  private val RCap = 3
+
+  private def u16(s: Column) =
+    conv(substring(md5(s), 1, 4), 16, 10).cast(LongType)
+
+  /** k hash-random seed edges per node over the id universe [0, n). */
+  private def randomSeed(v: DataFrame, n: Long, k: Int): DataFrame =
+    v.select(col("id").as("src_id"),
+        explode(array((0 until k).map(j =>
+          u16(concat(lit(s"nnd|$j|"), col("id").cast(StringType))) % n): _*))
+          .as("nbr_id"))
+      .filter(col("src_id") =!= col("nbr_id"))
+      .distinct()
+
+  /** One measured descent: per-round recall@K of the evolving graph
+    * against the exact per-node top-K. Returns the per-round hit counts
+    * followed by (-1, |exact|). `v` = withNormed output (id, vec, ns_, nn_). */
+  private def descend(v: DataFrame, n: Long, rounds: Int): Seq[(Int, Long)] = {
+    val vv = ExtCaches.persistTracked(v)
+    val exact = {
+      val a = vv.select(col("id").as("src_id"), col("vec").as("vs"), col("ns_"))
+      // exact top-K: brute pairs via the quantized kernel
+      val b = vv.select(col("id").as("nbr_id"), col("vec").as("vn"), col("nn_"))
+      val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
+      a.join(b, col("src_id") =!= col("nbr_id"))
+        .withColumn("cosine", Similarity.cosineFromParts(
+          Similarity.dotQ(col("vs"), col("vn")), col("ns_"), col("nn_")))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= K)
+        .select(col("src_id"), col("nbr_id"))
+    }
+    val exactSet = ExtCaches.persistTracked(exact)
+    val nExact = exactSet.count()
+
+    def score(cand: DataFrame): DataFrame = {
+      val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
+      cand
+        .join(vv.select(col("id").as("src_id"), col("vec").as("vs"), col("ns_")), Seq("src_id"))
+        .join(vv.select(col("id").as("nbr_id"), col("vec").as("vn"), col("nn_")), Seq("nbr_id"))
+        .withColumn("cosine", Similarity.cosineFromParts(
+          Similarity.dotQ(col("vs"), col("vn")), col("ns_"), col("nn_")))
+        .withColumn("rnk", row_number().over(w))
+        .filter(col("rnk") <= K)
+        .select(col("src_id"), col("nbr_id"))
+    }
+
+    var g = score(randomSeed(vv.select(col("id")), n, K)).localCheckpoint(true)
+    val out = Seq.newBuilder[(Int, Long)]
+    out += 0 -> g.join(exactSet, Seq("src_id", "nbr_id"), "left_semi").count()
+    for (r <- 1 to rounds) {
+      // capped reverse edges (hash-ranked for determinism)
+      val wr = Window.partitionBy(col("src_id"))
+        .orderBy(u16(concat(col("src_id").cast(StringType), lit("|"),
+          col("nbr_id").cast(StringType))), col("nbr_id"))
+      val rev = g.select(col("nbr_id").as("src_id"), col("src_id").as("nbr_id"))
+        .withColumn("rr", row_number().over(wr)).filter(col("rr") <= RCap)
+        .select(col("src_id"), col("nbr_id"))
+      val und = g.unionByName(rev).distinct()
+      val hop2 = und.as("a")
+        .join(und.as("b"), col("a.nbr_id") === col("b.src_id"))
+        .select(col("a.src_id").as("src_id"), col("b.nbr_id").as("nbr_id"))
+        .filter(col("src_id") =!= col("nbr_id"))
+      val cand = g.unionByName(hop2).distinct()
+      g = score(cand).localCheckpoint(true)
+      out += r -> g.join(exactSet, Seq("src_id", "nbr_id"), "left_semi").count()
+    }
+    out.result() :+ (-1, nExact)
+  }
+
+  private def withNormed(e: DataFrame): DataFrame =
+    Similarity.withNorm(
+        e.select(col("vec_id").as("id"), col("embedding").as("vec")),
+        "vec", "norm")
+      .select(col("id"), col("vec"), col("norm").as("ns_"), col("norm").as("nn_"))
+
   test("random-seed NN-descent climbs on planted structure, not on i.i.d. dims") {
     val dir = "/root/testdata/sf0.001"
     val e = graft.tables.Tables.embeddings(spark, dir)
     val n = e.count()
-    def finalRecall(corpus: org.apache.spark.sql.DataFrame): Double = {
-      val cells = graft.tools.DiagNnd.descend(
-        graft.tools.DiagNnd.withNormed(corpus), n, rounds = 3)
+    def finalRecall(corpus: DataFrame): Double = {
+      val cells = descend(withNormed(corpus), n, rounds = 3)
       val nExact = cells.last._2
       val r = cells.dropRight(1).last._2.toDouble / nExact
-      graft.ext.ExtCaches.clearCaches()
+      ExtCaches.clearCaches()
       r
     }
     val iid = finalRecall(e.select(col("vec_id"), col("embedding")))

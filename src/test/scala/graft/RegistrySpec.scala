@@ -96,6 +96,31 @@ class RegistrySpec extends AnyFunSuite {
     }
   }
 
+  test("every persist in src/main goes through ExtCaches (clearCaches can release it)") {
+    // A bare `.persist(` or `.cache()` outside ExtCaches is a relation
+    // ExtCaches.clearCaches() does not know about: it stays cached for
+    // the rest of the session and its storage memory outlives every
+    // clear. persistTracked is the one path in.
+    val bare = raw"\.persist\(|\.cache\(\)".r
+    def scalaFiles(d: java.io.File): Seq[java.io.File] =
+      d.listFiles().toSeq.flatMap { f =>
+        if (f.isDirectory) scalaFiles(f)
+        else if (f.getName.endsWith(".scala")) Seq(f)
+        else Nil
+      }
+    val files = scalaFiles(new java.io.File("src/main"))
+    assert(files.exists(_.getName == "ExtCaches.scala"), "source scan found no ExtCaches.scala")
+    val offenders = files.filterNot(_.getName == "ExtCaches.scala").flatMap { f =>
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if bare.findFirstIn(l).isDefined => s"${f.getPath}:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(offenders.isEmpty,
+      s"untracked persists (use ExtCaches.persistTracked):\n${offenders.mkString("\n")}")
+  }
+
   test("documented registry count matches the code (SURVEY.md, README.md)") {
     // Round-6 lesson: three queries landed in a snapshot commit while
     // SURVEY/README kept the old counts for a full round. Each doc now
