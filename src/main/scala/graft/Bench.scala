@@ -286,7 +286,7 @@ object Bench {
       "x77_sim_topk_ivf_pq_residual", "x84_hybrid_rrf_ivf",
       "x88_hybrid_rrf_ivfpq",
       // round 16: the raw-corpus graph builders now consume the same
-      // shared coarse quantizer (Similarity.knnGraphIvf* cellStats)
+      // shared coarse quantizer (through ExtAnnGates.sharedIvfFront)
       "x89_knn_graph_ivf", "x91_knn_graph_ivf_recall",
       "x93_knn_graph_ivf_sq8", "x94_knn_graph_ivf_sq8_recall",
       "x101_knn_graph_residual")

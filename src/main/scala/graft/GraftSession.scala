@@ -45,10 +45,17 @@ object GraftSession {
     * generated class names because AQE numbers whole-stage-codegen
     * stages in the order its query stages materialize, which varies from
     * rep to rep: the same pipeline then compiled once per numbering
-    * (s07_clv: 2–10 compiles on warm reps). */
+    * (s07_clv: 2–10 compiles on warm reps). Artifact isolation is off
+    * because the task class loader is part of the cache key too: a
+    * `persist()` plans its relation in a clone of the session, and with
+    * isolation on each clone's stages ran in a new task class loader, so
+    * a cached relation whose plan broadcasts compiled its task classes
+    * again in every cache epoch (3 per `warmAnnShared`). The engine adds
+    * no per-session artifacts. */
   val CodegenConfs: Seq[(String, String)] = Seq(
     CodegenCacheConf -> CodegenCacheEntries.toString,
-    "spark.sql.codegen.useIdInClassName" -> "false")
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** Fails, naming the conf, unless `spark` carries [[CodegenCacheEntries]]
     * (see the class doc for why a session can come back without it). */

@@ -468,7 +468,7 @@ object Similarity {
     * price of boundedness, exactly as in x59 (and the x05 hotBucketCap
     * composes on top if a corpus is adversarially all-identical). The
     * gate-scale registry forms assert the corpus sits under the cap
-    * (`guarded`) so the exhaustive oracle stays valid, making a future
+    * (`guard`) so the exhaustive oracle stays valid, making a future
     * violation a loud named failure instead of an opaque hash mismatch.
     *
     * The SEARCH front end (x73/x76/x77/x84/x88) shares the trained-cell
@@ -503,12 +503,23 @@ object Similarity {
     * regime Lloyd granularity DOES split). */
   private[graft] final class CellFence(memberCells: DataFrame,
                                        probeCells: DataFrame,
-                                       cap: Option[Int]) {
-    /** (cell) rows past the cap — |cells|-bounded, broadcast both ways. */
-    private lazy val big: DataFrame =
-      memberCells.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
-        .filter(col("cell_n") > cap.get.toLong)
-        .select(col("cell"))
+                                       cap: Option[Int],
+                                       sizes: () => Map[Long, Long]) {
+    /** A fence that counts its cell sizes from `memberCells` (one job, on
+      * first use); an [[IvfFront]] hands over its driver-held counts. */
+    def this(memberCells: DataFrame, probeCells: DataFrame, cap: Option[Int]) =
+      this(memberCells, probeCells, cap, () => cellCounts(memberCells))
+
+    /** The cells past the cap, read from the driver-held sizes. */
+    private lazy val bigCells: Seq[Long] = cap.fold(Seq.empty[Long]) { c =>
+      sizes().collect { case (cell, n) if n > c => cell }.toSeq.sorted
+    }
+
+    /** [[bigCells]] as a LocalRelation (cell), broadcast both ways. When it
+      * is empty, Catalyst prunes the anti-joins to their left side and the
+      * semi-joined fallback inputs to empty relations while optimizing. */
+    private lazy val big: DataFrame = memberCells.sparkSession
+      .createDataFrame(bigCells.map(Row(_)).asJava, CellSchema)
     val okMembers: DataFrame = cap.fold(memberCells)(_ =>
       memberCells.join(broadcast(big), Seq("cell"), "left_anti"))
     val okProbes: DataFrame = cap.fold(probeCells)(_ =>
@@ -522,35 +533,24 @@ object Similarity {
     private lazy val bigProbes: DataFrame =
       probeCells.join(broadcast(big), Seq("cell"), "left_semi")
 
-    /** Whether ANY cell exceeds the cap — ONE broadcast-sized job (the
-      * `big` aggregate is ≤ |cells| rows; its input is the persisted
-      * probe relation, whose cache this action fills a step early).
-      * Deliberate driver-side action (round-13 advisor item): the
-      * RESIDUAL fallbacks below must train a sub-quantizer EAGERLY
-      * (trainedCellStats runs one job per Lloyd round), so on the
-      * gated no-overflow path — exactly the geometry x101's
-      * assertUnderCap certifies — the un-short-circuited form paid
-      * lloydRounds+1 Spark jobs (plus the oversized-member residual
-      * scan) training over a provably EMPTY relation. One tiny count
-      * here buys skipping all of them; when cells DO overflow it adds
-      * one |cells|-row aggregate to a path already dominated by
-      * training. The lazy [[bandedScored]] fallback needs no such
-      * check — its empty branch collapses under AQE at execution time
-      * without any eager work. */
-    private lazy val anyBig: Boolean = cap.nonEmpty && !big.isEmpty
+    /** Whether ANY cell exceeds the cap — read on the driver, no job. On
+      * the gated no-overflow path (the geometry x101's assertUnderCap
+      * certifies) every fallback below is skipped outright: the residual
+      * ones would otherwise train a sub-quantizer eagerly (one job per
+      * Lloyd round) over a provably EMPTY relation. */
+    private lazy val anyBig: Boolean = bigCells.nonEmpty
 
     /** Banded within-cell scored edges for the oversized cells (exact
       * cosine over band-collision candidates, id-pair rows only until
-      * the final vector fetch); None when unfenced. Empty under AQE when
-      * no cell exceeds the cap (the broadcast `big` stage reports zero
-      * rows and the branch collapses). */
-    def bandedScored(v: DataFrame): Option[DataFrame] = cap.map { _ =>
+      * the final vector fetch); None when unfenced or when no cell
+      * exceeds the cap. */
+    def bandedScored(v: DataFrame): Option[DataFrame] = cap.filter(_ => anyBig).map { _ =>
       val keys = v.withColumn("sig", signSignature(col("vec"), 64))
         .select(col("id"),
           explode(sampledKeysFromSig(col("sig"), 16, 16, 64, 0x5EEDL)).as("bk"))
-      val srcK = probeCells.join(broadcast(big), Seq("cell"), "left_semi")
+      val srcK = bigProbes
         .join(keys.withColumnRenamed("id", "src_id"), Seq("src_id"))
-      val nbrK = memberCells.join(broadcast(big), Seq("cell"), "left_semi")
+      val nbrK = bigMembers
         .join(keys.withColumnRenamed("id", "nbr_id"), Seq("nbr_id"))
       val cand = srcK.join(nbrK, Seq("cell", "bk"))
         .filter(col("src_id") =!= col("nbr_id"))
@@ -712,16 +712,16 @@ object Similarity {
       // main path).
       val off0 = roundedCentroids(stats)
         .select(col("cell").cast(StringType).as("key"), col("cbar").as("off"))
-      var memb = memberCells.join(broadcast(big), Seq("cell"), "left_semi")
+      var memb = bigMembers
         .select(col("nbr_id"), col("cell").cast(StringType).as("key"))
-      var prob = probeCells.join(broadcast(big), Seq("cell"), "left_semi")
+      var prob = bigProbes
         .select(col("src_id"), col("cell").cast(StringType).as("key"))
       var off = off0
       var emitted = Seq.empty[DataFrame]
       for (level <- 1 to maxDepth) {
-        val sizes = memb.groupBy(col("key")).agg(count(lit(1)).as("kn"))
-        val bigK = sizes.filter(col("kn") > capL).select(col("key"))
-        val okK = sizes.filter(col("kn") <= capL).select(col("key"))
+        val keyN = memb.groupBy(col("key")).agg(count(lit(1)).as("kn"))
+        val bigK = keyN.filter(col("kn") > capL).select(col("key"))
+        val okK = keyN.filter(col("kn") <= capL).select(col("key"))
         // cap-bounded keys: exhaustive within-key candidates, emitted
         emitted :+= prob.join(broadcast(okK), Seq("key"), "left_semi")
           .join(memb.join(broadcast(okK), Seq("key"), "left_semi"), Seq("key"))
@@ -790,35 +790,79 @@ object Similarity {
         .select(col("src_id"), col("nbr_id"), col("cosine"))
     }
 
-    /** Lazy in-plan under-cap guard (the x84/x88 anchor form): asserts
-      * no Lloyd cell exceeds the cap, so a registry gate whose oracle is
-      * cell-exhaustive fails LOUDLY (with this message) the day a corpus
-      * collapses a cell, instead of hash-mismatching opaquely. */
-    def guarded(out: DataFrame, op: String, on: Boolean): DataFrame =
-      if (!on || cap.isEmpty) out
-      else {
-        val anchor = broadcast(
-          memberCells.groupBy(col("cell")).agg(count(lit(1)).as("cell_n"))
-            .agg(max(col("cell_n")).as("max_cell"))
-            .select(assert_true(col("max_cell") <= lit(cap.get.toLong),
-              concat(
-                lit(s"$op oracle precondition violated: largest Lloyd cell has "),
-                col("max_cell"),
-                lit(s" members > maxCellSize ${cap.get} — past the cap the " +
-                  "engine switches to banded within-cell candidates while " +
-                  "the oracle stays cell-exhaustive. Raise the cap (and " +
-                  "re-gate) or mirror the banded branch in the oracle SQL " +
-                  "before scaling this gate.")))
-              .as("cell_cap_ok")))
-        out.crossJoin(anchor)
-          .filter(col("cell_cap_ok").isNull)
-          .drop("cell_cap_ok")
-      }
+    /** Under-cap guard of the registry forms (`on`), checked on the
+      * driver from the cell sizes before the query is built: a gate whose
+      * oracle is cell-exhaustive fails LOUDLY (with this message, naming
+      * `op`) the day a corpus collapses a cell, before any job runs,
+      * instead of hash-mismatching opaquely. */
+    def guard(op: String, on: Boolean): Unit =
+      if (on && anyBig) throw new IllegalStateException(
+        s"$op oracle precondition violated: largest Lloyd cell has " +
+          s"${sizes().values.max} members > maxCellSize ${cap.get} — past " +
+          "the cap the engine switches to banded within-cell candidates " +
+          "while the oracle stays cell-exhaustive. Raise the cap (and " +
+          "re-gate) or mirror the banded branch in the oracle SQL before " +
+          "scaling this gate.")
   }
 
-  private def cellFence(memberCells: DataFrame, probeCells: DataFrame,
-                        cap: Option[Int]): CellFence =
-    new CellFence(memberCells, probeCells, cap)
+  private val CellSchema =
+    StructType(Seq(StructField("cell", LongType, nullable = false)))
+
+  /** Rank-1 members per cell of a (nbr_id, cell) relation, collected to
+    * the driver: at most |cells| entries. */
+  private def cellCounts(memberCells: DataFrame): Map[Long, Long] =
+    memberCells.groupBy(col("cell")).agg(count(lit(1)))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  /** The coarse-quantizer front end every trained-cell consumer reads:
+    * `v` = [[withNorm]]'s persisted (id, vec, norm) corpus, `q` = its
+    * (id, v) projection, `stats` = the cells it was probed with,
+    * `probes` = the persisted (id, probe_rank, cell) relation, and
+    * `cellSizes` = rank-1 members per cell, collected to the driver once,
+    * on first use (≤ |cells| entries). It depends only on (corpus, stats,
+    * nprobe), so one anchor serves every consumer of a cache epoch
+    * (ExtAnnGates.sharedIvfFront); a self-trained call builds its own. */
+  final class IvfFront private[Similarity] (val v: DataFrame,
+                                            val stats: DataFrame,
+                                            nprobe: Int) {
+    val q: DataFrame = v.select(col("id"), col("vec").as("v"))
+    val probes: DataFrame =
+      ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
+    lazy val cellSizes: Map[Long, Long] = cellCounts(memberCells)
+
+    private def memberCells: DataFrame = probes.filter(col("probe_rank") === 1)
+      .select(col("id").as("nbr_id"), col("cell"))
+
+    /** The cell fence over this front's members and probers. */
+    private[Similarity] def fence(cap: Option[Int]): CellFence =
+      new CellFence(memberCells,
+        probes.select(col("id").as("src_id"), col("cell")), cap,
+        () => cellSizes)
+  }
+
+  /** The front of `corpus` probed against the trained cells `stats`. */
+  def ivfFront(corpus: DataFrame, idCol: String, vecCol: String,
+               stats: DataFrame, nprobe: Int): IvfFront =
+    new IvfFront(normed(corpus, idCol, vecCol), stats, nprobe)
+
+  /** The front a self-trained call builds: probed against `cellStats`
+    * when given, else against cells trained over the corpus itself. */
+  private def ownFront(corpus: DataFrame, idCol: String, vecCol: String,
+                       cells: Int, lloydRounds: Int, nprobe: Int,
+                       cellStats: Option[DataFrame]): IvfFront = {
+    val v = normed(corpus, idCol, vecCol)
+    new IvfFront(v, cellStats.getOrElse(trainedCellStats(
+      v.select(col("id"), col("vec").as("v")), cells, lloydRounds)), nprobe)
+  }
+
+  private def normed(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
+    withNorm(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
+
+  /** The IVF kNN graph over a built [[IvfFront]]. */
+  def knnGraphIvf(front: IvfFront, k: Int, maxCellSize: Option[Int],
+                  assertUnderCap: Boolean): DataFrame =
+    graphFromFront(front, k, maxCellSize, assertUnderCap, "knnGraphIvf",
+      _.bandedScored(front.v))
 
   /** `cellStats`: an externally trained coarse-quantizer state (the
     * x73/x88 anchor-sharing discipline extended to the graph builders,
@@ -830,13 +874,9 @@ object Similarity {
                   cells: Int, lloydRounds: Int, nprobe: Int,
                   maxCellSize: Option[Int] = None,
                   assertUnderCap: Boolean = false,
-                  cellStats: Option[DataFrame] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(q, cells, lloydRounds))
-    val p = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    graphFromProbes(v, p, k, maxCellSize, assertUnderCap, "knnGraphIvf")
-  }
+                  cellStats: Option[DataFrame] = None): DataFrame =
+    knnGraphIvf(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
+      cellStats), k, maxCellSize, assertUnderCap)
 
   /** [[knnGraphIvf]] with the RESIDUAL sub-quantizer fallback for
     * oversized cells ([[CellFence.residualScored]]) instead of the
@@ -851,80 +891,70 @@ object Similarity {
     * oversized cell, candidates are bounded by n·subNprobe·maxSubcell
     * and recall follows the sub-quantizer's probe-budget curve (the
     * x91 trade, one level down) — measured on the planted corpus in
-    * PlantedFenceSpec/PLANS.md. */
-  def knnGraphIvfResidual(df: DataFrame, idCol: String, vecCol: String,
-                          k: Int, cells: Int, lloydRounds: Int, nprobe: Int,
+    * PlantedFenceSpec/PLANS.md. `lloydRounds` trains the sub-quantizer. */
+  def knnGraphIvfResidual(front: IvfFront, k: Int, lloydRounds: Int,
                           maxCellSize: Int, subCells: Int, subNprobe: Int,
-                          assertUnderCap: Boolean = false,
-                          depth: Int = 1,
-                          cellStats: Option[DataFrame] = None,
-                          subStats: Option[DataFrame] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(q, cells, lloydRounds))
-    val p = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    graphFromProbesWith(v, p, k, Some(maxCellSize), assertUnderCap,
+                          assertUnderCap: Boolean, depth: Int,
+                          subStats: Option[DataFrame]): DataFrame =
+    graphFromFront(front, k, Some(maxCellSize), assertUnderCap,
       "knnGraphIvfResidual",
       f => if (depth <= 1)
-        f.residualScored(v, stats, subCells, lloydRounds, subNprobe, subStats)
+        f.residualScored(front.v, front.stats, subCells, lloydRounds,
+          subNprobe, subStats)
       else
         // the loop counts emit stages; `depth` counts QUANTIZER levels
         // (depth residual trainings, then the final emit) — maxDepth=2
         // in loop terms is provably identical to depth 1 (the
         // exhaustion emit is the same (key, subkey) join), so the
         // mapping is depth + 1
-        f.residualScoredDeep(v, stats, subCells, lloydRounds, subNprobe,
-          depth + 1))
-  }
+        f.residualScoredDeep(front.v, front.stats, subCells, lloydRounds,
+          subNprobe, depth + 1))
+
+  def knnGraphIvfResidual(df: DataFrame, idCol: String, vecCol: String,
+                          k: Int, cells: Int, lloydRounds: Int, nprobe: Int,
+                          maxCellSize: Int, subCells: Int, subNprobe: Int,
+                          assertUnderCap: Boolean = false,
+                          depth: Int = 1,
+                          cellStats: Option[DataFrame] = None,
+                          subStats: Option[DataFrame] = None): DataFrame =
+    knnGraphIvfResidual(ownFront(df, idCol, vecCol, cells, lloydRounds,
+        nprobe, cellStats), k, lloydRounds, maxCellSize, subCells,
+      subNprobe, assertUnderCap, depth, subStats)
 
   /** Builds the trained RESIDUAL SUB-QUANTIZER state of
     * [[knnGraphIvfResidual]]'s fallback externally — the round-17 anchor
     * builder (the VERDICT-r16 #3 item): a session-keyed cache trains the
     * sub-Lloyd chain over the oversized cells' residuals ONCE per
     * (corpus, geometry) and hands the state to every invocation via
-    * `subStats`. Replays the builder's own front end (same persist-
-    * tracked quantized scan and probe relation, so the CacheManager
-    * dedupes them against the query's) and returns None exactly when the
-    * query's fallback would be None (unfenced geometry — callers pass
-    * the result straight through). Training is deterministic
-    * exact-integer Lloyd, so sharing changes cost, never results
-    * (CellFenceSpec pins bit-identity). */
+    * `subStats`. Reads the same front as the query, and returns None
+    * exactly when the query's fallback would be None (unfenced geometry
+    * — callers pass the result straight through). Training is
+    * deterministic exact-integer Lloyd, so sharing changes cost, never
+    * results (CellFenceSpec pins bit-identity). */
+  def residualSubStats(front: IvfFront, lloydRounds: Int, maxCellSize: Int,
+                       subCells: Int): Option[DataFrame] =
+    front.fence(Some(maxCellSize))
+      .subQuantizerStats(front.v, front.stats, subCells, lloydRounds)
+
   def residualSubStats(df: DataFrame, idCol: String, vecCol: String,
                        cells: Int, lloydRounds: Int, nprobe: Int,
                        maxCellSize: Int, subCells: Int,
                        cellStats: Option[DataFrame] = None)
-      : Option[DataFrame] = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(q, cells, lloydRounds))
-    val p = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    val memberCells = p.filter(col("probe_rank") === 1)
-      .select(col("id").as("nbr_id"), col("cell"))
-    val probeCells = p.select(col("id").as("src_id"), col("cell"))
-    cellFence(memberCells, probeCells, Some(maxCellSize))
-      .subQuantizerStats(v, stats, subCells, lloydRounds)
-  }
+      : Option[DataFrame] =
+    residualSubStats(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
+      cellStats), lloydRounds, maxCellSize, subCells)
 
-  /** The [[knnGraphIvf]] build tail over an externally supplied probe
-    * relation — factored out so the frozen-quantizer form
-    * ([[knnGraphIvfFrozen]]) and the self-trained form share one
-    * spelling of the shuffle discipline, scorer, and fence. */
-  private def graphFromProbes(v: DataFrame, p: DataFrame, k: Int,
-                              maxCellSize: Option[Int],
-                              assertUnderCap: Boolean,
-                              op: String): DataFrame =
-    graphFromProbesWith(v, p, k, maxCellSize, assertUnderCap, op,
-      _.bandedScored(v))
-
-  private def graphFromProbesWith(v: DataFrame, p: DataFrame, k: Int,
-                                  maxCellSize: Option[Int],
-                                  assertUnderCap: Boolean, op: String,
-                                  fallback: CellFence => Option[DataFrame])
+  /** The [[knnGraphIvf]] build tail over a front — one spelling of the
+    * shuffle discipline, scorer, and fence for the exact, residual and
+    * frozen-quantizer forms. */
+  private def graphFromFront(front: IvfFront, k: Int,
+                             maxCellSize: Option[Int],
+                             assertUnderCap: Boolean, op: String,
+                             fallback: CellFence => Option[DataFrame])
       : DataFrame = {
-    val memberCells = p.filter(col("probe_rank") === 1)
-      .select(col("id").as("nbr_id"), col("cell"))
-    val probeCells = p.select(col("id").as("src_id"), col("cell"))
-    val fence = cellFence(memberCells, probeCells, maxCellSize)
+    val v = front.v
+    val fence = front.fence(maxCellSize)
+    fence.guard(op, assertUnderCap)
     // Shuffle discipline, the load-bearing choice at graph-build scale:
     // vectors are attached to the SMALL relations (members: n rows;
     // probes: n·nprobe rows) BEFORE the cell join, so the only big
@@ -949,10 +979,9 @@ object Similarity {
       .select(col("src_id"), col("nbr_id"), col("cosine"))
     val scored = fallback(fence).fold(exactScored)(exactScored.unionByName(_))
     val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    val ranked = scored.withColumn("rnk", row_number().over(w).cast(LongType))
+    scored.withColumn("rnk", row_number().over(w).cast(LongType))
       .filter(col("rnk") <= k)
       .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
-    fence.guarded(ranked, op, assertUnderCap)
   }
 
   /** [[knnGraphIvf]] with the coarse quantizer trained on an EXPLICIT
@@ -968,14 +997,11 @@ object Similarity {
                         vecCol: String, k: Int, cells: Int,
                         lloydRounds: Int, nprobe: Int,
                         cellStats: Option[DataFrame] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val qt = ExtCaches.persistTracked(
-      trainOn.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(qt, cells, lloydRounds))
-    val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
-    val p = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    graphFromProbes(v, p, k, maxCellSize = None, assertUnderCap = false,
-      op = "knnGraphIvfFrozen")
+    val stats = cellStats.getOrElse(trainedCellStats(ExtCaches.persistTracked(
+      trainOn.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))),
+      cells, lloydRounds))
+    knnGraphIvf(ivfFront(df, idCol, vecCol, stats, nprobe), k,
+      maxCellSize = None, assertUnderCap = false)
   }
 
   /** Incremental FOLD-IN of an ingest batch into a stored IVF kNN graph
@@ -1078,17 +1104,22 @@ object Similarity {
                      shortlist: Int,
                      maxCellSize: Option[Int] = None,
                      assertUnderCap: Boolean = false,
-                     cellStats: Option[DataFrame] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
-    val p = ExtCaches.persistTracked(probesFromStats(q,
-      cellStats.getOrElse(trainedCellStats(q, cells, lloydRounds)), nprobe))
+                     cellStats: Option[DataFrame] = None): DataFrame =
+    knnGraphIvfSq8(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
+      cellStats), df, idCol, vecCol, k, shortlist, maxCellSize, assertUnderCap)
+
+  /** [[knnGraphIvfSq8]] over a built front of `df`: the SQ8 codes come
+    * from `df`'s raw vectors, the probes and the re-rank vectors from
+    * the front. */
+  def knnGraphIvfSq8(front: IvfFront, df: DataFrame, idCol: String,
+                     vecCol: String, k: Int, shortlist: Int,
+                     maxCellSize: Option[Int],
+                     assertUnderCap: Boolean): DataFrame = {
+    val v = front.v
+    val fence = front.fence(maxCellSize)
+    fence.guard("knnGraphIvfSq8", assertUnderCap)
     val coded = ExtCaches.persistTracked(
       sq8Codes(df.select(col(idCol), col(vecCol)), idCol, vecCol))
-    val memberCells = p.filter(col("probe_rank") === 1)
-      .select(col("id").as("nbr_id"), col("cell"))
-    val probeCells = p.select(col("id").as("src_id"), col("cell"))
-    val fence = cellFence(memberCells, probeCells, maxCellSize)
     val members = fence.okMembers
       .join(coded.select(col("id").as("nbr_id"), col("code").as("cn")), Seq("nbr_id"))
     val probes = fence.okProbes
@@ -1112,10 +1143,9 @@ object Similarity {
     // which the banding has done for them).
     val scored = fence.bandedScored(v).fold(rer)(rer.unionByName(_))
     val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    val ranked = scored.withColumn("rnk", row_number().over(w).cast(LongType))
+    scored.withColumn("rnk", row_number().over(w).cast(LongType))
       .filter(col("rnk") <= k)
       .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
-    fence.guarded(ranked, "knnGraphIvfSq8", assertUnderCap)
   }
 
   /** Recall audit of ANY directed edge set against the exact per-node
@@ -1708,17 +1738,20 @@ object Similarity {
                 pqLloydRounds: Int = 2, dims: Int = 64,
                 cellStats: Option[DataFrame] = None,
                 pqState: Option[(DataFrame, DataFrame, DataFrame)] = None)
+      : DataFrame =
+    ivfPqTopK(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds, nprobe,
+        cellStats), queryIds, idCol, k, m, codes, pqLloydRounds, dims,
+      pqState)
+
+  /** [[ivfPqTopK]] over a built front of the corpus. */
+  def ivfPqTopK(front: IvfFront, queryIds: DataFrame, idCol: String, k: Int,
+                m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
+                pqState: Option[(DataFrame, DataFrame, DataFrame)])
       : DataFrame = {
-    val q = ExtCaches.persistTracked(
-      corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
-    val probes = ExtCaches.persistTracked(probesFromStats(q,
-      cellStats.getOrElse(trainedCellStats(q, cells, cellLloydRounds)),
-      nprobe))
-    val (coded, lutRows) =
-      pqCodesAndLut(q, queryIds, idCol, m, codes, pqLloydRounds, dims, pqState)
-    val members = probes.filter(col("probe_rank") === 1)
-      .select(col("id"), col("cell"))
-      .join(coded, Seq("id"))
+    val probes = front.probes
+    val (coded, lutRows) = pqCodesAndLut(front.q, queryIds, idCol, m, codes,
+      pqLloydRounds, dims, pqState)
+    val members = ownCell(probes).join(coded, Seq("id"))
     val qp = probes
       .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
       .select(col("id").as("q_id"), col("cell"))
@@ -1748,6 +1781,40 @@ object Similarity {
         floor(si.cast(DoubleType) / col("n").cast(DoubleType) + lit(0.5))
           .cast(LongType)).as("cbar"))
 
+  /** Each corpus row's OWN (rank-1) cell: its (id, cell). */
+  private def ownCell(probes: DataFrame): DataFrame =
+    probes.filter(col("probe_rank") === 1).select(col("id"), col("cell"))
+
+  /** Externally trained RESIDUAL PQ state for [[ivfPqResidualTopK]]
+    * (round 17): the residual codebooks are deterministic given
+    * (corpus, coarse stats), so a session-keyed anchor trains the
+    * joint-Lloyd chain once per epoch instead of once per invocation —
+    * the sharedPqState discipline applied to the residual form (x77's
+    * dominant warm cost after the coarse anchor landed). Trained and
+    * encoded over the corpus residuals relative to each row's own cell
+    * — the only reader of the residual relation, so it is built (and
+    * tracked) only when a chain is trained. */
+  def residualPqState(front: IvfFront, m: Int, codes: Int,
+                      pqLloydRounds: Int, dims: Int)
+      : (DataFrame, DataFrame, DataFrame) = {
+    val resRel = ExtCaches.persistTracked(
+      ownCell(front.probes)
+        .join(front.q, Seq("id"))
+        .join(broadcast(roundedCentroids(front.stats)), Seq("cell"))
+        .select(col("id"), col("cell"),
+          zip_with(col("v"), col("cbar"), (a, b) => a - b).as("v")))
+    pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
+      pqLloydRounds, dims)
+  }
+
+  def residualPqState(corpus: DataFrame, idCol: String, vecCol: String,
+                      cells: Int, cellLloydRounds: Int, nprobe: Int,
+                      m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
+                      cellStats: Option[DataFrame] = None)
+      : (DataFrame, DataFrame, DataFrame) =
+    residualPqState(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds,
+      nprobe, cellStats), m, codes, pqLloydRounds, dims)
+
   /** IVF×PQ with RESIDUAL encoding (x77) — FAISS's `by_residual=true`,
     * the library's DEFAULT and the form production IVFPQ indexes run:
     * PQ codebooks are trained on (vector − its cell's centroid) instead
@@ -1772,60 +1839,6 @@ object Similarity {
     * broadcast (q_id, cell, bias, lut) side equi-joined on cell — the
     * probed fraction bounds the scan, codes bound per-candidate cost,
     * no vector ever shuffles. */
-  /** The residual-PQ front end [[ivfPqResidualTopK]] and its external
-    * anchor builder ([[residualPqState]]) share — one spelling of the
-    * quantized scan and probe relation, so the persist-tracked copies
-    * canonicalize equal and the CacheManager dedupes them across the two
-    * callers. */
-  private def residualPqFrontEnd(corpus: DataFrame, idCol: String,
-                                 vecCol: String, cells: Int,
-                                 cellLloydRounds: Int, nprobe: Int,
-                                 cellStats: Option[DataFrame])
-      : (DataFrame, DataFrame, DataFrame) = {
-    val q = ExtCaches.persistTracked(
-      corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(q, cells, cellLloydRounds))
-    val probes = ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
-    (q, stats, probes)
-  }
-
-  /** Each corpus row's OWN (rank-1) cell: its (id, cell). */
-  private def ownCell(probes: DataFrame): DataFrame =
-    probes.filter(col("probe_rank") === 1).select(col("id"), col("cell"))
-
-  /** The residual PQ chain trained and encoded over the corpus residuals
-    * relative to each row's own cell — the only reader of the residual
-    * relation, so it is built (and tracked) only when a chain is trained. */
-  private def residualPqTrain(q: DataFrame, stats: DataFrame,
-                              probes: DataFrame, m: Int, codes: Int,
-                              pqLloydRounds: Int, dims: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val resRel = ExtCaches.persistTracked(
-      ownCell(probes)
-        .join(q, Seq("id"))
-        .join(broadcast(roundedCentroids(stats)), Seq("cell"))
-        .select(col("id"), col("cell"),
-          zip_with(col("v"), col("cbar"), (a, b) => a - b).as("v")))
-    pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
-      pqLloydRounds, dims)
-  }
-
-  /** Externally trained RESIDUAL PQ state for [[ivfPqResidualTopK]]
-    * (round 17): the residual codebooks are deterministic given
-    * (corpus, coarse stats), so a session-keyed anchor trains the
-    * joint-Lloyd chain once per epoch instead of once per invocation —
-    * the sharedPqState discipline applied to the residual form (x77's
-    * dominant warm cost after the coarse anchor landed). */
-  def residualPqState(corpus: DataFrame, idCol: String, vecCol: String,
-                      cells: Int, cellLloydRounds: Int, nprobe: Int,
-                      m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
-                      cellStats: Option[DataFrame] = None)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val (q, stats, probes) = residualPqFrontEnd(corpus, idCol, vecCol,
-      cells, cellLloydRounds, nprobe, cellStats)
-    residualPqTrain(q, stats, probes, m, codes, pqLloydRounds, dims)
-  }
-
   def ivfPqResidualTopK(corpus: DataFrame, queryIds: DataFrame,
                         idCol: String, vecCol: String, k: Int, cells: Int,
                         cellLloydRounds: Int, nprobe: Int, m: Int = 8,
@@ -1833,14 +1846,23 @@ object Similarity {
                         dims: Int = 64,
                         cellStats: Option[DataFrame] = None,
                         pqState: Option[(DataFrame, DataFrame, DataFrame)] =
-                          None): DataFrame = {
+                          None): DataFrame =
+    ivfPqResidualTopK(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds,
+        nprobe, cellStats), queryIds, idCol, k, m, codes, pqLloydRounds,
+      dims, pqState)
+
+  /** [[ivfPqResidualTopK]] over a built front of the corpus. */
+  def ivfPqResidualTopK(front: IvfFront, queryIds: DataFrame, idCol: String,
+                        k: Int, m: Int, codes: Int, pqLloydRounds: Int,
+                        dims: Int,
+                        pqState: Option[(DataFrame, DataFrame, DataFrame)])
+      : DataFrame = {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     val subW = dims / m
-    val (q, stats, probes) = residualPqFrontEnd(corpus, idCol,
-      vecCol, cells, cellLloydRounds, nprobe, cellStats)
-    val cent = roundedCentroids(stats)
+    val (q, probes) = (front.q, front.probes)
+    val cent = roundedCentroids(front.stats)
     val (coded, anchor, _) = pqState.getOrElse(
-      residualPqTrain(q, stats, probes, m, codes, pqLloydRounds, dims))
+      residualPqState(front, m, codes, pqLloydRounds, dims))
     // LUT from the FULL query subvectors vs the residual codebook —
     // cell-independent, so one table per query (the x74 shape).
     val qsv = q

@@ -213,8 +213,8 @@ object Chinook {
     // aggregate.
     //
     // An explicit l_orderkey repartition used to precede the join too.
-    // Round-7 idle A/B (sf0.1, median-of-5; this note is the record —
-    // its PLANS.md write-up was dropped by a later re-render):
+    // Round-7 idle A/B (sf0.1, median-of-5; PLANS.md "Note: the round-6
+    // q06 driver line" holds the full sweep and its round-8 re-run):
     // both exchanges 1.57 s vs group-key-only 1.64 s — equal within the
     // run-to-run noise — while no-explicit-exchange is 2.44 s. The extra
     // full-data shuffle bought nothing at idle and was the prime suspect

@@ -201,8 +201,9 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
   /** x74 PQ geometry: 8 subspaces × 8 dims, 64 codewords per subspace
     * (6-bit codes ⇒ 6 bytes stored per vector vs 256 for raw floats), 2
     * Lloyd training rounds. The codeword count is the fidelity knob and
-    * was CHOSEN BY MEASUREMENT at all three code rates (the figures
-    * here are the record; SURVEY.md's x74 row summarizes them): sf0.1
+    * was CHOSEN BY MEASUREMENT at all three code rates (PLANS.md "x74
+    * product-quantization ADC (round 9)" and "PQ priced at the
+    * production code rate" hold the tables): sf0.1
     * recall@3 / top-50 coverage run 3/30 & 16/30 at 16
     * codewords, 9/30 & 22/30 at 64, and 8/30 & 25/30 at 256 (8-bit, the
     * production FAISS rate). 64 stays the shipped default ON this
@@ -250,32 +251,45 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
       Similarity.pqTrainEncode(quantizedEmbs(s, dir),
         PqM, PqCodes, PqLloydRounds, EmbeddingDims))
 
+  /** The IVF front end over the raw embeddings probed against
+    * [[sharedCellStats]] — the normed corpus, its probe relation and the
+    * driver-held cell sizes that x76, x77, x89, x91, x93, x94 and x101
+    * read instead of re-persisting them per call. Built (and its cell
+    * sizes collected, which fills both persisted relations) once per
+    * cache epoch, so no consumer call starts a job or fills a cache
+    * while it is built. */
+  private[graft] def sharedIvfFront(s: SparkSession, dir: String)
+      : Similarity.IvfFront =
+    ExtCaches.anchor("sharedIvfFront", s, dir) {
+      val front = Similarity.ivfFront(Tables.embeddings(s, dir), "vec_id",
+        "embedding", sharedCellStats(s, dir), ScaledNprobe)
+      front.cellSizes
+      front
+    }
+
   /** RESIDUAL PQ state for x77 (round 17): the residual codebooks + codes
     * are deterministic given (raw embeddings, [[sharedCellStats]]) — the
     * sharedPqState discipline applied to the by_residual form, whose
     * joint-Lloyd chain was re-trained per invocation (the family's
-    * largest remaining warm line after the r16 anchors). Bit-identity
-    * pinned by ResidualPqAnchorSpec and the oracle. */
+    * largest remaining warm line after the r16 anchors). Trained from
+    * [[sharedIvfFront]]. Bit-identity pinned by ResidualPqAnchorSpec and
+    * the oracle. */
   private[queries] def sharedResidualPqState(s: SparkSession, dir: String)
       : (DataFrame, DataFrame, DataFrame) =
     ExtCaches.anchor("sharedResidualPqState", s, dir)(
-      Similarity.residualPqState(Tables.embeddings(s, dir), "vec_id",
-        "embedding", cells = ScaledCells,
-        cellLloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        m = PqM, codes = PqCodes, pqLloydRounds = PqLloydRounds,
-        dims = EmbeddingDims, cellStats = Some(sharedCellStats(s, dir))))
+      Similarity.residualPqState(sharedIvfFront(s, dir), PqM, PqCodes,
+        PqLloydRounds, EmbeddingDims))
 
-  /** Bench pre-warm: materialize both shared anchors (the Lloyd chains
-    * train eagerly, one job per round; the PQ code table is forced here)
+  /** Bench pre-warm: materialize the shared anchors (the Lloyd chains
+    * train eagerly, one job per round; the PQ code tables are forced here)
     * so the trained-arm family's timed lines run against built state —
     * the warmCcLabels precedent. */
   def warmAnnShared(s: SparkSession, dir: String): Unit =
-    // Two independent chains; the residual-PQ anchor consumes
-    // sharedCellStats, so it rides the first one.
+    // Two independent chains; the IVF front and the residual-PQ anchor
+    // consume sharedCellStats, so they ride the first one.
     ExtCaches.warmChains(
-      "sharedCellStats+sharedResidualPqState" -> { () =>
-        sharedCellStats(s, dir)
-        // round 17: x77's residual-PQ anchor joins the family-5 build line.
+      "sharedIvfFront+sharedResidualPqState" -> { () =>
+        sharedIvfFront(s, dir)
         sharedResidualPqState(s, dir)._1.count()
       },
       "sharedPqState" -> (() => sharedPqState(s, dir)._1.count()))
@@ -332,11 +346,9 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * recall number composes across the family tables. */
   def x76_sim_topk_ivf_pq(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    Similarity.ivfPqTopK(e, e.filter(col("vec_id") < QuerySetSize),
-        "vec_id", "embedding", k = 3, cells = ScaledCells,
-        cellLloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        m = PqM, codes = PqCodes, pqLloydRounds = PqLloydRounds,
-        dims = EmbeddingDims, cellStats = Some(sharedCellStats(s, dir)),
+    Similarity.ivfPqTopK(sharedIvfFront(s, dir),
+        e.filter(col("vec_id") < QuerySetSize), "vec_id", k = 3, m = PqM,
+        codes = PqCodes, pqLloydRounds = PqLloydRounds, dims = EmbeddingDims,
         pqState = Some(sharedPqState(s, dir)))
       .orderBy(col("q_id"), col("rnk"))
   }
@@ -354,11 +366,9 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * encoding buys at fixed storage, with both variants oracle-gated. */
   def x77_sim_topk_ivf_pq_residual(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    Similarity.ivfPqResidualTopK(e, e.filter(col("vec_id") < QuerySetSize),
-        "vec_id", "embedding", k = 3, cells = ScaledCells,
-        cellLloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        m = PqM, codes = PqCodes, pqLloydRounds = PqLloydRounds,
-        dims = EmbeddingDims, cellStats = Some(sharedCellStats(s, dir)),
+    Similarity.ivfPqResidualTopK(sharedIvfFront(s, dir),
+        e.filter(col("vec_id") < QuerySetSize), "vec_id", k = 3, m = PqM,
+        codes = PqCodes, pqLloydRounds = PqLloydRounds, dims = EmbeddingDims,
         pqState = Some(sharedResidualPqState(s, dir)))
       .orderBy(col("q_id"), col("rnk"))
   }

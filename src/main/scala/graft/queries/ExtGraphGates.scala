@@ -192,11 +192,8 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * ~32 % probe mass vs x78's 0.009-0.014 on the same corpus — see [[Similarity.knnGraphIvf]] for the measured
     * ladder and the rejected NN-descent alternative. */
   def x89_knn_graph_ivf(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvf(Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        maxCellSize = Some(KnnCellCap), assertUnderCap = true,
-        cellStats = Some(sharedCellStats(s, dir)))
+    Similarity.knnGraphIvf(sharedIvfFront(s, dir), k = KnnGraphK,
+        maxCellSize = Some(KnnCellCap), assertUnderCap = true)
       .orderBy(col("src_id"), col("rnk"))
 
 
@@ -214,19 +211,17 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * as a first-class gated operator: the x89 build with the BOUNDED
     * fallback (residual sub-quantizer, candidates born unique) in place
     * of the banded one. At gate scale no cell exceeds [[KnnCellCap]]
-    * (asserted in-plan, same loud-failure discipline as x89/x93), so
+    * (asserted on the driver, same loud-failure discipline as x89/x93), so
     * the oracle is x89's cell-exhaustive SQL VERBATIM and the gate
     * proves the shared tail + the under-cap equality cross-engine; the
     * overflow branch is spec-gated (PlantedFenceSpec) and soak-measured
     * (n=20k cap=1000: 0.60× candidates, 66× count job, 4.8× build,
     * recall 0.959→0.74 — the probe-budget trade, PLANS.md). */
   def x101_knn_graph_residual(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvfResidual(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        maxCellSize = KnnCellCap, subCells = ResidualSubCells,
-        subNprobe = ResidualSubNprobe, assertUnderCap = true,
-        cellStats = Some(sharedCellStats(s, dir)))
+    Similarity.knnGraphIvfResidual(sharedIvfFront(s, dir), k = KnnGraphK,
+        lloydRounds = ScaledLloydRounds, maxCellSize = KnnCellCap,
+        subCells = ResidualSubCells, subNprobe = ResidualSubNprobe,
+        assertUnderCap = true, depth = 1, subStats = None)
       .orderBy(col("src_id"), col("rnk"))
 
 
@@ -373,7 +368,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
 
   /** Planted relevance of the residual-fenced graph (x104) — x101's
     * builder under the twin ground truth. At gate scale no cell
-    * exceeds [[KnnCellCap]] (asserted in-plan), so the result must
+    * exceeds [[KnnCellCap]] (asserted on the driver), so the result must
     * EQUAL x102's row (under-cap equality, now proven through the
     * relevance reduction too) and the oracle is x102's SQL with only
     * the arm label changed; the overflow branch's relevance is priced
@@ -473,7 +468,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * under it (sf0.1: 32 cells over 2k vectors, max cell ~100), so the
     * exhaustive oracle semantics hold exactly while the cell² failure
     * mode is fenced; the registry forms additionally assert the
-    * precondition in-plan (`assertUnderCap`) so a future corpus that
+    * precondition on the driver (`assertUnderCap`) so a future corpus that
     * collapses a cell fails loudly by name, never as an opaque hash
     * mismatch. The degenerate one-giant-cell corpus is spec-pinned
     * (CellFenceSpec). */
@@ -491,10 +486,8 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   def x91_knn_graph_ivf_recall(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     Similarity.graphEdgesRecall(e,
-        Similarity.knnGraphIvf(e, "vec_id", "embedding", k = KnnGraphK,
-          cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-          nprobe = ScaledNprobe, maxCellSize = Some(KnnCellCap),
-          cellStats = Some(sharedCellStats(s, dir))),
+        Similarity.knnGraphIvf(sharedIvfFront(s, dir), k = KnnGraphK,
+          maxCellSize = Some(KnnCellCap), assertUnderCap = false),
         "vec_id", "embedding", k = KnnGraphK, hitsCol = "hits_ivf")
       .orderBy(col("src_id"))
   }
@@ -515,12 +508,10 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * what crosses the scorer is the int8-range payload a production
     * index keeps at rest. */
   def x93_knn_graph_ivf_sq8(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvfSq8(Tables.embeddings(s, dir), "vec_id",
-        "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        shortlist = KnnShortlist,
-        maxCellSize = Some(KnnCellCap), assertUnderCap = true,
-        cellStats = Some(sharedCellStats(s, dir)))
+    Similarity.knnGraphIvfSq8(sharedIvfFront(s, dir),
+        Tables.embeddings(s, dir), "vec_id", "embedding", k = KnnGraphK,
+        shortlist = KnnShortlist, maxCellSize = Some(KnnCellCap),
+        assertUnderCap = true)
       .orderBy(col("src_id"), col("rnk"))
 
 
@@ -533,11 +524,9 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   def x94_knn_graph_ivf_sq8_recall(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
     Similarity.graphEdgesRecall(e,
-        Similarity.knnGraphIvfSq8(e, "vec_id", "embedding", k = KnnGraphK,
-          cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-          nprobe = ScaledNprobe, shortlist = KnnShortlist,
-          maxCellSize = Some(KnnCellCap),
-          cellStats = Some(sharedCellStats(s, dir))),
+        Similarity.knnGraphIvfSq8(sharedIvfFront(s, dir), e, "vec_id",
+          "embedding", k = KnnGraphK, shortlist = KnnShortlist,
+          maxCellSize = Some(KnnCellCap), assertUnderCap = false),
         "vec_id", "embedding", k = KnnGraphK, hitsCol = "hits_ivf_sq8")
       .orderBy(col("src_id"))
   }
@@ -782,7 +771,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
 
 
     // x101: the residual-fenced builder — at gate scale no cell exceeds
-    // KnnCellCap (asserted in-plan), so the fallback branch is empty and
+    // KnnCellCap (asserted on the driver), so the fallback branch is empty and
     // the oracle is x89's cell-exhaustive chain VERBATIM; the gate proves
     // the shared graph tail and the under-cap equality cross-engine.
     "x101_knn_graph_residual" ->
@@ -808,7 +797,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
          |${graphRelevanceHitsSql("2_ivf_sq8", "g8")}""".stripMargin,
 
 
-    // x104: at gate scale no cell overflows (asserted in-plan), so the
+    // x104: at gate scale no cell overflows (asserted on the driver), so the
     // residual-fenced builder's relevance row is x102's chain with only
     // the arm label changed — under-cap equality proven through the
     // relevance reduction.

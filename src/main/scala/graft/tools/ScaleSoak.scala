@@ -258,7 +258,7 @@ object ScaleSoak {
         .orderBy(col("src_id"), col("rnk"))
     }),
     // Round-12: the registry x89/x93 now carry the KnnCellCap fence +
-    // in-plan under-cap assert (x59 discipline). The soak dirs VIOLATE
+    // driver-side under-cap assert (x59 discipline). The soak dirs VIOLATE
     // the cap by construction at fixed geometry (x100: ~200k rows over
     // 32 cells → ~6k members/cell), so — exactly as with x59_uncapped —
     // the soak rows price the raw unfenced form via direct Similarity

@@ -2529,7 +2529,7 @@ class CellFenceSpec extends SparkSpec {
     assert(!fenced8.exists { case (s, n) => s == 0L && bIds(n) },
       "fenced sq8 node 0 must not see non-colliding B members")
     assert(fenced8((0L, 2L)))
-    // the registry form's in-plan guard: a collapsed cell fails by name
+    // the registry form's driver-side guard: a collapsed cell fails by name
     val e = intercept[Exception] {
       Similarity.knnGraphIvf(df, "vec_id", "embedding",
         k = 3, cells = 2, lloydRounds = 1, nprobe = 2,

@@ -34,11 +34,10 @@ class WarmCodegenSpec extends SparkSpec {
     try {
       Chinook.warmCaches(spark, dir)
       Extensions.warmAnnShared(spark, dir)
-      // x74 reads the shared PQ anchor. x76, x89 and x101 are left out:
-      // on their first warm call a relation the cold call persisted has
-      // measured size statistics, a broadcast join can flip its build
-      // side, and that call compiles again (ROADMAP direction 4).
-      val ops = reportOps :+ "x74_sim_topk_pq"
+      // x74 reads the shared PQ anchor; x76, x89 and x101 the shared IVF
+      // front, whose relations the warm build already filled.
+      val ops = reportOps ++ Seq("x74_sim_topk_pq", "x76_sim_topk_ivf_pq",
+        "x89_knn_graph_ivf", "x101_knn_graph_residual")
       compilesPerOp(ops)
       val warm = compilesPerOp(ops).filter(_._2 > 0)
       assert(warm.isEmpty, s"warm rep compiled: ${warm.mkString(", ")}")
@@ -46,6 +45,19 @@ class WarmCodegenSpec extends SparkSpec {
       val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
       spark.range(1).select(col("id") + lit(System.nanoTime())).collect()
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount > c0)
+    } finally ExtCaches.clearCaches()
+  }
+
+  test("a shared-state build after clearCaches compiles no class") {
+    // Each build persists relations whose plans broadcast; their task
+    // classes are reused only if the tasks keep one class loader.
+    try {
+      Extensions.warmAnnShared(spark, dir)
+      ExtCaches.clearCaches()
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      Extensions.warmAnnShared(spark, dir)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == c0,
+        "the second warmAnnShared compiled classes")
     } finally ExtCaches.clearCaches()
   }
 
