@@ -291,10 +291,11 @@ object Bench {
       "x93_knn_graph_ivf_sq8", "x94_knn_graph_ivf_sq8_recall",
       "x101_knn_graph_residual")
     // Family 6 carve-out (round 16): the twin-corpus relevance gates
-    // (x102/x103/x104) share one quantizer trained over the augmented
-    // corpus and the planted-corpus gates (x97/x106) one over the
-    // planted corpus (ExtGraphGates.twinCellStats/plantedCellStats);
-    // both anchors are built once, timed as graph_trained_build, and
+    // (x102/x103/x104) read one IVF front over the augmented corpus and
+    // the planted-corpus gates (x97/x106) one over the planted corpus
+    // (ExtGraphGates.twinIvfFront/plantedIvfFront, each probed against
+    // its corpus's trained cells); the cells, fronts and x106's
+    // sub-quantizer are built once, timed as graph_trained_build, and
     // the five consumers run warm — previously each gate re-trained
     // its corpus's quantizer per rep.
     val graphShared = Set("x97_planted_ivf_recall",

@@ -43,6 +43,11 @@ object Similarity {
   /** Fixed-point scale: 2^20. Binary so `x * Scale` never rounds. */
   val Scale = 1048576.0
 
+  /** Trained product-quantizer state, [[pqTrainEncode]]'s result:
+    * (coded = (id, code[m]), anchor = the driver-held codebooks,
+    * svRel = the persisted (id, sub, sv) subvectors). */
+  type PqState = (DataFrame, DataFrame, DataFrame)
+
   /** Quantize a float-array column to fixed-point longs. */
   def quantize(v: Column): Column =
     transform(v, x => round(x.cast(DoubleType) * Scale).cast(LongType))
@@ -432,7 +437,7 @@ object Similarity {
     * no navigable neighborhood structure to descend). What DOES carry
     * recall here is the trained coarse quantizer (x71: the only arm
     * above 50 %), so the graph form of it: every node probes its
-    * `nprobe` nearest Lloyd-trained cells ([[trainedCellProbes]] — the
+    * `nprobe` nearest Lloyd-trained cells (an [[IvfFront]] — the
     * x73/x76 front end verbatim) and ranks the probed cells' members by
     * EXACT quantized cosine (not the SQ8 code dot: ranking exactness is
     * free at graph-build time and makes a miss purely a CELL-PROBE
@@ -591,31 +596,30 @@ object Similarity {
       * unique by construction (one sub-cell per member, distinct
       * (cell, subcell) probes per source) — no dedup shuffle.
       *
+      * `subStats` is the trained sub-quantizer, [[subQuantizerStats]]'s
+      * result for the same (v, stats, cap): None exactly when no cell
+      * exceeds the cap. A fence with oversized cells and no state throws
+      * rather than dropping their candidates.
+      *
       * Returns None when the geometry is UNFENCED (no cap) OR when no
       * cell exceeds the cap (the [[anyBig]] short-circuit): callers must
       * treat None as "exact path covers everything", not "fence absent" —
       * do not `.get` on a geometry that may drift under the cap. */
-    def residualScored(v: DataFrame, stats: DataFrame, subCells: Int,
-                       lloydRounds: Int,
-                       subNprobe: Int,
-                       subStats: Option[DataFrame] = None): Option[DataFrame] =
-    // no overflow → the exact path covers everything; skip the (eager)
-    // empty sub-quantizer training — see [[anyBig]]
+    def residualScored(v: DataFrame, stats: DataFrame,
+                       subStats: Option[DataFrame],
+                       subNprobe: Int): Option[DataFrame] =
     cap.filter(_ => anyBig).map { _ =>
+      val sub = subStats.getOrElse(throw new IllegalArgumentException(
+        "residualScored: cells exceed the cap but no sub-quantizer state " +
+          "was given — pass residualSubStats' result for this front"))
       val cbar = roundedCentroids(stats)
       val bigM = bigMembers
       val bigP = bigProbes
       def residual(side: DataFrame, idc: String): DataFrame =
         residualOf(v, cbar, side, idc)
-      // one global sub-quantizer over the oversized members' residuals;
-      // `subStats` (round 17) is the externally trained state — the
-      // cellStats anchor discipline one level down: training is
-      // deterministic exact-integer Lloyd over [[bigMemberResiduals]],
-      // so a caller holding the state pays the sub-Lloyd chain once per
-      // anchor instead of once per invocation, bit-identical output
-      // (CellFenceSpec pins shared-vs-per-call equality).
+      // members take their rank-1 sub-cell of the one global
+      // sub-quantizer trained over the oversized members' residuals
       val rq = bigMemberResiduals(v, stats)
-      val sub = subStats.getOrElse(trainedCellStats(rq, subCells, lloydRounds))
       // Both sub-cell assignment relations persist (round 17): they are
       // small (members: one row per oversized member; probers: subNprobe
       // rows per (src, probed big cell)) and — with the sub state held
@@ -821,10 +825,12 @@ object Similarity {
     * `cellSizes` = rank-1 members per cell, collected to the driver once,
     * on first use (≤ |cells| entries). It depends only on (corpus, stats,
     * nprobe), so one anchor serves every consumer of a cache epoch
-    * (ExtAnnGates.sharedIvfFront); a self-trained call builds its own. */
+    * (ExtAnnGates.sharedIvfFront). Every IVF consumer reads its cells
+    * from a front and never trains; [[trainedIvfFront]] is the one
+    * constructor that trains them first. */
   final class IvfFront private[Similarity] (val v: DataFrame,
                                             val stats: DataFrame,
-                                            nprobe: Int) {
+                                            val nprobe: Int) {
     val q: DataFrame = v.select(col("id"), col("vec").as("v"))
     val probes: DataFrame =
       ExtCaches.persistTracked(probesFromStats(q, stats, nprobe))
@@ -845,14 +851,16 @@ object Similarity {
                stats: DataFrame, nprobe: Int): IvfFront =
     new IvfFront(normed(corpus, idCol, vecCol), stats, nprobe)
 
-  /** The front a self-trained call builds: probed against `cellStats`
-    * when given, else against cells trained over the corpus itself. */
-  private def ownFront(corpus: DataFrame, idCol: String, vecCol: String,
-                       cells: Int, lloydRounds: Int, nprobe: Int,
-                       cellStats: Option[DataFrame]): IvfFront = {
+  /** The front of `corpus` probed against `cells` coarse cells trained
+    * over the corpus itself: hash-split seeds and `lloydRounds`
+    * exact-integer Lloyd rounds ([[trainedCellStats]]). Training is
+    * deterministic, so a front built with [[ivfFront]] over cells
+    * trained on a value-equal corpus yields bit-identical consumers. */
+  def trainedIvfFront(corpus: DataFrame, idCol: String, vecCol: String,
+                      cells: Int, lloydRounds: Int, nprobe: Int): IvfFront = {
     val v = normed(corpus, idCol, vecCol)
-    new IvfFront(v, cellStats.getOrElse(trainedCellStats(
-      v.select(col("id"), col("vec").as("v")), cells, lloydRounds)), nprobe)
+    new IvfFront(v, trainedCellStats(v.select(col("id"), col("vec").as("v")),
+      cells, lloydRounds), nprobe)
   }
 
   private def normed(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
@@ -863,20 +871,6 @@ object Similarity {
                   assertUnderCap: Boolean): DataFrame =
     graphFromFront(front, k, maxCellSize, assertUnderCap, "knnGraphIvf",
       _.bandedScored(front.v))
-
-  /** `cellStats`: an externally trained coarse-quantizer state (the
-    * x73/x88 anchor-sharing discipline extended to the graph builders,
-    * round 16): training is deterministic exact-integer Lloyd, so a
-    * caller holding the stats trained over a value-equal corpus gets
-    * bit-identical output while paying the Lloyd chain once per anchor
-    * instead of once per gate. */
-  def knnGraphIvf(df: DataFrame, idCol: String, vecCol: String, k: Int,
-                  cells: Int, lloydRounds: Int, nprobe: Int,
-                  maxCellSize: Option[Int] = None,
-                  assertUnderCap: Boolean = false,
-                  cellStats: Option[DataFrame] = None): DataFrame =
-    knnGraphIvf(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
-      cellStats), k, maxCellSize, assertUnderCap)
 
   /** [[knnGraphIvf]] with the RESIDUAL sub-quantizer fallback for
     * oversized cells ([[CellFence.residualScored]]) instead of the
@@ -891,35 +885,33 @@ object Similarity {
     * oversized cell, candidates are bounded by n·subNprobe·maxSubcell
     * and recall follows the sub-quantizer's probe-budget curve (the
     * x91 trade, one level down) — measured on the planted corpus in
-    * PlantedFenceSpec/PLANS.md. `lloydRounds` trains the sub-quantizer. */
-  def knnGraphIvfResidual(front: IvfFront, k: Int, lloydRounds: Int,
-                          maxCellSize: Int, subCells: Int, subNprobe: Int,
-                          assertUnderCap: Boolean, depth: Int,
+    * PlantedFenceSpec/PLANS.md. `subStats` is [[residualSubStats]]'s
+    * result over the same front and cap (None exactly when no cell
+    * overflows). */
+  def knnGraphIvfResidual(front: IvfFront, k: Int, maxCellSize: Int,
+                          subNprobe: Int, assertUnderCap: Boolean,
                           subStats: Option[DataFrame]): DataFrame =
     graphFromFront(front, k, Some(maxCellSize), assertUnderCap,
       "knnGraphIvfResidual",
-      f => if (depth <= 1)
-        f.residualScored(front.v, front.stats, subCells, lloydRounds,
-          subNprobe, subStats)
-      else
-        // the loop counts emit stages; `depth` counts QUANTIZER levels
-        // (depth residual trainings, then the final emit) — maxDepth=2
-        // in loop terms is provably identical to depth 1 (the
-        // exhaustion emit is the same (key, subkey) join), so the
-        // mapping is depth + 1
-        f.residualScoredDeep(front.v, front.stats, subCells, lloydRounds,
-          subNprobe, depth + 1))
+      _.residualScored(front.v, front.stats, subStats, subNprobe))
 
-  def knnGraphIvfResidual(df: DataFrame, idCol: String, vecCol: String,
-                          k: Int, cells: Int, lloydRounds: Int, nprobe: Int,
-                          maxCellSize: Int, subCells: Int, subNprobe: Int,
-                          assertUnderCap: Boolean = false,
-                          depth: Int = 1,
-                          cellStats: Option[DataFrame] = None,
-                          subStats: Option[DataFrame] = None): DataFrame =
-    knnGraphIvfResidual(ownFront(df, idCol, vecCol, cells, lloydRounds,
-        nprobe, cellStats), k, lloydRounds, maxCellSize, subCells,
-      subNprobe, assertUnderCap, depth, subStats)
+  /** [[knnGraphIvfResidual]] with the fallback recursed `depth` quantizer
+    * levels deep ([[CellFence.residualScoredDeep]]). Each level's
+    * sub-quantizer is trained over the residuals the level before it
+    * left oversized, so this operator trains them itself
+    * (`subCells` × `lloydRounds` per level); depth 1 is
+    * [[knnGraphIvfResidual]]'s geometry. */
+  def knnGraphIvfResidualDeep(front: IvfFront, k: Int, lloydRounds: Int,
+                              maxCellSize: Int, subCells: Int,
+                              subNprobe: Int, depth: Int): DataFrame =
+    graphFromFront(front, k, Some(maxCellSize), assertUnderCap = false,
+      "knnGraphIvfResidual",
+      // the loop counts emit stages; `depth` counts QUANTIZER levels
+      // (depth residual trainings, then the final emit) — maxDepth=2 in
+      // loop terms is provably identical to depth 1 (the exhaustion emit
+      // is the same (key, subkey) join), so the mapping is depth + 1
+      _.residualScoredDeep(front.v, front.stats, subCells, lloydRounds,
+        subNprobe, depth + 1))
 
   /** Builds the trained RESIDUAL SUB-QUANTIZER state of
     * [[knnGraphIvfResidual]]'s fallback externally — the round-17 anchor
@@ -936,17 +928,9 @@ object Similarity {
     front.fence(Some(maxCellSize))
       .subQuantizerStats(front.v, front.stats, subCells, lloydRounds)
 
-  def residualSubStats(df: DataFrame, idCol: String, vecCol: String,
-                       cells: Int, lloydRounds: Int, nprobe: Int,
-                       maxCellSize: Int, subCells: Int,
-                       cellStats: Option[DataFrame] = None)
-      : Option[DataFrame] =
-    residualSubStats(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
-      cellStats), lloydRounds, maxCellSize, subCells)
-
   /** The [[knnGraphIvf]] build tail over a front — one spelling of the
-    * shuffle discipline, scorer, and fence for the exact, residual and
-    * frozen-quantizer forms. */
+    * shuffle discipline, scorer, and fence for the exact and residual
+    * forms. */
   private def graphFromFront(front: IvfFront, k: Int,
                              maxCellSize: Option[Int],
                              assertUnderCap: Boolean, op: String,
@@ -984,30 +968,10 @@ object Similarity {
       .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
   }
 
-  /** [[knnGraphIvf]] with the coarse quantizer trained on an EXPLICIT
-    * (frozen) training relation instead of the indexed corpus itself —
-    * the re-index-cadence primitive a 100 TB ingest actually runs: cells
-    * are trained once (k-means|| over a snapshot), then a GROWING corpus
-    * is indexed and served against the stale quantizer until the next
-    * scheduled retrain. Training determinism (exact-integer Lloyd) means
-    * "retrain from the same base" ≡ "load the persisted centroids", so
-    * equality claims against this form need no stored-state fixture.
-    * With `trainOn` = `df` this is exactly [[knnGraphIvf]]. */
-  def knnGraphIvfFrozen(df: DataFrame, trainOn: DataFrame, idCol: String,
-                        vecCol: String, k: Int, cells: Int,
-                        lloydRounds: Int, nprobe: Int,
-                        cellStats: Option[DataFrame] = None): DataFrame = {
-    val stats = cellStats.getOrElse(trainedCellStats(ExtCaches.persistTracked(
-      trainOn.select(col(idCol).as("id"), quantize(col(vecCol)).as("v"))),
-      cells, lloydRounds))
-    knnGraphIvf(ivfFront(df, idCol, vecCol, stats, nprobe), k,
-      maxCellSize = None, assertUnderCap = false)
-  }
-
   /** Incremental FOLD-IN of an ingest batch into a stored IVF kNN graph
     * — the answer to the re-index-cadence question (round-12 stretch):
-    * given the stored base graph (`baseEdges`, a [[knnGraphIvfFrozen]]
-    * output over `base` with cells trained on `base`) and a new `batch`,
+    * given the stored base graph (`baseEdges`, the unfenced
+    * [[knnGraphIvf]] over the `base` front) and a new `batch`,
     * produce the graph of base ∪ batch under the SAME frozen quantizer
     * WITHOUT rescoring base×base. The delta is exactly two candidate
     * families: (i) base sources × NEW members of their probed cells —
@@ -1026,26 +990,19 @@ object Similarity {
     * (n·k rows). A real deployment alternates fold-ins with full
     * retrains when quantizer staleness (x71's probed-mass recall curve)
     * drifts past budget; both halves of that cadence now exist
-    * ([[knnGraphIvf]] retrain / this fold-in). Unfenced by design — it
-    * mirrors the frozen form; compose [[knnGraphIvf]]'s maxCellSize at
-    * the retrain boundary. */
-  def knnGraphIvfFoldIn(baseEdges: DataFrame, base: DataFrame,
+    * ([[knnGraphIvf]] retrain / this fold-in). The batch is probed
+    * against the base front's frozen cells (the base quantizer is never
+    * retrained here), and the front's own probes serve the base side.
+    * Unfenced by design; compose [[knnGraphIvf]]'s maxCellSize at the
+    * retrain boundary. */
+  def knnGraphIvfFoldIn(baseEdges: DataFrame, base: IvfFront,
                         batch: DataFrame, idCol: String, vecCol: String,
-                        k: Int, cells: Int, lloydRounds: Int,
-                        nprobe: Int,
-                        cellStats: Option[DataFrame] = None): DataFrame = {
-    val vb = withNorm(base.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val vd = withNorm(batch.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val v = vb.unionByName(vd)
-    val qb = ExtCaches.persistTracked(vb.select(col("id"), col("vec").as("v")))
-    val qd = vd.select(col("id"), col("vec").as("v"))
-    // Frozen quantizer: deterministic retrain from base ≡ loading the
-    // base build's persisted centroids (or the caller's, via cellStats —
-    // x99 trains the base quantizer ONCE for the stored build and this
-    // fold-in instead of twice; round 16).
-    val stats = cellStats.getOrElse(trainedCellStats(qb, cells, lloydRounds))
-    val pb = ExtCaches.persistTracked(probesFromStats(qb, stats, nprobe))
-    val pd = ExtCaches.persistTracked(probesFromStats(qd, stats, nprobe))
+                        k: Int): DataFrame = {
+    val vd = normed(batch, idCol, vecCol)
+    val v = base.v.unionByName(vd)
+    val pb = base.probes
+    val pd = ExtCaches.persistTracked(probesFromStats(
+      vd.select(col("id"), col("vec").as("v")), base.stats, base.nprobe))
     def members(p: DataFrame): DataFrame =
       p.filter(col("probe_rank") === 1).select(col("id").as("nbr_id"), col("cell"))
     val withNbrVec = (m: DataFrame) => m.join(
@@ -1098,19 +1055,10 @@ object Similarity {
     * monotonically with depth: 0.66 at 50, 0.998 at 200 ≈ the cluster
     * size. Production rule: `shortlist` ≥ the expected near-tie cohort
     * (estimable from x68's cluster-size histogram), or use
-    * [[knnGraphIvf]] whose exact ranking is free at graph-build time. */
-  def knnGraphIvfSq8(df: DataFrame, idCol: String, vecCol: String, k: Int,
-                     cells: Int, lloydRounds: Int, nprobe: Int,
-                     shortlist: Int,
-                     maxCellSize: Option[Int] = None,
-                     assertUnderCap: Boolean = false,
-                     cellStats: Option[DataFrame] = None): DataFrame =
-    knnGraphIvfSq8(ownFront(df, idCol, vecCol, cells, lloydRounds, nprobe,
-      cellStats), df, idCol, vecCol, k, shortlist, maxCellSize, assertUnderCap)
-
-  /** [[knnGraphIvfSq8]] over a built front of `df`: the SQ8 codes come
-    * from `df`'s raw vectors, the probes and the re-rank vectors from
-    * the front. */
+    * [[knnGraphIvf]] whose exact ranking is free at graph-build time.
+    *
+    * The SQ8 codes come from `df`'s raw vectors, the probes and the
+    * re-rank vectors from `front`, a front of `df`. */
   def knnGraphIvfSq8(front: IvfFront, df: DataFrame, idCol: String,
                      vecCol: String, k: Int, shortlist: Int,
                      maxCellSize: Option[Int],
@@ -1459,19 +1407,18 @@ object Similarity {
       col("v"))
 
   /** The SQ8 search tail shared by every cell-structured ANN variant:
-    * `probes` = (id, probe_rank, cell) — probe_rank 1 is the corpus
-    * row's own cell, ranks 1..nprobe a query's probe list. Broadcast
-    * equi-join on the cell id, exact integer SQ8 dot ranking, top-k per
-    * query. */
+    * `probes` = the persisted (id, probe_rank, cell) relation —
+    * probe_rank 1 is the corpus row's own cell, ranks 1..nprobe a
+    * query's probe list. Broadcast equi-join on the cell id, exact
+    * integer SQ8 dot ranking, top-k per query. */
   private def sq8CellSearch(probes: DataFrame, corpus: DataFrame,
                             queryIds: DataFrame, idCol: String,
                             vecCol: String, k: Int): DataFrame = {
-    val p = ExtCaches.persistTracked(probes)
     val coded = ExtCaches.persistTracked(sq8Codes(corpus, idCol, vecCol))
-    val cells = p.filter(col("probe_rank") === 1)
+    val cells = probes.filter(col("probe_rank") === 1)
       .select(col("id"), col("cell"))
       .join(coded, Seq("id"))
-    val q = p
+    val q = probes
       .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
       .join(coded, Seq("id"))
       .select(col("id").as("q_id"), col("code").as("q_code"), col("cell"))
@@ -1495,31 +1442,15 @@ object Similarity {
     * broadcast cell equi-join + exact SQ8 integer ranking as x70
     * ([[sq8CellSearch]], one tail for both). At 100 TB |cells| scales
     * with the corpus (SemDeDup's k ≈ 10⁵ holds cells ~10³) and nprobe
-    * holds the probed fraction — both pure config, no plan change. */
-  /** `cellStats`: an externally trained coarse-quantizer state
-    * ([[trainedCellStats]] output over the same corpus) — pass it when
-    * several arms over ONE corpus share the quantizer (x98 runs the SQ8
-    * and PQ arms side by side; training is deterministic, so sharing
-    * changes cost, never results). Default: train internally. */
-  def ivfSq8TopKScaled(corpus: DataFrame, queryIds: DataFrame,
-                       idCol: String, vecCol: String, k: Int, cells: Int,
-                       lloydRounds: Int, nprobe: Int,
-                       cellStats: Option[DataFrame] = None): DataFrame = {
-    val q = ExtCaches.persistTracked(
-      corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
-    val stats = cellStats.getOrElse(trainedCellStats(q, cells, lloydRounds))
-    sq8CellSearch(probesFromStats(q, stats, nprobe),
-      corpus, queryIds, idCol, vecCol, k)
-  }
-
-  /** Hash-seeded, Lloyd-trained cell probes over a quantized (id, v)
-    * relation: (id, probe_rank ∈ 1..nprobe, cell) — the coarse-quantizer
-    * front end shared by the scaled IVF×SQ8 (x73) and IVF×PQ (x76)
-    * searches. */
-  private[graft] def trainedCellProbes(q: DataFrame, cells: Int,
-                                       lloydRounds: Int,
-                                       nprobe: Int): DataFrame =
-    probesFromStats(q, trainedCellStats(q, cells, lloydRounds), nprobe)
+    * holds the probed fraction — both pure config, no plan change.
+    *
+    * The cells and probes are `front`'s, a front of `corpus` (several
+    * arms over one corpus share its trained cells: x98 runs the SQ8 and
+    * PQ arms side by side); the SQ8 codes come from `corpus`. */
+  def ivfSq8TopKScaled(front: IvfFront, corpus: DataFrame,
+                       queryIds: DataFrame, idCol: String, vecCol: String,
+                       k: Int): DataFrame =
+    sq8CellSearch(front.probes, corpus, queryIds, idCol, vecCol, k)
 
   /** The trained coarse-quantizer state itself — hash-split seeds
     * (id mod cells), `lloydRounds` exact-integer Lloyd iterations —
@@ -1576,24 +1507,13 @@ object Similarity {
     * products), and the rank window takes top-k. Exhaustive by design —
     * PQ's point is the cheap per-candidate cost; the IVF composition
     * (probe cells first, ADC inside) reuses x70/x73's cell join in
-    * front of this tail. */
-  /** `pqState`: an externally trained (coded, anchor, svRel) triple
-    * ([[pqTrainEncode]] output over the same corpus) — the x98/x84
-    * `cellStats` sharing precedent extended to the PQ codebooks (round
-    * 16): training is deterministic exact-integer Lloyd, so sharing
-    * changes cost, never results. Default: train internally. */
-  def pqTopK(corpus: DataFrame, queryIds: DataFrame, idCol: String,
-             vecCol: String, k: Int, m: Int = 8, codes: Int = 16,
-             lloydRounds: Int = 2, dims: Int = 64,
-             pqState: Option[(DataFrame, DataFrame, DataFrame)] = None)
-      : DataFrame = {
-    // lazy: with pqState supplied the quantized scan is never needed,
-    // and an untouched persistTracked would still count as a cache fill
-    // in the bench's cf attribution column
-    lazy val q = ExtCaches.persistTracked(
-      corpus.select(col(idCol).as("id"), quantize(col(vecCol)).as("v")))
-    val (coded, lutRows) =
-      pqCodesAndLut(q, queryIds, idCol, m, codes, lloydRounds, dims, pqState)
+    * front of this tail.
+    *
+    * `pqState` is the trained (coded, anchor, svRel) state of the corpus
+    * ([[pqTrainEncode]]); `queryIds` are corpus ids. */
+  def pqTopK(pqState: PqState, queryIds: DataFrame, idCol: String, k: Int,
+             m: Int, codes: Int): DataFrame = {
+    val (coded, lutRows) = pqCodesAndLut(pqState, queryIds, idCol, codes)
     // ALL queries packed into one row: the gate-clean 1-row anchor the
     // exhaustive ADC scan explodes per candidate row.
     val lut = lutRows.agg(collect_list(struct(col("q_id"), col("lut"))).as("qs"))
@@ -1608,22 +1528,16 @@ object Similarity {
       .select(col("q_id"), col("c_id"), col("score_pq"), col("rnk"))
   }
 
-  /** PQ training + encoding + per-query ADC tables — the stage x74's
-    * exhaustive scan and x76's IVF-scoped scan share: `q` is an
-    * ALREADY-QUANTIZED (id, v) relation (as [[trainedCellProbes]] takes —
-    * callers with their own quantized scan pass it once, so the IVF×PQ
-    * composition fills ONE corpus-wide cache, not two); returns
-    * (coded = (id, code: m code ids ordered by subspace),
+  /** The stored codes and per-query ADC tables of a trained PQ state —
+    * the stage x74's exhaustive scan and x76's IVF-scoped scan share;
+    * returns (coded = (id, code: m code ids ordered by subspace),
     *  lutRows = (q_id, lut: per-subspace (code, term) struct lists)).
     * See [[pqTopK]]'s Scaladoc for the joint-Lloyd training design and
     * the determinism analysis. */
-  private def pqCodesAndLut(q: => DataFrame, queryIds: DataFrame,
-                            idCol: String, m: Int,
-                            codes: Int, lloydRounds: Int, dims: Int,
-                            pqState: Option[(DataFrame, DataFrame, DataFrame)])
+  private def pqCodesAndLut(pqState: PqState, queryIds: DataFrame,
+                            idCol: String, codes: Int)
       : (DataFrame, DataFrame) = {
-    val (coded, anchor, svRel) =
-      pqState.getOrElse(pqTrainEncode(q, m, codes, lloydRounds, dims))
+    val (coded, anchor, svRel) = pqState
     // Per-query ADC tables: per (q, sub), the (code, term) struct list
     // sorted by code (looked up BY KEY, so codebook cells that emptied
     // out during training cannot misalign positions); per q, the m
@@ -1670,8 +1584,7 @@ object Similarity {
     * subvector relation). Factored from [[pqCodesAndLut]] so the residual
     * form (x77) trains on cell residuals with the IDENTICAL spelling. */
   private[graft] def pqTrainEncode(q: DataFrame, m: Int, codes: Int,
-                            lloydRounds: Int, dims: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+                            lloydRounds: Int, dims: Int): PqState = {
     val svRel = pqSubvectors(q, m, dims)
     val anchor = pqCodebooks(svRel, codes, lloydRounds)
     // Stored PQ codes: per row, the m code ids ordered by subspace.
@@ -1731,26 +1644,14 @@ object Similarity {
     * vector store runs. The broadcast side is (query probe, cell, LUT)
     * rows — |queries|·nprobe rows each carrying the m×codes table —
     * joined EQUI on the cell id; scoring is row-local; a refine stage
-    * (x75's tail) composes behind it unchanged. */
-  def ivfPqTopK(corpus: DataFrame, queryIds: DataFrame, idCol: String,
-                vecCol: String, k: Int, cells: Int, cellLloydRounds: Int,
-                nprobe: Int, m: Int = 8, codes: Int = 16,
-                pqLloydRounds: Int = 2, dims: Int = 64,
-                cellStats: Option[DataFrame] = None,
-                pqState: Option[(DataFrame, DataFrame, DataFrame)] = None)
-      : DataFrame =
-    ivfPqTopK(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds, nprobe,
-        cellStats), queryIds, idCol, k, m, codes, pqLloydRounds, dims,
-      pqState)
-
-  /** [[ivfPqTopK]] over a built front of the corpus. */
+    * (x75's tail) composes behind it unchanged.
+    *
+    * The cells come from `front`, the codebooks and codes from `pqState`
+    * ([[pqTrainEncode]] over the same corpus). */
   def ivfPqTopK(front: IvfFront, queryIds: DataFrame, idCol: String, k: Int,
-                m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
-                pqState: Option[(DataFrame, DataFrame, DataFrame)])
-      : DataFrame = {
+                m: Int, codes: Int, pqState: PqState): DataFrame = {
     val probes = front.probes
-    val (coded, lutRows) = pqCodesAndLut(front.q, queryIds, idCol, m, codes,
-      pqLloydRounds, dims, pqState)
+    val (coded, lutRows) = pqCodesAndLut(pqState, queryIds, idCol, codes)
     val members = ownCell(probes).join(coded, Seq("id"))
     val qp = probes
       .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
@@ -1795,8 +1696,7 @@ object Similarity {
     * — the only reader of the residual relation, so it is built (and
     * tracked) only when a chain is trained. */
   def residualPqState(front: IvfFront, m: Int, codes: Int,
-                      pqLloydRounds: Int, dims: Int)
-      : (DataFrame, DataFrame, DataFrame) = {
+                      pqLloydRounds: Int, dims: Int): PqState = {
     val resRel = ExtCaches.persistTracked(
       ownCell(front.probes)
         .join(front.q, Seq("id"))
@@ -1806,14 +1706,6 @@ object Similarity {
     pqTrainEncode(resRel.select(col("id"), col("v")), m, codes,
       pqLloydRounds, dims)
   }
-
-  def residualPqState(corpus: DataFrame, idCol: String, vecCol: String,
-                      cells: Int, cellLloydRounds: Int, nprobe: Int,
-                      m: Int, codes: Int, pqLloydRounds: Int, dims: Int,
-                      cellStats: Option[DataFrame] = None)
-      : (DataFrame, DataFrame, DataFrame) =
-    residualPqState(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds,
-      nprobe, cellStats), m, codes, pqLloydRounds, dims)
 
   /** IVF×PQ with RESIDUAL encoding (x77) — FAISS's `by_residual=true`,
     * the library's DEFAULT and the form production IVFPQ indexes run:
@@ -1838,31 +1730,18 @@ object Similarity {
     * table, the joint-Lloyd PQ chain over residual subvectors, and the
     * broadcast (q_id, cell, bias, lut) side equi-joined on cell — the
     * probed fraction bounds the scan, codes bound per-candidate cost,
-    * no vector ever shuffles. */
-  def ivfPqResidualTopK(corpus: DataFrame, queryIds: DataFrame,
-                        idCol: String, vecCol: String, k: Int, cells: Int,
-                        cellLloydRounds: Int, nprobe: Int, m: Int = 8,
-                        codes: Int = 16, pqLloydRounds: Int = 2,
-                        dims: Int = 64,
-                        cellStats: Option[DataFrame] = None,
-                        pqState: Option[(DataFrame, DataFrame, DataFrame)] =
-                          None): DataFrame =
-    ivfPqResidualTopK(ownFront(corpus, idCol, vecCol, cells, cellLloydRounds,
-        nprobe, cellStats), queryIds, idCol, k, m, codes, pqLloydRounds,
-      dims, pqState)
-
-  /** [[ivfPqResidualTopK]] over a built front of the corpus. */
+    * no vector ever shuffles.
+    *
+    * The cells come from `front`, the residual codebooks and codes from
+    * `pqState` ([[residualPqState]] over the same front). */
   def ivfPqResidualTopK(front: IvfFront, queryIds: DataFrame, idCol: String,
-                        k: Int, m: Int, codes: Int, pqLloydRounds: Int,
-                        dims: Int,
-                        pqState: Option[(DataFrame, DataFrame, DataFrame)])
-      : DataFrame = {
+                        k: Int, m: Int, codes: Int, dims: Int,
+                        pqState: PqState): DataFrame = {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     val subW = dims / m
     val (q, probes) = (front.q, front.probes)
     val cent = roundedCentroids(front.stats)
-    val (coded, anchor, _) = pqState.getOrElse(
-      residualPqState(front, m, codes, pqLloydRounds, dims))
+    val (coded, anchor, _) = pqState
     // LUT from the FULL query subvectors vs the residual codebook —
     // cell-independent, so one table per query (the x74 shape).
     val qsv = q
@@ -1911,15 +1790,12 @@ object Similarity {
     * the re-rank surfaces every true top-k member the shortlist holds.
     * Scale shape: stage 2 touches |queries|·shortlist rows — the exact
     * math runs on a vanishing corpus fraction, which is the entire
-    * point of the composition. */
+    * point of the composition. `pqState` is [[pqTopK]]'s, trained over
+    * `corpus`. */
   def pqTopKRefined(corpus: DataFrame, queryIds: DataFrame, idCol: String,
-                    vecCol: String, k: Int, shortlist: Int, m: Int = 8,
-                    codes: Int = 16, lloydRounds: Int = 2,
-                    dims: Int = 64,
-                    pqState: Option[(DataFrame, DataFrame, DataFrame)] = None)
-      : DataFrame = {
-    val short = pqTopK(corpus, queryIds, idCol, vecCol, shortlist, m,
-        codes, lloydRounds, dims, pqState)
+                    vecCol: String, k: Int, shortlist: Int, m: Int,
+                    codes: Int, pqState: PqState): DataFrame = {
+    val short = pqTopK(pqState, queryIds, idCol, shortlist, m, codes)
       .select(col("q_id"), col("c_id"))
     val v = withNorm(corpus.select(col(idCol).as("id"),
       col(vecCol).as("vec")), "vec", "norm")
@@ -2163,9 +2039,9 @@ object Similarity {
   def ivfSq8TopKLearned(corpus: DataFrame, queryIds: DataFrame,
                         idCol: String, labelCol: String, vecCol: String,
                         k: Int, nprobe: Int): DataFrame =
-    sq8CellSearch(
-      nearestCentroidProbes(corpus, idCol, labelCol, vecCol, nprobe)
-        .select(col("id"), col("probe_rank"), col("c_label").as("cell")),
+    sq8CellSearch(ExtCaches.persistTracked(
+        nearestCentroidProbes(corpus, idCol, labelCol, vecCol, nprobe)
+          .select(col("id"), col("probe_rank"), col("c_label").as("cell"))),
       corpus, queryIds, idCol, vecCol, k)
 
   /** Three-way ANN recall table at ~equal probe cost — the x64 discipline

@@ -190,10 +190,8 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * ranking hash-match across engines. */
   def x73_sim_topk_ivf_scaled(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    Similarity.ivfSq8TopKScaled(e, e.filter(col("vec_id") < QuerySetSize),
-        "vec_id", "embedding", k = 3, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        cellStats = Some(sharedCellStats(s, dir)))
+    Similarity.ivfSq8TopKScaled(sharedIvfFront(s, dir), e,
+        e.filter(col("vec_id") < QuerySetSize), "vec_id", "embedding", k = 3)
       .orderBy(col("q_id"), col("rnk"))
   }
 
@@ -303,10 +301,9 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * hash-match across engines. */
   def x74_sim_topk_pq(s: SparkSession, dir: String): DataFrame = {
     val e = Tables.embeddings(s, dir)
-    Similarity.pqTopK(e, e.filter(col("vec_id") < QuerySetSize),
-        "vec_id", "embedding", k = 3, m = PqM, codes = PqCodes,
-        lloydRounds = PqLloydRounds, dims = EmbeddingDims,
-        pqState = Some(sharedPqState(s, dir)))
+    Similarity.pqTopK(sharedPqState(s, dir),
+        e.filter(col("vec_id") < QuerySetSize), "vec_id", k = 3, m = PqM,
+        codes = PqCodes)
       .orderBy(col("q_id"), col("rnk"))
   }
 
@@ -326,8 +323,7 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     val e = Tables.embeddings(s, dir)
     Similarity.pqTopKRefined(e, e.filter(col("vec_id") < QuerySetSize),
         "vec_id", "embedding", k = 3, shortlist = PqShortlist, m = PqM,
-        codes = PqCodes, lloydRounds = PqLloydRounds, dims = EmbeddingDims,
-        pqState = Some(sharedPqState(s, dir)))
+        codes = PqCodes, pqState = sharedPqState(s, dir))
       .orderBy(col("q_id"), col("rnk"))
   }
 
@@ -348,8 +344,7 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     val e = Tables.embeddings(s, dir)
     Similarity.ivfPqTopK(sharedIvfFront(s, dir),
         e.filter(col("vec_id") < QuerySetSize), "vec_id", k = 3, m = PqM,
-        codes = PqCodes, pqLloydRounds = PqLloydRounds, dims = EmbeddingDims,
-        pqState = Some(sharedPqState(s, dir)))
+        codes = PqCodes, pqState = sharedPqState(s, dir))
       .orderBy(col("q_id"), col("rnk"))
   }
 
@@ -368,8 +363,8 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     val e = Tables.embeddings(s, dir)
     Similarity.ivfPqResidualTopK(sharedIvfFront(s, dir),
         e.filter(col("vec_id") < QuerySetSize), "vec_id", k = 3, m = PqM,
-        codes = PqCodes, pqLloydRounds = PqLloydRounds, dims = EmbeddingDims,
-        pqState = Some(sharedResidualPqState(s, dir)))
+        codes = PqCodes, dims = EmbeddingDims,
+        pqState = sharedResidualPqState(s, dir))
       .orderBy(col("q_id"), col("rnk"))
   }
 
@@ -395,8 +390,7 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * exactly the SemDeDup partition behavior: components never CROSS a
     * planted boundary, which is the property purity measures.) */
   def x95_planted_purity(s: SparkSession, dir: String): DataFrame = {
-    val pe = graft.ext.Planted.vectors(
-      Tables.embeddings(s, dir).select(col("vec_id")), "vec_id")
+    val pe = plantedEmbs(s, dir)
     bandedMutualCcLabels(s, dir, pe, "planted")
       .select(col("v").as("vec_id"), col("label").as("canonical_id"))
       .join(pe.select(col("vec_id"), col("label").as("planted_label")),
@@ -420,9 +414,7 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * from a verdict into a measured two-sided fact: ~1 % at
     * sub-collision cosines, 100 % inside its regime. */
   def x96_planted_knn_recall(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphRecall(
-        graft.ext.Planted.vectors(
-          Tables.embeddings(s, dir).select(col("vec_id")), "vec_id"),
+    Similarity.knnGraphRecall(plantedEmbs(s, dir),
         "vec_id", "embedding", k = KnnGraphK, bands = SampledBands,
         bitsPerBand = SampledBandBits, dims = EmbeddingDims,
         seed = SampledSeed)
@@ -438,17 +430,12 @@ private[queries] trait ExtAnnGates { this: ExtCore =>
     * cells always include its true neighbors' cell; the 26–30 % the
     * probe budget loses on i.i.d. vectors is boundary loss that planted
     * structure simply does not have. */
-  def x97_planted_ivf_recall(s: SparkSession, dir: String): DataFrame = {
-    val pe = graft.ext.Planted.vectors(
-      Tables.embeddings(s, dir).select(col("vec_id")), "vec_id")
-    Similarity.graphEdgesRecall(pe,
-        Similarity.knnGraphIvf(pe, "vec_id", "embedding", k = KnnGraphK,
-          cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-          nprobe = ScaledNprobe, maxCellSize = Some(KnnCellCap),
-          cellStats = Some(plantedCellStats(s, dir))),
+  def x97_planted_ivf_recall(s: SparkSession, dir: String): DataFrame =
+    Similarity.graphEdgesRecall(plantedEmbs(s, dir),
+        Similarity.knnGraphIvf(plantedIvfFront(s, dir), k = KnnGraphK,
+          maxCellSize = Some(KnnCellCap), assertUnderCap = false),
         "vec_id", "embedding", k = KnnGraphK, hitsCol = "hits_ivf")
       .orderBy(col("src_id"))
-  }
 
 
   /** Three-way coarse-quantizer recall table (x71): per query, the exact

@@ -897,7 +897,7 @@ private[queries] trait ExtBase { this: ExtCore =>
   /** The depth-2 residual recursion, oracle side (x107) — mirrors
     * [[graft.ext.Similarity.CellFence.residualScoredDeep]] at
     * maxDepth = 3 (public depth = 2) composed into
-    * [[graft.ext.Similarity.knnGraphIvfResidual]], over the planted
+    * [[graft.ext.Similarity.knnGraphIvfResidualDeep]], over the planted
     * corpus CTE `pe` at the MERGED-mode coarse geometry
     * ([[PlantedDeepCoarse]] cells, [[PlantedDeepNprobe]] probes).
     * Stage by stage: coarse chain → under-cap exact emit (`emit0`, the

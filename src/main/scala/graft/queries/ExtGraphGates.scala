@@ -218,11 +218,21 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * (n=20k cap=1000: 0.60× candidates, 66× count job, 4.8× build,
     * recall 0.959→0.74 — the probe-budget trade, PLANS.md). */
   def x101_knn_graph_residual(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvfResidual(sharedIvfFront(s, dir), k = KnnGraphK,
-        lloydRounds = ScaledLloydRounds, maxCellSize = KnnCellCap,
-        subCells = ResidualSubCells, subNprobe = ResidualSubNprobe,
-        assertUnderCap = true, depth = 1, subStats = None)
+    residualGraph(sharedIvfFront(s, dir))
       .orderBy(col("src_id"), col("rnk"))
+
+  /** The under-cap residual-fenced graph over `front` at x101's
+    * sub-quantizer geometry (x101, x104). Its sub state is read from the
+    * front: with no cell past [[KnnCellCap]],
+    * [[Similarity.residualSubStats]] returns None from the driver-held
+    * cell sizes, with no job; a cell past it trains the sub state before
+    * the guard throws. */
+  private def residualGraph(front: Similarity.IvfFront): DataFrame =
+    Similarity.knnGraphIvfResidual(front, k = KnnGraphK,
+      maxCellSize = KnnCellCap, subNprobe = ResidualSubNprobe,
+      assertUnderCap = true,
+      subStats = Similarity.residualSubStats(front, ScaledLloydRounds,
+        KnnCellCap, ResidualSubCells))
 
 
   // ---- x102–x104: planted relevance for the graph family (round 13) -------
@@ -265,6 +275,19 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
         ScaledCells, ScaledLloydRounds)
     }
 
+  /** The IVF front over the twin-augmented corpus probed against
+    * [[twinCellStats]] (the [[sharedIvfFront]] discipline): x102–x104
+    * read it, and its cell sizes are collected while it is built, so no
+    * consumer call starts a job or fills a cache for it. */
+  private[queries] def twinIvfFront(s: SparkSession, dir: String)
+      : Similarity.IvfFront =
+    ExtCaches.anchor("twinIvfFront", s, dir) {
+      val front = Similarity.ivfFront(twinEmbCorpus(s, dir)._1, "vec_id",
+        "embedding", twinCellStats(s, dir), ScaledNprobe)
+      front.cellSizes
+      front
+    }
+
   /** Twin-corpus PQ codebooks + codes (the sharedPqState discipline for
     * the twin universe): x98's IVF×PQ arm trains the same joint-Lloyd
     * chain over the same values — under its own orphan guard, which
@@ -279,15 +302,30 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
         PqM, PqCodes, PqLloydRounds, EmbeddingDims)
     }
 
+  /** The planted corpus (x95–x97, x106, x107): [[graft.ext.Planted]]
+    * vectors over the embedding ids. */
+  private[queries] def plantedEmbs(s: SparkSession, dir: String): DataFrame =
+    graft.ext.Planted.vectors(
+      Tables.embeddings(s, dir).select(col("vec_id")), "vec_id")
+
   /** The planted-corpus twin of [[twinCellStats]]. */
   private[queries] def plantedCellStats(s: SparkSession, dir: String): DataFrame =
     ExtCaches.anchor("plantedCellStats", s, dir) {
-      val pe = graft.ext.Planted.vectors(
-        Tables.embeddings(s, dir).select(col("vec_id")), "vec_id")
       Similarity.trainedCellStats(
-        ExtCaches.persistTracked(pe.select(col("vec_id").as("id"),
-          Similarity.quantize(col("embedding")).as("v"))),
+        ExtCaches.persistTracked(plantedEmbs(s, dir).select(
+          col("vec_id").as("id"), Similarity.quantize(col("embedding")).as("v"))),
         ScaledCells, ScaledLloydRounds)
+    }
+
+  /** The planted-corpus twin of [[twinIvfFront]], probed against
+    * [[plantedCellStats]]: x97 and x106 read it. */
+  private[queries] def plantedIvfFront(s: SparkSession, dir: String)
+      : Similarity.IvfFront =
+    ExtCaches.anchor("plantedIvfFront", s, dir) {
+      val front = Similarity.ivfFront(plantedEmbs(s, dir), "vec_id",
+        "embedding", plantedCellStats(s, dir), ScaledNprobe)
+      front.cellSizes
+      front
     }
 
   /** RESIDUAL SUB-QUANTIZER state for x106 (round 17 — the r16 verdict's
@@ -301,32 +339,24 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * (CellFenceSpec's shared-vs-per-call pin covers the sub state). */
   private[queries] def plantedSubStats(s: SparkSession, dir: String)
       : Option[DataFrame] =
-    ExtCaches.anchor("plantedSubStats", s, dir) {
-      Similarity.residualSubStats(
-        graft.ext.Planted.vectors(
-          Tables.embeddings(s, dir).select(col("vec_id")), "vec_id"),
-        "vec_id", "embedding", cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        maxCellSize = PlantedFenceCap, subCells = ResidualSubCells,
-        cellStats = Some(plantedCellStats(s, dir)))
-    }
+    ExtCaches.anchor("plantedSubStats", s, dir)(
+      Similarity.residualSubStats(plantedIvfFront(s, dir), ScaledLloydRounds,
+        PlantedFenceCap, ResidualSubCells))
 
   /** Bench pre-warm for the graph family's shared anchors (the
     * warmAnnShared precedent): the Lloyd chains train eagerly on the
     * driver, so invoking the builders materializes every trained state. */
   def warmGraphShared(s: SparkSession, dir: String): Unit =
-    // Three independent trainings; x106's residual sub-quantizer consumes
-    // plantedCellStats and rides its chain. The twin-corpus quantized
-    // scan is value-shared by chains 1 and 3 — a concurrent first fill
-    // may compute a partition twice (the persistEager race note), which
-    // costs one cheap projection pass and buys overlapping the three
-    // Lloyd chains' serial job strings.
+    // Three independent trainings; each front rides its cells' chain, and
+    // x106's residual sub-quantizer reads the planted front. The
+    // twin-corpus quantized scan is value-shared by chains 1 and 3 — a
+    // concurrent first fill may compute a partition twice (the
+    // persistEager race note), which costs one cheap projection pass and
+    // buys overlapping the three Lloyd chains' serial job strings.
     ExtCaches.warmChains(
-      "twinCellStats" -> (() => twinCellStats(s, dir)),
-      "plantedCellStats+plantedSubStats" -> { () =>
-        plantedCellStats(s, dir)
-        plantedSubStats(s, dir)
-      },
+      "twinCellStats+twinIvfFront" -> (() => twinIvfFront(s, dir)),
+      "plantedCellStats+plantedIvfFront+plantedSubStats" -> (() =>
+        plantedSubStats(s, dir)),
       "twinPqState" -> (() => twinPqState(s, dir)._1.count()))
 
 
@@ -338,15 +368,11 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * recall audit says how much of the exact graph the probes keep;
     * this says whether the edges a curation pipeline consumes surface
     * the KNOWN-relevant neighbor. */
-  def x102_graph_relevance_ivf(s: SparkSession, dir: String): DataFrame = {
-    val (u, q) = twinEmbCorpus(s, dir)
+  def x102_graph_relevance_ivf(s: SparkSession, dir: String): DataFrame =
     graft.ext.Relevance.graphHitsAtK("1_ivf",
-      Similarity.knnGraphIvf(u, "vec_id", "embedding", k = KnnGraphK,
-        cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-        nprobe = ScaledNprobe, maxCellSize = Some(KnnCellCap),
-        assertUnderCap = true, cellStats = Some(twinCellStats(s, dir))),
-      q, "vec_id", KnnGraphK)
-  }
+      Similarity.knnGraphIvf(twinIvfFront(s, dir), k = KnnGraphK,
+        maxCellSize = Some(KnnCellCap), assertUnderCap = true),
+      twinEmbCorpus(s, dir)._2, "vec_id", KnnGraphK)
 
 
   /** Planted relevance of the SQ8-shortlist graph (x103) — x93's
@@ -357,11 +383,9 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   def x103_graph_relevance_sq8(s: SparkSession, dir: String): DataFrame = {
     val (u, q) = twinEmbCorpus(s, dir)
     graft.ext.Relevance.graphHitsAtK("2_ivf_sq8",
-      Similarity.knnGraphIvfSq8(u, "vec_id", "embedding", k = KnnGraphK,
-        cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-        nprobe = ScaledNprobe, shortlist = KnnShortlist,
-        maxCellSize = Some(KnnCellCap), assertUnderCap = true,
-        cellStats = Some(twinCellStats(s, dir))),
+      Similarity.knnGraphIvfSq8(twinIvfFront(s, dir), u, "vec_id",
+        "embedding", k = KnnGraphK, shortlist = KnnShortlist,
+        maxCellSize = Some(KnnCellCap), assertUnderCap = true),
       q, "vec_id", KnnGraphK)
   }
 
@@ -374,17 +398,10 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * the arm label changed; the overflow branch's relevance is priced
     * on the planted corpus in PlantedFenceSpec. */
   def x104_graph_relevance_residual(s: SparkSession, dir: String)
-      : DataFrame = {
-    val (u, q) = twinEmbCorpus(s, dir)
+      : DataFrame =
     graft.ext.Relevance.graphHitsAtK("3_residual",
-      Similarity.knnGraphIvfResidual(u, "vec_id", "embedding",
-        k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        maxCellSize = KnnCellCap, subCells = ResidualSubCells,
-        subNprobe = ResidualSubNprobe, assertUnderCap = true,
-        cellStats = Some(twinCellStats(s, dir))),
-      q, "vec_id", KnnGraphK)
-  }
+      residualGraph(twinIvfFront(s, dir)), twinEmbCorpus(s, dir)._2,
+      "vec_id", KnnGraphK)
 
 
   /** Cell cap for the planted-fence gate — BELOW the planted cluster
@@ -410,15 +427,9 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * hash gate proves the overflow algebra cross-engine at all three
     * SFs — the branch PlantedFenceSpec could only spec-pin before. */
   def x106_planted_fence_residual(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvfResidual(
-      graft.ext.Planted.vectors(
-        Tables.embeddings(s, dir).select(col("vec_id")), "vec_id"),
-      "vec_id", "embedding", k = KnnGraphK, cells = ScaledCells,
-      lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-      maxCellSize = PlantedFenceCap, subCells = ResidualSubCells,
-      subNprobe = ResidualSubNprobe,
-      cellStats = Some(plantedCellStats(s, dir)),
-      subStats = plantedSubStats(s, dir))
+    Similarity.knnGraphIvfResidual(plantedIvfFront(s, dir), k = KnnGraphK,
+        maxCellSize = PlantedFenceCap, subNprobe = ResidualSubNprobe,
+        assertUnderCap = false, subStats = plantedSubStats(s, dir))
       .orderBy(col("src_id"), col("rnk"))
 
 
@@ -436,7 +447,7 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
 
   /** Depth-2 residual recursion, oracle-gated end to end (x107) — the
     * last spec-only branch promoted to a registry gate (round-12 weak
-    * #2's explicit residue): [[Similarity.knnGraphIvfResidual]] at
+    * #2's explicit residue): [[Similarity.knnGraphIvfResidualDeep]] at
     * `depth = 2` over the planted corpus in MERGED-mode geometry
     * ([[PlantedDeepCoarse]]), cap far below cluster size, so the
     * static two-level loop runs in full — level-1 global sub-Lloyd
@@ -449,13 +460,12 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     * partition, the final DISTINCT — is cross-engine-proven at all
     * three SFs. */
   def x107_planted_fence_deep(s: SparkSession, dir: String): DataFrame =
-    Similarity.knnGraphIvfResidual(
-      graft.ext.Planted.vectors(
-        Tables.embeddings(s, dir).select(col("vec_id")), "vec_id"),
-      "vec_id", "embedding", k = KnnGraphK, cells = PlantedDeepCoarse,
-      lloydRounds = ScaledLloydRounds, nprobe = PlantedDeepNprobe,
-      maxCellSize = PlantedFenceCap, subCells = ResidualSubCells,
-      subNprobe = ResidualSubNprobe, depth = 2)
+    Similarity.knnGraphIvfResidualDeep(
+        Similarity.trainedIvfFront(plantedEmbs(s, dir), "vec_id", "embedding",
+          PlantedDeepCoarse, ScaledLloydRounds, PlantedDeepNprobe),
+        k = KnnGraphK, lloydRounds = ScaledLloydRounds,
+        maxCellSize = PlantedFenceCap, subCells = ResidualSubCells,
+        subNprobe = ResidualSubNprobe, depth = 2)
       .orderBy(col("src_id"), col("rnk"))
 
 
@@ -535,8 +545,9 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
   /** Incremental graph fold-in, oracle-gated END TO END (x99) — the
     * round-12 stretch upgraded from a spec to a registry gate: the
     * ENGINE runs the full incremental maintenance path (build the
-    * stored base graph under a base-trained frozen quantizer —
-    * [[graft.ext.Similarity.knnGraphIvfFrozen]] — then fold the held-out
+    * stored base graph under a base-trained frozen quantizer — the
+    * unfenced [[graft.ext.Similarity.knnGraphIvf]] over the base slice's
+    * front — then fold the held-out
     * batch in via [[graft.ext.Similarity.knnGraphIvfFoldIn]], never
     * rescoring base×base), while the ORACLE computes the FRESH
     * frozen-quantizer build over the union in DuckDB. The hash gate
@@ -567,15 +578,14 @@ private[queries] trait ExtGraphGates { this: ExtCore =>
     // every action re-ran the whole base build's cell join + rank tower
     // under the fold-in's final rank. The plan now roots the fold-in on
     // ONE ranked-base subtree (InMemoryRelation) — the r16 verdict's #4.
-    val stored = ExtCaches.persistTracked(
-      Similarity.knnGraphIvfFrozen(base, base, "vec_id",
-        "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        cellStats = Some(baseStats)))
-    Similarity.knnGraphIvfFoldIn(stored, base, e.filter(!inBase),
-        "vec_id", "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-        cellStats = Some(baseStats))
+    // The stored build and the fold-in read one front of the base slice:
+    // its normed vectors and probes persist once per call.
+    val front = Similarity.ivfFront(base, "vec_id", "embedding", baseStats,
+      ScaledNprobe)
+    val stored = ExtCaches.persistTracked(Similarity.knnGraphIvf(front,
+      k = KnnGraphK, maxCellSize = None, assertUnderCap = false))
+    Similarity.knnGraphIvfFoldIn(stored, front, e.filter(!inBase),
+        "vec_id", "embedding", k = KnnGraphK)
       .orderBy(col("src_id"), col("rnk"))
   }
 

@@ -89,10 +89,9 @@ private[queries] trait ExtRetrievalGates { this: ExtCore =>
         "doc_id", "text", "vec_id", "embedding",
         armK = HybridArmK, k = HybridTopK, rrfC = RrfC,
         denseArm = (corpus, queries, armK) =>
-          Similarity.ivfSq8TopKScaled(corpus, queries, "id", "vec",
-              k = armK, cells = ScaledCells,
-              lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-              cellStats = Some(sharedCellStats(s, dir)))
+          Similarity.ivfSq8TopKScaled(Similarity.ivfFront(corpus, "id",
+              "vec", sharedCellStats(s, dir), ScaledNprobe), corpus, queries,
+              "id", "vec", k = armK)
             .select(col("q_id"), col("c_id").as("id"),
               col("rnk").as("vec_rnk")))
       .crossJoin(orphanGuard(docs, embs, "x84"))
@@ -120,13 +119,10 @@ private[queries] trait ExtRetrievalGates { this: ExtCore =>
         "doc_id", "text", "vec_id", "embedding",
         armK = HybridArmK, k = HybridTopK, rrfC = RrfC,
         denseArm = (corpus, queries, armK) =>
-          Similarity.ivfPqTopK(corpus, queries, "id", "vec",
-              k = armK, cells = ScaledCells,
-              cellLloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe,
-              m = PqM, codes = PqCodes, pqLloydRounds = PqLloydRounds,
-              dims = EmbeddingDims,
-              cellStats = Some(sharedCellStats(s, dir)),
-              pqState = Some(sharedPqState(s, dir)))
+          Similarity.ivfPqTopK(Similarity.ivfFront(corpus, "id", "vec",
+              sharedCellStats(s, dir), ScaledNprobe), queries, "id",
+              k = armK, m = PqM, codes = PqCodes,
+              pqState = sharedPqState(s, dir))
             .select(col("q_id"), col("c_id").as("id"),
               col("rnk").as("vec_rnk")))
       .crossJoin(orphanGuard(docs, embs, "x88"))
@@ -228,19 +224,15 @@ private[queries] trait ExtRetrievalGates { this: ExtCore =>
     // Training is deterministic exact-integer Lloyd, so sharing with
     // x102/x103/x104 changes cost, never results; previously this gate
     // re-trained both chains per invocation.
-    val sharedStats = twinCellStats(s, dir)
+    def front(corpus: DataFrame) = Similarity.ivfFront(corpus, "id", "vec",
+      twinCellStats(s, dir), ScaledNprobe)
     val sq8Arm: Retrieval.DenseArm = (corpus, qv, armK) =>
-      Similarity.ivfSq8TopKScaled(corpus, qv, "id", "vec", k = armK,
-          cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-          nprobe = ScaledNprobe, cellStats = Some(sharedStats))
+      Similarity.ivfSq8TopKScaled(front(corpus), corpus, qv, "id", "vec",
+          k = armK)
         .select(col("q_id"), col("c_id").as("id"), col("rnk").as("vec_rnk"))
     val pqArm: Retrieval.DenseArm = (corpus, qv, armK) =>
-      Similarity.ivfPqTopK(corpus, qv, "id", "vec", k = armK,
-          cells = ScaledCells, cellLloydRounds = ScaledLloydRounds,
-          nprobe = ScaledNprobe, m = PqM, codes = PqCodes,
-          pqLloydRounds = PqLloydRounds, dims = EmbeddingDims,
-          cellStats = Some(sharedStats),
-          pqState = Some(twinPqState(s, dir)))
+      Similarity.ivfPqTopK(front(corpus), qv, "id", k = armK, m = PqM,
+          codes = PqCodes, pqState = twinPqState(s, dir))
         .select(col("q_id"), col("c_id").as("id"), col("rnk").as("vec_rnk"))
     // ONE multi-arm rank pass (round 17 — the r16 verdict's #5): the
     // four fusions previously ran one full-outer join + rank window +

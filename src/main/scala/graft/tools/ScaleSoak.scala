@@ -195,6 +195,14 @@ object ScaleSoak {
     //    x14's raw-raster codecs (deflate is real work).
     "x115_curate_pack", "x110c_bpe_byte_merges", "x14b_multimodal_png")
 
+  /** The self-trained front of the soak's IVF graph rows: `cells` cells
+    * trained over the soak corpus at the registry's Lloyd rounds and
+    * probe budget. */
+  private def soakFront(e: DataFrame, cells: Int) =
+    graft.ext.Similarity.trainedIvfFront(e, "vec_id", "embedding", cells,
+      graft.queries.Extensions.ScaledLloydRounds,
+      graft.queries.Extensions.ScaledNprobe)
+
   /** Soak-only variants (not registry queries): the scaled x05 geometry —
     * 16 bands × 16 bits sampled from the sign signature (65k-key space)
     * instead of the registry's 8 disjoint 8-bit slices (256 keys). Same
@@ -251,10 +259,9 @@ object ScaleSoak {
       val e = graft.tables.Tables.embeddings(s, dir)
       val cells = math.max(32, math.round(
         32.0 * math.sqrt(e.count().toDouble / 2000.0)).toInt)
-      graft.ext.Similarity.knnGraphIvf(e, "vec_id", "embedding",
-        k = graft.queries.Extensions.KnnGraphK, cells = cells,
-        lloydRounds = graft.queries.Extensions.ScaledLloydRounds,
-        nprobe = graft.queries.Extensions.ScaledNprobe)
+      graft.ext.Similarity.knnGraphIvf(soakFront(e, cells),
+        k = graft.queries.Extensions.KnnGraphK, maxCellSize = None,
+        assertUnderCap = false)
         .orderBy(col("src_id"), col("rnk"))
     }),
     // Round-12: the registry x89/x93 now carry the KnnCellCap fence +
@@ -267,20 +274,19 @@ object ScaleSoak {
     // priced by the x59 banded-fallback soak rows it reuses.
     "x89_knn_graph_ivf" -> ((s: SparkSession, dir: String) =>
       graft.ext.Similarity.knnGraphIvf(
-        graft.tables.Tables.embeddings(s, dir), "vec_id", "embedding",
-        k = graft.queries.Extensions.KnnGraphK,
-        cells = graft.queries.Extensions.ScaledCells,
-        lloydRounds = graft.queries.Extensions.ScaledLloydRounds,
-        nprobe = graft.queries.Extensions.ScaledNprobe)
+        soakFront(graft.tables.Tables.embeddings(s, dir),
+          graft.queries.Extensions.ScaledCells),
+        k = graft.queries.Extensions.KnnGraphK, maxCellSize = None,
+        assertUnderCap = false)
         .orderBy(col("src_id"), col("rnk"))),
     "x93_knn_graph_ivf_sq8" -> ((s: SparkSession, dir: String) =>
       graft.ext.Similarity.knnGraphIvfSq8(
+        soakFront(graft.tables.Tables.embeddings(s, dir),
+          graft.queries.Extensions.ScaledCells),
         graft.tables.Tables.embeddings(s, dir), "vec_id", "embedding",
         k = graft.queries.Extensions.KnnGraphK,
-        cells = graft.queries.Extensions.ScaledCells,
-        lloydRounds = graft.queries.Extensions.ScaledLloydRounds,
-        nprobe = graft.queries.Extensions.ScaledNprobe,
-        shortlist = graft.queries.Extensions.KnnShortlist)
+        shortlist = graft.queries.Extensions.KnnShortlist,
+        maxCellSize = None, assertUnderCap = false)
         .orderBy(col("src_id"), col("rnk"))),
     // x93 under the FAISS-practice cell scaling — the x89_cells_sqrtn
     // geometry applied to the SQ8-shortlist build (round-12 verdict #5):
@@ -289,11 +295,10 @@ object ScaleSoak {
       val e = graft.tables.Tables.embeddings(s, dir)
       val cells = math.max(32, math.round(
         32.0 * math.sqrt(e.count().toDouble / 2000.0)).toInt)
-      graft.ext.Similarity.knnGraphIvfSq8(e, "vec_id", "embedding",
-        k = graft.queries.Extensions.KnnGraphK, cells = cells,
-        lloydRounds = graft.queries.Extensions.ScaledLloydRounds,
-        nprobe = graft.queries.Extensions.ScaledNprobe,
-        shortlist = graft.queries.Extensions.KnnShortlist)
+      graft.ext.Similarity.knnGraphIvfSq8(soakFront(e, cells), e, "vec_id",
+        "embedding", k = graft.queries.Extensions.KnnGraphK,
+        shortlist = graft.queries.Extensions.KnnShortlist,
+        maxCellSize = None, assertUnderCap = false)
         .orderBy(col("src_id"), col("rnk"))
     }),
     // x44 at 4,096 shards (3 hex chars): the "shard count is the

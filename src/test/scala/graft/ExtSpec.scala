@@ -2487,14 +2487,25 @@ class CellFenceSpec extends SparkSpec {
     df.collect().map(r =>
       (r.getAs[Long]("src_id"), r.getAs[Long]("nbr_id"))).toSet
 
+  /** The spec geometry's front: 2 cells trained over `df` itself. */
+  private def front(df: org.apache.spark.sql.DataFrame) =
+    Similarity.trainedIvfFront(df, "vec_id", "embedding", cells = 2,
+      lloydRounds = 1, nprobe = 2)
+
+  /** The residual graph with the sub-quantizer trained over `f`. */
+  private def residual(f: Similarity.IvfFront) =
+    Similarity.knnGraphIvfResidual(f, k = 3, maxCellSize = 20, subNprobe = 2,
+      assertUnderCap = false,
+      subStats = Similarity.residualSubStats(f, lloydRounds = 1,
+        maxCellSize = 20, subCells = 4))
+
   test("fence: oversized cell switches to banded candidates; under-cap cells and colliding neighbors keep exact semantics") {
     val df = corpus
-    val unfenced = edges(Similarity.knnGraphIvf(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2))
+    val unfenced = edges(Similarity.knnGraphIvf(front(df), k = 3,
+      maxCellSize = None, assertUnderCap = false))
     graft.ext.ExtCaches.clearCaches()
-    val fenced = edges(Similarity.knnGraphIvf(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = Some(20)))
+    val fenced = edges(Similarity.knnGraphIvf(front(df), k = 3,
+      maxCellSize = Some(20), assertUnderCap = false))
     graft.ext.ExtCaches.clearCaches()
     val bIds = (4 until 100 by 2).map(_.toLong).toSet
     // the degenerate cell really is fenced: node 0 (subgroup A) sees B
@@ -2512,9 +2523,8 @@ class CellFenceSpec extends SparkSpec {
     assert(bFenced == bUnfenced,
       s"fence changed B rows: ${(bFenced diff bUnfenced) ++ (bUnfenced diff bFenced)}")
     // a cap above every cell is a no-op: exact equality with unfenced
-    val fencedHigh = edges(Similarity.knnGraphIvf(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = Some(64)))
+    val fencedHigh = edges(Similarity.knnGraphIvf(front(df), k = 3,
+      maxCellSize = Some(64), assertUnderCap = false))
     graft.ext.ExtCaches.clearCaches()
     assert(fencedHigh == unfenced)
   }
@@ -2522,18 +2532,17 @@ class CellFenceSpec extends SparkSpec {
   test("fence: the SQ8-shortlist builder takes the same fence; guard fails loudly past the cap") {
     val df = corpus
     val bIds = (4 until 100 by 2).map(_.toLong).toSet
-    val fenced8 = edges(Similarity.knnGraphIvfSq8(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2, shortlist = 10,
-      maxCellSize = Some(20)))
+    val fenced8 = edges(Similarity.knnGraphIvfSq8(front(df), df, "vec_id",
+      "embedding", k = 3, shortlist = 10, maxCellSize = Some(20),
+      assertUnderCap = false))
     graft.ext.ExtCaches.clearCaches()
     assert(!fenced8.exists { case (s, n) => s == 0L && bIds(n) },
       "fenced sq8 node 0 must not see non-colliding B members")
     assert(fenced8((0L, 2L)))
     // the registry form's driver-side guard: a collapsed cell fails by name
     val e = intercept[Exception] {
-      Similarity.knnGraphIvf(df, "vec_id", "embedding",
-        k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-        maxCellSize = Some(20), assertUnderCap = true).collect()
+      Similarity.knnGraphIvf(front(df), k = 3, maxCellSize = Some(20),
+        assertUnderCap = true).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => x.getMessage +: messages(x.getCause))
@@ -2553,37 +2562,31 @@ class CellFenceSpec extends SparkSpec {
     val df = corpus
     def rows(g: org.apache.spark.sql.DataFrame) =
       g.orderBy(col("src_id"), col("rnk")).collect().toSeq
-    val selfIvf = rows(Similarity.knnGraphIvf(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2))
-    graft.ext.ExtCaches.clearCaches()
-    val anchor = Similarity.trainedCellStats(
+    def anchored(stats: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfFront(df, "vec_id", "embedding", stats, nprobe = 2)
+    def trainedAnchor() = Similarity.trainedCellStats(
       graft.ext.ExtCaches.persistTracked(df.select(col("vec_id").as("id"),
         Similarity.quantize(col("embedding")).as("v"))),
       cells = 2, lloydRounds = 1)
-    val sharedIvf = rows(Similarity.knnGraphIvf(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      cellStats = Some(anchor)))
-    assert(sharedIvf == selfIvf, "shared-stats IVF graph diverged")
-    val sharedSq8 = rows(Similarity.knnGraphIvfSq8(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2, shortlist = 10,
-      cellStats = Some(anchor)))
+    val selfIvf = rows(Similarity.knnGraphIvf(front(df), k = 3,
+      maxCellSize = None, assertUnderCap = false))
     graft.ext.ExtCaches.clearCaches()
-    val selfSq8 = rows(Similarity.knnGraphIvfSq8(df, "vec_id", "embedding",
-      k = 3, cells = 2, lloydRounds = 1, nprobe = 2, shortlist = 10))
+    val anchor = trainedAnchor()
+    val sharedIvf = rows(Similarity.knnGraphIvf(anchored(anchor), k = 3,
+      maxCellSize = None, assertUnderCap = false))
+    assert(sharedIvf == selfIvf, "shared-stats IVF graph diverged")
+    val sharedSq8 = rows(Similarity.knnGraphIvfSq8(anchored(anchor), df,
+      "vec_id", "embedding", k = 3, shortlist = 10, maxCellSize = None,
+      assertUnderCap = false))
+    graft.ext.ExtCaches.clearCaches()
+    val selfSq8 = rows(Similarity.knnGraphIvfSq8(front(df), df, "vec_id",
+      "embedding", k = 3, shortlist = 10, maxCellSize = None,
+      assertUnderCap = false))
     assert(sharedSq8 == selfSq8, "shared-stats SQ8 graph diverged")
     graft.ext.ExtCaches.clearCaches()
-    val selfRes = rows(Similarity.knnGraphIvfResidual(df, "vec_id",
-      "embedding", k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = 20, subCells = 4, subNprobe = 2))
+    val selfRes = rows(residual(front(df)))
     graft.ext.ExtCaches.clearCaches()
-    val anchor2 = Similarity.trainedCellStats(
-      graft.ext.ExtCaches.persistTracked(df.select(col("vec_id").as("id"),
-        Similarity.quantize(col("embedding")).as("v"))),
-      cells = 2, lloydRounds = 1)
-    val sharedRes = rows(Similarity.knnGraphIvfResidual(df, "vec_id",
-      "embedding", k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = 20, subCells = 4, subNprobe = 2,
-      cellStats = Some(anchor2)))
+    val sharedRes = rows(residual(anchored(trainedAnchor())))
     assert(sharedRes == selfRes, "shared-stats residual graph diverged")
     graft.ext.ExtCaches.clearCaches()
   }
@@ -2596,27 +2599,30 @@ class CellFenceSpec extends SparkSpec {
     val df = corpus
     def rows(g: org.apache.spark.sql.DataFrame) =
       g.orderBy(col("src_id"), col("rnk")).collect().toSeq
-    val selfRes = rows(Similarity.knnGraphIvfResidual(df, "vec_id",
-      "embedding", k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = 20, subCells = 4, subNprobe = 2))
+    val selfRes = rows(residual(front(df)))
     graft.ext.ExtCaches.clearCaches()
     val anchor = Similarity.trainedCellStats(
       graft.ext.ExtCaches.persistTracked(df.select(col("vec_id").as("id"),
         Similarity.quantize(col("embedding")).as("v"))),
       cells = 2, lloydRounds = 1)
-    val sub = Similarity.residualSubStats(df, "vec_id", "embedding",
-      cells = 2, lloydRounds = 1, nprobe = 2, maxCellSize = 20,
-      subCells = 4, cellStats = Some(anchor))
+    val shared = Similarity.ivfFront(df, "vec_id", "embedding", anchor,
+      nprobe = 2)
+    val sub = Similarity.residualSubStats(shared, lloydRounds = 1,
+      maxCellSize = 20, subCells = 4)
     assert(sub.nonEmpty, "spec corpus must overflow the cap (fence active)")
-    val sharedRes = rows(Similarity.knnGraphIvfResidual(df, "vec_id",
-      "embedding", k = 3, cells = 2, lloydRounds = 1, nprobe = 2,
-      maxCellSize = 20, subCells = 4, subNprobe = 2,
-      cellStats = Some(anchor), subStats = sub))
+    val sharedRes = rows(Similarity.knnGraphIvfResidual(shared, k = 3,
+      maxCellSize = 20, subNprobe = 2, assertUnderCap = false,
+      subStats = sub))
     assert(sharedRes == selfRes, "shared subStats residual graph diverged")
+    // an oversized cell with no sub state fails by name
+    val e = intercept[IllegalArgumentException](
+      Similarity.knnGraphIvfResidual(shared, k = 3, maxCellSize = 20,
+        subNprobe = 2, assertUnderCap = false, subStats = None))
+    assert(e.getMessage.contains("no sub-quantizer state"), e.getMessage)
     // an UNFENCED geometry returns None — callers pass it straight through
-    assert(Similarity.residualSubStats(df, "vec_id", "embedding",
-      cells = 2, lloydRounds = 1, nprobe = 2, maxCellSize = 64,
-      subCells = 4).isEmpty, "no-overflow geometry must yield None")
+    assert(Similarity.residualSubStats(front(df), lloydRounds = 1,
+      maxCellSize = 64, subCells = 4).isEmpty,
+      "no-overflow geometry must yield None")
     graft.ext.ExtCaches.clearCaches()
   }
 }
@@ -2639,21 +2645,20 @@ class ResidualPqAnchorSpec extends SparkSpec {
     val queries = df.filter(col("vec_id") < 3)
     def rows(g: org.apache.spark.sql.DataFrame) =
       g.orderBy(col("q_id"), col("rnk")).collect().toSeq
-    val self = rows(Similarity.ivfPqResidualTopK(df, queries, "vec_id",
-      "embedding", k = 3, cells = 4, cellLloydRounds = 1, nprobe = 2,
-      m = 8, codes = 4, pqLloydRounds = 1, dims = 64))
+    def search(front: Similarity.IvfFront) =
+      rows(Similarity.ivfPqResidualTopK(front, queries, "vec_id", k = 3,
+        m = 8, codes = 4, dims = 64,
+        pqState = Similarity.residualPqState(front, m = 8, codes = 4,
+          pqLloydRounds = 1, dims = 64)))
+    val self = search(Similarity.trainedIvfFront(df, "vec_id", "embedding",
+      cells = 4, lloydRounds = 1, nprobe = 2))
     graft.ext.ExtCaches.clearCaches()
     val anchor = Similarity.trainedCellStats(
       graft.ext.ExtCaches.persistTracked(df.select(col("vec_id").as("id"),
         Similarity.quantize(col("embedding")).as("v"))),
       cells = 4, lloydRounds = 1)
-    val state = Similarity.residualPqState(df, "vec_id", "embedding",
-      cells = 4, cellLloydRounds = 1, nprobe = 2, m = 8, codes = 4,
-      pqLloydRounds = 1, dims = 64, cellStats = Some(anchor))
-    val shared = rows(Similarity.ivfPqResidualTopK(df, queries, "vec_id",
-      "embedding", k = 3, cells = 4, cellLloydRounds = 1, nprobe = 2,
-      m = 8, codes = 4, pqLloydRounds = 1, dims = 64,
-      cellStats = Some(anchor), pqState = Some(state)))
+    val shared = search(Similarity.ivfFront(df, "vec_id", "embedding", anchor,
+      nprobe = 2))
     assert(shared == self, "shared residual-PQ state diverged from per-call")
     graft.ext.ExtCaches.clearCaches()
   }
@@ -2683,6 +2688,11 @@ class PlantedFenceSpec extends SparkSpec {
   private def planted = Planted.vectors(
     (0L until N.toLong).toDF("vec_id"), "vec_id")
 
+  /** `pe`'s front: 10 cells trained over it, `nprobe` probes. */
+  private def front(pe: org.apache.spark.sql.DataFrame, nprobe: Int) =
+    Similarity.trainedIvfFront(pe, "vec_id", "embedding", cells = 10,
+      lloydRounds = 2, nprobe = nprobe)
+
   test("planted fallback: cohort-quadratic candidates, bucket == cohort, granularity inert, recall 1.0") {
     val pe = ExtCaches.persistTracked(planted)
     val v = Similarity.withNorm(
@@ -2691,7 +2701,7 @@ class PlantedFenceSpec extends SparkSpec {
     val q = ExtCaches.persistTracked(v.select(col("id"), col("vec").as("v")))
 
     def memberCells(cells: Int) = Similarity
-      .trainedCellProbes(q, cells, 2, 1)
+      .probesFromStats(q, Similarity.trainedCellStats(q, cells, 2), 1)
       .filter(col("probe_rank") === 1)
       .select(col("id").as("nbr_id"), col("cell"))
 
@@ -2729,8 +2739,8 @@ class PlantedFenceSpec extends SparkSpec {
 
     // -- the fence's design contract: correctness degrades gracefully
     // (same-cohort pairs all collide), cost is what collapsed above
-    val g = Similarity.knnGraphIvf(pe, "vec_id", "embedding", k = 3,
-      cells = 10, lloydRounds = 2, nprobe = 1, maxCellSize = Some(Cap))
+    val g = Similarity.knnGraphIvf(front(pe, nprobe = 1), k = 3,
+      maxCellSize = Some(Cap), assertUnderCap = false)
     val r = Similarity.graphEdgesRecall(pe, g, "vec_id", "embedding", 3)
       .agg(sum(col("hits")).as("h"), sum(col("n_exact")).as("d")).collect()(0)
     assert(r.getLong(0) == r.getLong(1),
@@ -2742,12 +2752,13 @@ class PlantedFenceSpec extends SparkSpec {
     val pe = ExtCaches.persistTracked(planted)
 
     // under-cap corpus: the residual form IS knnGraphIvf, row for row
-    val base = Similarity.knnGraphIvf(pe, "vec_id", "embedding", k = 3,
-      cells = 10, lloydRounds = 2, nprobe = 2, maxCellSize = Some(N))
-      .collect().toSet
-    val res = Similarity.knnGraphIvfResidual(pe, "vec_id", "embedding",
-      k = 3, cells = 10, lloydRounds = 2, nprobe = 2, maxCellSize = N,
-      subCells = 16, subNprobe = 4).collect().toSet
+    val base = Similarity.knnGraphIvf(front(pe, nprobe = 2), k = 3,
+      maxCellSize = Some(N), assertUnderCap = false).collect().toSet
+    val under = front(pe, nprobe = 2)
+    val res = Similarity.knnGraphIvfResidual(under, k = 3, maxCellSize = N,
+      subNprobe = 4, assertUnderCap = false,
+      subStats = Similarity.residualSubStats(under, lloydRounds = 2,
+        maxCellSize = N, subCells = 16)).collect().toSet
     assert(res == base, "no-overflow residual build must equal knnGraphIvf")
 
     // past the cap: candidates bounded below the banded cohort-quadratic
@@ -2763,15 +2774,18 @@ class PlantedFenceSpec extends SparkSpec {
     val probes = m10.select(col("nbr_id").as("src_id"), col("cell"))
     val fence = new Similarity.CellFence(m10, probes, Some(Cap))
     val banded = fence.bandedScored(v).get.count()
-    val residual = fence.residualScored(v, stats, 16, 2, 8).get.count()
+    val residual = fence.residualScored(v, stats,
+      fence.subQuantizerStats(v, stats, 16, 2), 8).get.count()
     assert(residual < banded,
       s"residual candidates $residual not below the banded quadratic $banded")
 
     // recall follows the sub-probe budget (measured 0.94 at sub=16,
     // probe=8 on the sf0.01 twin — pin a conservative floor)
-    val g = Similarity.knnGraphIvfResidual(pe, "vec_id", "embedding",
-      k = 3, cells = 10, lloydRounds = 2, nprobe = 1, maxCellSize = Cap,
-      subCells = 16, subNprobe = 8)
+    val f = front(pe, nprobe = 1)
+    val g = Similarity.knnGraphIvfResidual(f, k = 3, maxCellSize = Cap,
+      subNprobe = 8, assertUnderCap = false,
+      subStats = Similarity.residualSubStats(f, lloydRounds = 2,
+        maxCellSize = Cap, subCells = 16))
     val r = Similarity.graphEdgesRecall(pe, g, "vec_id", "embedding", 3)
       .agg(sum(col("hits")).as("h"), sum(col("n_exact")).as("d")).collect()(0)
     assert(r.getLong(0) * 10 >= r.getLong(1) * 6,
@@ -2804,12 +2818,11 @@ class PlantedFenceSpec extends SparkSpec {
     // under-cap: depth 2 must equal knnGraphIvf exactly — this also
     // exercises the recursion's empty-training path end to end (bigK
     // empty at level 1, a Lloyd chain over zero rows, empty emits)
-    val base = Similarity.knnGraphIvf(pe, "vec_id", "embedding", k = 3,
-      cells = 10, lloydRounds = 2, nprobe = 2, maxCellSize = Some(N))
-      .collect().toSet
-    val deepOk = Similarity.knnGraphIvfResidual(pe, "vec_id", "embedding",
-      k = 3, cells = 10, lloydRounds = 2, nprobe = 2, maxCellSize = N,
-      subCells = 16, subNprobe = 4, depth = 2).collect().toSet
+    val base = Similarity.knnGraphIvf(front(pe, nprobe = 2), k = 3,
+      maxCellSize = Some(N), assertUnderCap = false).collect().toSet
+    val deepOk = Similarity.knnGraphIvfResidualDeep(front(pe, nprobe = 2),
+      k = 3, lloydRounds = 2, maxCellSize = N, subCells = 16, subNprobe = 4,
+      depth = 2).collect().toSet
     assert(deepOk == base, "no-overflow depth-2 build must equal knnGraphIvf")
 
     // past the cap: the depth-2 candidate set is a SUBSET of the
@@ -2830,7 +2843,8 @@ class PlantedFenceSpec extends SparkSpec {
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select(col("src_id"), col("nbr_id")).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val one = pairs(fence.residualScored(v, stats, 16, 2, 8).get)
+    val one = pairs(fence.residualScored(v, stats,
+      fence.subQuantizerStats(v, stats, 16, 2), 8).get)
     val two = pairs(fence.residualScoredDeep(v, stats, 16, 2, 8,
       maxDepth = 3).get)
     assert(two.subsetOf(one),
@@ -2838,9 +2852,9 @@ class PlantedFenceSpec extends SparkSpec {
 
     // recall floor at the gate-measured operating point (0.738 at
     // sf0.01 sub=32 probe=10; conservative floor at this geometry)
-    val g = Similarity.knnGraphIvfResidual(pe, "vec_id", "embedding",
-      k = 3, cells = 10, lloydRounds = 2, nprobe = 1, maxCellSize = Cap,
-      subCells = 16, subNprobe = 8, depth = 2)
+    val g = Similarity.knnGraphIvfResidualDeep(front(pe, nprobe = 1), k = 3,
+      lloydRounds = 2, maxCellSize = Cap, subCells = 16, subNprobe = 8,
+      depth = 2)
     val r = Similarity.graphEdgesRecall(pe, g, "vec_id", "embedding", 3)
       .agg(sum(col("hits")).as("h"), sum(col("n_exact")).as("d")).collect()(0)
     assert(r.getLong(0) * 2 >= r.getLong(1),
@@ -2900,12 +2914,16 @@ class PureCellCurveSpec extends SparkSpec {
     // the curve, exact: (subCells, subNprobe, candidates, hits, denom)
     for ((sub, probe, expCand, expHits) <- Seq(
         (64, 8, 3841954L, 460L), (256, 16, 1940805L, 410L))) {
-      val cand = fence.residualScored(v, stats, sub, 2, probe).get.count()
+      val cand = fence.residualScored(v, stats,
+        fence.subQuantizerStats(v, stats, sub, 2), probe).get.count()
       assert(cand == expCand,
         s"sub=$sub probe=$probe candidates $cand != $expCand")
-      val g = Similarity.knnGraphIvfResidual(pe, "vec_id", "embedding",
-        k = 3, cells = coarse, lloydRounds = 2, nprobe = 1,
-        maxCellSize = cap, subCells = sub, subNprobe = probe)
+      val f = Similarity.trainedIvfFront(pe, "vec_id", "embedding",
+        cells = coarse, lloydRounds = 2, nprobe = 1)
+      val g = Similarity.knnGraphIvfResidual(f, k = 3, maxCellSize = cap,
+        subNprobe = probe, assertUnderCap = false,
+        subStats = Similarity.residualSubStats(f, lloydRounds = 2,
+          maxCellSize = cap, subCells = sub))
       val r = Similarity.graphEdgesRecall(pe, g, "vec_id", "embedding", 3,
           nodePredicate = audit)
         .agg(sum(col("hits")).as("h"), sum(col("n_exact")).as("d"))
@@ -3007,16 +3025,29 @@ class GraphFoldInSpec extends SparkSpec {
     (r.getAs[Long]("src_id"), r.getAs[Long]("rnk"), r.getAs[Long]("nbr_id"),
       java.lang.Double.doubleToLongBits(r.getAs[Double]("cosine")))
 
-  test("knnGraphIvfFrozen(df, trainOn = df) is exactly knnGraphIvf") {
+  /** Cells trained over `trainOn` alone, as a frozen quantizer. */
+  private def frozenStats(trainOn: org.apache.spark.sql.DataFrame) =
+    Similarity.trainedCellStats(ExtCaches.persistTracked(
+      trainOn.select(col("vec_id").as("id"),
+        Similarity.quantize(col("embedding")).as("v"))),
+      ScaledCells, ScaledLloydRounds)
+
+  /** The unfenced IVF graph of `df` under the frozen quantizer `stats`. */
+  private def frozenGraph(df: org.apache.spark.sql.DataFrame,
+                          stats: org.apache.spark.sql.DataFrame) =
+    Similarity.knnGraphIvf(Similarity.ivfFront(df, "vec_id", "embedding",
+      stats, ScaledNprobe), k = KnnGraphK, maxCellSize = None,
+      assertUnderCap = false)
+
+  test("frozen cells trained on the corpus itself equal knnGraphIvf") {
     val dir = "/root/testdata/sf0.001"
     val e = graft.tables.Tables.embeddings(spark, dir)
-    val a = Similarity.knnGraphIvf(e, "vec_id", "embedding", k = KnnGraphK,
-      cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-      nprobe = ScaledNprobe).collect().map(key).toSet
+    val a = Similarity.knnGraphIvf(Similarity.trainedIvfFront(e, "vec_id",
+        "embedding", ScaledCells, ScaledLloydRounds, ScaledNprobe),
+      k = KnnGraphK, maxCellSize = None, assertUnderCap = false)
+      .collect().map(key).toSet
     ExtCaches.clearCaches()
-    val b = Similarity.knnGraphIvfFrozen(e, e, "vec_id", "embedding",
-      k = KnnGraphK, cells = ScaledCells, lloydRounds = ScaledLloydRounds,
-      nprobe = ScaledNprobe).collect().map(key).toSet
+    val b = frozenGraph(e, frozenStats(e)).collect().map(key).toSet
     assert(a == b, s"self-trained frozen form drifted: ${(a -- b).take(3)} / ${(b -- a).take(3)}")
     ExtCaches.clearCaches()
   }
@@ -3026,17 +3057,14 @@ class GraphFoldInSpec extends SparkSpec {
       val (base, batch, all) = splitEmbs(dir)
       val nBatch = batch.count()
       assert(nBatch > 0, s"$dir: hash split produced an empty batch")
-      val fresh = Similarity.knnGraphIvfFrozen(all, base, "vec_id",
-        "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe)
-        .collect().map(key).toSet
+      val fresh = frozenGraph(all, frozenStats(base)).collect().map(key).toSet
       ExtCaches.clearCaches()
-      val stored = Similarity.knnGraphIvfFrozen(base, base, "vec_id",
-        "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe)
-      val folded = Similarity.knnGraphIvfFoldIn(stored, base, batch,
-        "vec_id", "embedding", k = KnnGraphK, cells = ScaledCells,
-        lloydRounds = ScaledLloydRounds, nprobe = ScaledNprobe)
+      val front = Similarity.ivfFront(base, "vec_id", "embedding",
+        frozenStats(base), ScaledNprobe)
+      val stored = Similarity.knnGraphIvf(front, k = KnnGraphK,
+        maxCellSize = None, assertUnderCap = false)
+      val folded = Similarity.knnGraphIvfFoldIn(stored, front, batch,
+        "vec_id", "embedding", k = KnnGraphK)
         .collect().map(key).toSet
       assert(folded == fresh,
         s"$dir: fold-in diverged from the fresh build — " +
