@@ -37,7 +37,7 @@ import org.apache.spark.sql.types.{FloatType, LongType, StringType}
   *
   * The [1, 5] range is the INTEGER-KERNEL ENVELOPE, not a style choice
   * (a first cut at ±70 overflowed, caught by the sf0.1 oracle): the
-  * Lloyd chain's tScore computes dot(v, s_cell) in int64, where s_cell
+  * Lloyd chain's t score computes dot(v, s_cell) in int64, where s_cell
   * sums a cell's quantized coordinates, so |dot| ≤ members·dims·
   * (MaxVal·2^20)² = members·1.76e15 at MaxVal 5 — int64-safe to ~5,200
   * members per cell, comfortably above every gate corpus's worst cell

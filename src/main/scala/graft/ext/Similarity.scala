@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftfn.{CellKernels, CellState}
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
   StringType, StructField, StructType}
 
@@ -1177,17 +1178,16 @@ object Similarity {
     *
     * Scale shape: centroid build = ONE job of per-partition integer sums
     * merged on the driver ([[centroidFold]], order-proof) into |labels|·d
-    * cells, packed into ONE literal array column ([[packCents]]). That
-    * literal keeps the assignment a scan-speed per-row argmin over the
-    * corpus — no row amplification (the old |labels|× join fan-out is
-    * gone), no join and no shuffle touches the vectors, and the matrix
-    * aggregate reduces to at most |labels|² rows.
+    * cells, held as ONE driver value (graftfn.CellState) that a codegen'd
+    * kernel reads. That keeps the assignment a scan-speed per-row argmin
+    * over the corpus — no row amplification (the old |labels|× join
+    * fan-out is gone), no join and no shuffle touches the vectors, and
+    * the matrix aggregate reduces to at most |labels|² rows.
     *
-    * Ceiling: the literal concentrates all |labels|·(d+3) int64 cells into
+    * Ceiling: the state concentrates all |labels|·(d+3) int64 cells into
     * ONE value that every task deserializes (and the per-row argmin
-    * re-walks per vector) — see [[packCents]] for its size and the point
-    * past which it should become a broadcast variable or a |labels|-row
-    * broadcast join + groupBy-argmin. */
+    * re-walks per vector) — see CellState for its size and the bound
+    * past which it is refused. */
   def nearestCentroidPurity(df: DataFrame, idCol: String, labelCol: String,
                             vecCol: String): DataFrame =
     nearestCentroidAssign(df, idCol, labelCol, vecCol)
@@ -1204,11 +1204,10 @@ object Similarity {
   def nearestCentroidAssign(df: DataFrame, idCol: String, labelCol: String,
                             vecCol: String): DataFrame = {
     val q = quantizedWithLabel(df, idCol, labelCol, vecCol)
-    // Per-row argmin over the centroid array: array_min on (t, c_label)
-    // structs is order-insensitive, so collect_list's nondeterministic
-    // element order cannot change the result; ties break to min c_label.
+    // Per-row argmin over the driver-held centroid state; ties break to
+    // the smaller c_label.
     q.select(col("id"), col("label"), col("v"),
-      nearestCell(centroidAnchor(q, "nearestCentroidAssign"))
+      CellKernels.argmin(col("v"), centroidState(q, "nearestCentroidAssign"))
         .as("assigned_label"))
   }
 
@@ -1295,74 +1294,33 @@ object Similarity {
     cells.toArray
   }
 
-  /** The cents literal of a driver-held [[centroidFold]] relation:
-    * array<struct<c_label, n, ss, s[]>>, every cell of the state. Built
-    * from the relation's rows on the driver (no job) and shipped inside
-    * the serialized closure every task of a consuming stage deserializes:
-    * one UnsafeArrayData, 8 bytes per value plus ~64 bytes of row header,
-    * offsets and decimal slot per cell — 32 cells × (64 + 3) values =
-    * 18,960 bytes for the coarse quantizer, 512 cells × (8 + 3) values =
-    * 73,800 bytes for the PQ codebooks. Past about 10⁵ values (k·d ≈ 10⁵,
-    * ≈ 1 MB: Spark warns about task binaries over 1000 KiB, and every
-    * task of every consuming stage pays the deserialization) the state
-    * should travel as a broadcast variable read by a custom expression
-    * instead. Throws naming `caller` when `stats` is not driver-held. */
-  private[graft] def packCents(stats: DataFrame, caller: String): Column =
-    org.apache.spark.sql.graftfn.DriverLiteral.rowsArray(stats, caller)
-
-  /** Centroid literal over a [[quantizedWithLabel]] relation's labels. */
-  private def centroidAnchor(q: DataFrame, caller: String): Column =
-    packCents(centroidFold(q.select(col("label").as("c_label"), col("v"))),
+  /** Centroid state over a [[quantizedWithLabel]] relation's labels. */
+  private def centroidState(q: DataFrame, caller: String): CellState =
+    CellState.of(centroidFold(q.select(col("label").as("c_label"), col("v"))),
       caller)
-
-  /** The argmin cell of `v` over `cents` (same tScore, ties to the
-    * smaller c_label) — the one assignment spelling every Lloyd round,
-    * the purity matrix and the SemDeDup partition share. */
-  private def nearestCell(cents: Column): Column =
-    array_min(scoredCells(cents))("c_label")
-
-  /** Every cell of `cents` ranked for the row's `v` by (t, c_label) —
-    * element 1 is [[nearestCell]]; mirrors the oracle's
-    * `ORDER BY t, c_label`. */
-  private def rankedCells(cents: Column): Column = array_sort(scoredCells(cents))
-
-  private def scoredCells(cents: Column): Column =
-    transform(cents, e =>
-      struct(tScore(e, col("v")).as("t"), e("c_label").as("c_label")))
-
-  /** The deterministic centroid-distance score t = |s|²/n² − 2(v·s)/n for
-    * one centroid entry `e` of the anchor — the expression BOTH engines
-    * spell operand-for-operand (see [[nearestCentroidPurity]]); shared by
-    * the argmin assignment and the top-nprobe ranking so the two cannot
-    * drift. */
-  private def tScore(e: Column, v: Column): Column =
-    e("ss").cast(DoubleType) / (e("n") * e("n")).cast(DoubleType) -
-      (lit(2.0) * dotQ(v, e("s")).cast(DoubleType)) / e("n").cast(DoubleType)
 
   /** Each row's `nprobe` nearest centroids, ranked: (id, label, v,
     * probe_rank ∈ 1..nprobe, c_label). probe_rank 1 is exactly
-    * [[nearestCentroidAssign]]'s assignment (same tScore, same (t,
-    * c_label) tie-break — array_sort on the struct orders by t then
-    * c_label, mirroring the oracle's `ORDER BY t, c_label`). The probe
-    * list is computed per row from the same 1-row broadcast anchor — no
+    * [[nearestCentroidAssign]]'s assignment (same t score, same (t,
+    * c_label) order, mirroring the oracle's `ORDER BY t, c_label`). The
+    * probe list is computed per row from the same driver-held state — no
     * extra shuffle, |labels|·nprobe work per row. */
   def nearestCentroidProbes(df: DataFrame, idCol: String, labelCol: String,
                             vecCol: String, nprobe: Int): DataFrame = {
     val q = quantizedWithLabel(df, idCol, labelCol, vecCol)
-    q.withColumn("scored",
-        rankedCells(centroidAnchor(q, "nearestCentroidProbes")))
-      .select(col("id"), col("label"), col("v"),
-        posexplode(slice(col("scored"), 1, nprobe)).as(Seq("pi", "p")))
+    q.select(col("id"), col("label"), col("v"),
+        posexplode(CellKernels.ranked(col("v"),
+          centroidState(q, "nearestCentroidProbes"), nprobe)).as(Seq("pi", "p")))
       .select(col("id"), col("label"), col("v"),
         (col("pi") + 1).cast(LongType).as("probe_rank"),
-        col("p.c_label").as("c_label"))
+        col("p").as("c_label"))
   }
 
   /** Iterated Lloyd k-means over the quantized embedding space — the
     * training loop [[ivfSq8TopKLearned]]'s Scaladoc promises ("a
     * production deployment iterates the centroid build"): round r
     * assigns every vector to its nearest round-(r−1) centroid (the same
-    * broadcast-anchor argmin as [[nearestCentroidAssign]], same tScore,
+    * driver-state argmin as [[nearestCentroidAssign]], same t score,
     * same (t, c_label) tie-break) and recomputes exact-integer centroid
     * statistics from the assignment; seeds are the per-label centroids
     * (k-means|| in production — the seeding changes only round 0).
@@ -1376,7 +1334,7 @@ object Similarity {
     * (see nearestCentroidPurity); centroid recomputation is pure integer
     * arithmetic; the digest renders int64 values identically in both
     * engines. Scale shape per round: ONE Spark job — a corpus scan that
-    * assigns every vector against the |cells|·(d+3) cents literal and
+    * assigns every vector against the |cells|·(d+3) driver-held state and
     * folds the new sums per partition, merged on the driver
     * ([[centroidFold]]) — K scans total, the vectors never shuffle. Each
     * round's statistics are a driver-held LocalRelation, so round r+1
@@ -1399,12 +1357,12 @@ object Similarity {
   }
 
   /** One Lloyd assignment against a [[centroidFold]] state: every row of
-    * `q` ((…, v)) re-labeled with its argmin cell — (c_label, v). The
-    * [[nearestCell]] spelling, so the per-label seed loop (x72) and the
-    * hash-seeded arbitrary-k loop (x73) cannot drift. */
+    * `q` ((…, v)) re-labeled with its argmin cell — (c_label, v). One
+    * kernel for the per-label seed loop (x72) and the hash-seeded
+    * arbitrary-k loop (x73), so they cannot drift. */
   private def lloydAssign(q: DataFrame, stats: DataFrame): DataFrame =
-    q.select(nearestCell(packCents(stats, "lloydAssign")).as("c_label"),
-      col("v"))
+    q.select(CellKernels.argmin(col("v"), CellState.of(stats, "lloydAssign"))
+      .as("c_label"), col("v"))
 
   /** The SQ8 search tail shared by every cell-structured ANN variant:
     * `probes` = the persisted (id, probe_rank, cell) relation —
@@ -1470,11 +1428,10 @@ object Similarity {
   /** Probe projection of [[trainedCellStats]]: (id, probe_rank, cell). */
   private[graft] def probesFromStats(q: DataFrame, stats: DataFrame,
                               nprobe: Int): DataFrame = {
-    q.withColumn("scored", rankedCells(packCents(stats, "probesFromStats")))
-      .select(col("id"), posexplode(slice(col("scored"), 1, nprobe))
-        .as(Seq("pi", "p")))
+    q.select(col("id"), posexplode(CellKernels.ranked(col("v"),
+        CellState.of(stats, "probesFromStats"), nprobe)).as(Seq("pi", "p")))
       .select(col("id"), (col("pi") + 1).cast(LongType).as("probe_rank"),
-        col("p.c_label").as("cell"))
+        col("p").as("cell"))
   }
 
   /** Product-quantization ADC top-k — the third FAISS compression pillar
@@ -1521,7 +1478,7 @@ object Similarity {
       .select(col("id"), col("code"), explode(col("qs")).as("q"))
       .filter(col("id") =!= col("q.q_id"))
       .select(col("q.q_id").as("q_id"), col("id").as("c_id"),
-        pqScore("q.lut", "code", m).as("score_pq"))
+        CellKernels.adcScore(col("q.lut"), col("code"), m).as("score_pq"))
     val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
     scored.withColumn("rnk", row_number().over(w).cast(LongType))
       .filter(col("rnk") <= k)
@@ -1545,36 +1502,35 @@ object Similarity {
     val lutRows = svRel
       .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
       .select(col("id").as("q_id"), col("sub"),
-        pqTerms(codes, packCents(anchor, "pqCodesAndLut")).as("terms"))
+        pqTerms(codes, CellState.of(anchor, "pqCodesAndLut")).as("terms"))
       .groupBy(col("q_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
         e => e("terms")).as("lut"))
     (coded, lutRows)
   }
 
-  /** The codebook cells belonging to the enclosing row's own subspace
-    * (`sub` column) — cell id = sub·codes + code. */
-  private def pqSubCells(codes: Int)(cents: Column): Column =
-    filter(cents, e => e("c_label") >= col("sub").cast(LongType) * codes &&
-      e("c_label") < (col("sub").cast(LongType) + 1) * codes)
+  /** The c_label bounds [sub·codes, (sub + 1)·codes) of the enclosing
+    * row's own subspace (`sub` column) — cell id = sub·codes + code. */
+  private def pqSubRange(codes: Int): (Column, Column) =
+    (col("sub").cast(LongType) * codes, (col("sub").cast(LongType) + 1) * codes)
 
-  /** Argmin codebook cell for the enclosing row's subvector (`sv`) —
-    * the same tScore / (t, c_label) tie-break as every Lloyd argmin. */
-  private def pqArgmin(codes: Int)(cents: Column): Column =
-    array_min(transform(pqSubCells(codes)(cents), e =>
-      struct(tScore(e, col("sv")).as("t"), e("c_label").as("c_label"))))
-      .getField("c_label")
+  /** Argmin codebook cell for the enclosing row's subvector (`sv`) among
+    * its own subspace's cells — the same t score and (t, c_label) order
+    * as every Lloyd argmin. */
+  private def pqArgmin(codes: Int, state: CellState): Column = {
+    val (lo, hi) = pqSubRange(codes)
+    CellKernels.argminIn(col("sv"), lo, hi, state)
+  }
 
   /** One subspace's ADC term table for the enclosing row's subvector:
     * (code, term = dot(sv, centroid sum)/n — one bigint→double cast and
     * ONE IEEE divide) sorted by code. The SINGLE spelling shared by the
     * raw-vector LUT (x74/x75/x76) and the per-(query, cell) residual
     * LUT (x77) so the double arithmetic cannot drift between them. */
-  private[graft] def pqTerms(codes: Int, cents: Column): Column =
-    array_sort(transform(pqSubCells(codes)(cents), e =>
-      struct(pmod(e("c_label"), lit(codes.toLong)).as("code"),
-        (dotQ(col("sv"), e("s")).cast(DoubleType) /
-          e("n").cast(DoubleType)).as("term"))))
+  private def pqTerms(codes: Int, state: CellState): Column = {
+    val (lo, hi) = pqSubRange(codes)
+    CellKernels.terms(col("sv"), lo, hi, state, codes)
+  }
 
   /** PQ training + corpus encoding over an (id, v) relation: the joint
     * Lloyd chain (subspace id rides inside the cell key; seeds = id mod
@@ -1590,7 +1546,7 @@ object Similarity {
     // Stored PQ codes: per row, the m code ids ordered by subspace.
     val coded = ExtCaches.persistTracked(
       svRel.select(col("id"), col("sub"),
-          pmod(pqArgmin(codes)(packCents(anchor, "pqTrainEncode")),
+          pmod(pqArgmin(codes, CellState.of(anchor, "pqTrainEncode")),
             lit(codes.toLong)).as("code"))
         .groupBy(col("id"))
         .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
@@ -1617,21 +1573,10 @@ object Similarity {
       col("sv").as("v")))
     for (_ <- 1 to lloydRounds)
       stats = centroidFold(svRel.select(
-        pqArgmin(codes)(packCents(stats, "pqCodebooks")).as("c_label"),
+        pqArgmin(codes, CellState.of(stats, "pqCodebooks")).as("c_label"),
         col("sv").as("v")))
     stats
   }
-
-  /** Explicit left-assoc m-term ADC score: term s = the query's sub-s
-    * table entry whose code matches the candidate's stored code for
-    * sub s. One spelling for the exhaustive (x74) and IVF-scoped (x76)
-    * scans — and the reason the double scores are bit-identical across
-    * engines (never an aggregate over shuffled doubles). */
-  private def pqScore(lutCol: String, codeCol: String, m: Int): Column =
-    (0 until m).map { s =>
-      element_at(filter(element_at(col(lutCol), s + 1),
-        t => t("code") === element_at(col(codeCol), s + 1)), 1)("term")
-    }.reduce(_ + _)
 
   /** IVF×PQ — the full FAISS composition (coarse inverted lists × PQ
     * codes, `by_residual=false`: codebooks trained on raw subvectors
@@ -1660,7 +1605,7 @@ object Similarity {
     val scored = members.join(broadcast(qp), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("id").as("c_id"),
-        pqScore("lut", "code", m).as("score_pq"))
+        CellKernels.adcScore(col("lut"), col("code"), m).as("score_pq"))
     val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
     scored.withColumn("rnk", row_number().over(w).cast(LongType))
       .filter(col("rnk") <= k)
@@ -1751,7 +1696,7 @@ object Similarity {
           slice(col("v"), s * subW + 1, subW)): _*)).as(Seq("sub", "sv")))
     val lutRows = qsv
       .select(col("id").as("q_id"), col("sub"),
-        pqTerms(codes, packCents(anchor, "ivfPqResidualTopK")).as("terms"))
+        pqTerms(codes, CellState.of(anchor, "ivfPqResidualTopK")).as("terms"))
       .groupBy(col("q_id"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
         e => e("terms")).as("lut"))
@@ -1767,10 +1712,8 @@ object Similarity {
     val scored = members.join(broadcast(qp), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("id").as("c_id"),
-        (Seq(col("bias").cast(DoubleType)) ++ (0 until m).map { s =>
-          element_at(filter(element_at(col("lut"), s + 1),
-            t => t("code") === element_at(col("code"), s + 1)), 1)("term")
-        }).reduce(_ + _).as("score_pq"))
+        CellKernels.adcScore(col("lut"), col("code"), m,
+          Some(col("bias").cast(DoubleType))).as("score_pq"))
     val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
     scored.withColumn("rnk", row_number().over(w).cast(LongType))
       .filter(col("rnk") <= k)
@@ -2028,9 +1971,9 @@ object Similarity {
     * structure whose recall at fixed probe cost beats the sign bucket's
     * (x71 measures the comparison at ~equal probed corpus fraction).
     *
-    * Scale shape: centroid build = one driver-merged fold → cents
-    * literal; assignment and probe ranking are per-row argmin/
-    * top-nprobe over that literal (scan-speed, no shuffle of vectors);
+    * Scale shape: centroid build = one driver-merged fold → driver-held
+    * cell state; assignment and probe ranking are per-row argmin/
+    * top-nprobe kernels over that state (scan-speed, no shuffle of vectors);
     * the search is a broadcast EQUI-join on the cell id. Probed cells
     * are distinct per query (ranked slice of a distinct label set), so
     * no candidate dedup is needed before the rank window. A production

@@ -361,7 +361,7 @@ private[queries] trait ExtBase { this: ExtCore =>
     * centroid stats with HUGEINT |s|² (cent — DuckDB's SUM(BIGINT) is
     * HUGEINT, matching the Spark side's DECIMAL(38,0)), and the
     * all-pairs score t = |s|²/n² − 2(v·s)/n (scored) whose expression
-    * tree mirrors Similarity.tScore operand-for-operand so the doubles
+    * tree mirrors graftfn.CellState's t operand-for-operand so the doubles
     * are bit-identical. */
   private[queries] def centroidScoreCtes: String =
     s"""qv AS (
@@ -387,7 +387,7 @@ private[queries] trait ExtBase { this: ExtCore =>
     * discipline): score the corpus against round r−1's centroids (round
     * 0 = the shared chain's per-label `cent`), take the (t, c_label)
     * argmin assignment, and recompute exact-integer centroid stats. The
-    * t spelling matches centroidScoreCtes / Similarity.tScore
+    * t spelling matches centroidScoreCtes / graftfn.CellState's t
     * operand-for-operand. */
   private[queries] def kmeansRoundSql(r: Int, p: String = "", seed: String = "cent",
                              src: String = "qv"): String = {
@@ -476,7 +476,7 @@ private[queries] trait ExtBase { this: ExtCore =>
 
   /** The explicit left-associated m-term ADC sum over aliases `l` (the
     * LUT side, column `lut`) and `c` (the code side, column `code`) —
-    * mirrors Similarity.pqScore operand-for-operand; ONE spelling shared
+    * mirrors graftfn.AdcScore operand-for-operand; ONE spelling shared
     * by the exhaustive (x74/x75) and IVF-scoped (x76) scoring CTEs so
     * the double arithmetic cannot drift between them. */
   private[queries] def pqTermSql: String =

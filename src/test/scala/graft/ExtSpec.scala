@@ -1789,12 +1789,21 @@ class EditDistSpec extends SparkSpec {
   test("prefix filter is recall-exact vs in-engine brute force (sf0.001)") {
     val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
       .select(col("doc_id"), col("text"), length(col("text")).as("l"))
-    val brute = docs.as("a").join(docs.as("b"),
+    // The length-feasible pairs are materialized first: the distance
+    // filter would otherwise be pushed into the nested-loop join and
+    // computed on every pair ahead of the id and length conjuncts. The
+    // reference is materialized too, so both assertions read it once.
+    val feasible = docs.as("a").join(docs.as("b"),
         col("a.doc_id") < col("b.doc_id") &&
           abs(col("a.l") - col("b.l")) <= 8)
       .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-        levenshtein(col("a.text"), col("b.text")).cast("long").as("ed"))
+        col("a.text").as("text_a"), col("b.text").as("text_b"))
+      .localCheckpoint()
+    val brute = feasible
+      .select(col("id_a"), col("id_b"),
+        levenshtein(col("text_a"), col("text_b")).cast("long").as("ed"))
       .filter(col("ed") <= 8)
+      .localCheckpoint()
     val fast = Dedup.editDistancePairs(docs, "doc_id", "text", k = 8, q = 5)
     assert(fast.exceptAll(brute).count() == 0L, "x62 emits a false pair")
     assert(brute.exceptAll(fast).count() == 0L, "x62 missed a true pair")

@@ -7,8 +7,9 @@ import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{col, lit}
 
-import graft.ext.ExtCaches
+import graft.ext.{ExtCaches, Similarity}
 import graft.queries.{Chinook, Extensions}
+import graft.tables.Tables
 
 /** A warm rep reuses the generated classes of the rep before it: the
   * session's generated-class cache holds them (GraftSession.CodegenConfs),
@@ -58,6 +59,28 @@ class WarmCodegenSpec extends SparkSpec {
       Extensions.warmAnnShared(spark, dir)
       assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == c0,
         "the second warmAnnShared compiled classes")
+    } finally ExtCaches.clearCaches()
+  }
+
+  test("the quantizer kernels over another trained state compile no class") {
+    // The trained state reaches the generated code as a reference object,
+    // so the source, and the compiled class, do not depend on it.
+    try {
+      val q = ExtCaches.persistTracked(Tables.embeddings(spark, dir)
+        .select(col("vec_id").as("id"),
+          Similarity.quantize(col("embedding")).as("v")))
+      val queries = q.filter(col("id") % 50 === 0).select(col("id"))
+      def kernels(rounds: Int): Unit = {
+        val stats = Similarity.trainedCellStats(q, 16, rounds)
+        Similarity.probesFromStats(q, stats, 2).collect()
+        val pq = Similarity.pqTrainEncode(q, 8, 16, rounds, 64)
+        Similarity.pqTopK(pq, queries, "id", 3, 8, 16).collect()
+      }
+      kernels(1)
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      kernels(2)
+      assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == c0,
+        "a second trained state compiled classes")
     } finally ExtCaches.clearCaches()
   }
 
