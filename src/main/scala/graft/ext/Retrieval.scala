@@ -1,9 +1,10 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType}
+
+import graft.ops.TopK
 
 /** Hybrid (lexical + vector) retrieval with reciprocal-rank fusion — the
   * standard production shape for RAG-style corpus search: a sparse arm
@@ -95,11 +96,8 @@ object Retrieval {
     val rrf =
       coalesce(lit(1.0) / (lit(rrfC.toDouble) + col("lex_rnk").cast(DoubleType)), lit(0.0)) +
       coalesce(lit(1.0) / (lit(rrfC.toDouble) + col("vec_rnk").cast(DoubleType)), lit(0.0))
-    val wf = Window.partitionBy(col("q_id")).orderBy(desc("rrf"), col("id"))
-    lex.join(vec, Seq("q_id", "id"), "full_outer")
-      .withColumn("rrf", rrf)
-      .withColumn("rnk", row_number().over(wf).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(lex.join(vec, Seq("q_id", "id"), "full_outer").withColumn("rrf", rrf),
+        Seq(col("q_id")), Seq(desc("rrf"), col("id")), k)
       .select(col("q_id"), col("id").as("doc_id"),
         col("lex_rnk"), col("vec_rnk"), col("rrf"), col("rnk"))
   }
@@ -160,10 +158,8 @@ object Retrieval {
     // brute dense one, so the shared ranking executes once instead of
     // per arm (x98: four fusions previously re-ranked the same arm
     // relations; 231-Exchange plan, 15.6 s → see OPTIMIZATION_r16.md).
-    val wl = Window.partitionBy(col("q_id")).orderBy(desc("n_common"), col("id"))
-    val lex = ExtCaches.persistTracked(lexScored
-      .withColumn("lex_rnk", row_number().over(wl).cast(LongType))
-      .filter(col("lex_rnk") <= armK)
+    val lex = ExtCaches.persistTracked(TopK.perGroup(lexScored, Seq(col("q_id")),
+        Seq(desc("n_common"), col("id")), armK, "lex_rnk")
       .select(col("q_id"), col("id"), col("lex_rnk")))
 
     // -- dense arm: exact cosine top-k over the same universe -----------
@@ -302,12 +298,9 @@ object Retrieval {
       scored.select(lit(name).as("arm"), col("q_id"), col("id"),
         col(scoreCol).as("score"))
     }.reduce(_.unionByName(_))
-    val wl = Window.partitionBy(col("arm"), col("q_id"))
-      .orderBy(desc("score"), col("id"))
     val isTwin = col("id") === col("q_id") + Relevance.TwinIdOffset
-    val armCounts = tagged
-      .withColumn("rnk", row_number().over(wl).cast(LongType))
-      .filter(col("rnk") <= armK)
+    val armCounts = TopK.perGroup(tagged, Seq(col("arm"), col("q_id")),
+        Seq(desc("score"), col("id")), armK)
       .groupBy(col("arm"))
       .agg(count(when(isTwin && col("rnk") === 1L, lit(1))).as("hits_at_1"),
         count(when(isTwin && col("rnk") <= k, lit(1))).as("hits_at_k"))

@@ -199,25 +199,4 @@ object Sampling {
     b.withColumn("cum_tokens", sum(col("bucket_tokens")).over(w))
       .filter(col("cum_tokens") - col("bucket_tokens") < budget)
   }
-
-  /** Per-group contribution cap — "keep at most `cap` documents per
-    * source/domain, best first": rank each group by `order` (which must
-    * end in a unique tiebreak column — total order, deterministic kept
-    * set) and keep rank ≤ cap. The crawl-curation counterpart of
-    * [[weightedMixtureSample]]: a fraction bounds a stratum
-    * proportionally, a cap bounds it absolutely (the standard defense
-    * against one domain flooding the corpus).
-    *
-    * Scale shape: one hash-shuffle on the group key, then Spark ≥3.5
-    * plans the rank-filter as WindowGroupLimit — each partition keeps at
-    * most `cap` rows per group in a bounded buffer instead of
-    * materializing and sorting whole groups (the flooding domain is
-    * exactly the group you cannot afford to materialize). */
-  def capPerGroup(df: DataFrame, groupCol: Column, order: Seq[Column],
-                  cap: Int, rankCol: String = "rnk"): DataFrame = {
-    require(cap > 0, s"cap must be positive: $cap")
-    val w = Window.partitionBy(groupCol).orderBy(order: _*)
-    df.withColumn(rankCol, row_number().over(w).cast(LongType))
-      .filter(col(rankCol) <= cap)
-  }
 }

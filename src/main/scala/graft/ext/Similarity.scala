@@ -10,10 +10,13 @@ import org.apache.spark.sql.graftfn.{CellKernels, CellState}
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
   StringType, StructField, StructType}
 
+import graft.ops.TopK
+
 /** Similarity search over embedding columns (SURVEY.md §7.6).
   *
-  * The cosine kernel is built from Spark's higher-order array functions
-  * (`zip_with` + `aggregate`) — codegen'd, no UDF. Determinism: each float
+  * The cosine kernel is [[dotQ]], the codegen'd `graftfn.DotProductLong`
+  * over quantized long arrays (the built-in `zip_with` + `aggregate` fold
+  * is interpreted per element). Determinism: each float
   * element is quantized ONCE to fixed-point (×2^20, a binary scale, so the
   * double multiply is a pure exponent shift with no rounding; the only
   * rounding is `round()`-to-nearest-integer, which Spark and DuckDB both
@@ -37,8 +40,15 @@ import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType,
   *    classic inverted-file ANN trade (recall loss at bucket borders for
   *    a |buckets|× cost cut). The bucket key is a join key, so Spark
   *    co-partitions corpus and queries by bucket: each executor sees one
-  *    shard of the index. A production variant would use trained
-  *    centroids + multi-probe; the pipeline shape is identical.
+  *    shard of the index. The trained-centroid, multi-probe form is
+  *    [[IvfFront]]; the pipeline shape is identical.
+  *
+  * Every search entry point composes the same three stages, each spelled
+  * once: a candidate source (sign buckets, the LSH band index
+  * [[bandIndex]], an [[IvfFront]]'s cell probes, or the exhaustive list),
+  * a scorer (the id-fetch pair scorer [[scorePairs]], the SQ8 code dot, or
+  * the PQ ADC tables and cell scan [[ivfPqScan]]), and the top-k tail
+  * [[graft.ops.TopK.perGroup]] with a total-order tie-break on the id.
   */
 object Similarity {
   /** Fixed-point scale: 2^20. Binary so `x * Scale` never rounds. */
@@ -102,9 +112,7 @@ object Similarity {
     val scored = c.join(broadcast(q), col("c_id") =!= col("q_id"))
       .withColumn("cosine",
         cosineFromParts(dotQ(col("q_vec"), col("c_vec")), col("q_norm"), col("c_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("c_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("cosine"), col("c_id")), k)
       .select(col("q_id"), col("c_id"), col("cosine"), col("rnk"))
   }
 
@@ -129,9 +137,7 @@ object Similarity {
       .filter(col("c_id") =!= col("q_id"))
       .withColumn("cosine",
         cosineFromParts(dotQ(col("q_vec"), col("c_vec")), col("q_norm"), col("c_norm")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("c_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("cosine"), col("c_id")), k)
       .select(col("q_id"), col("bucket"), col("c_id"), col("cosine"), col("rnk"))
   }
 
@@ -144,7 +150,7 @@ object Similarity {
     * there, which generates candidates through a banded equi-join. */
   def cosineAllPairsExact(df: DataFrame, idCol: String, vecCol: String,
                           threshold: Double): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
+    val v = normed(df, idCol, vecCol)
     v.as("a").join(v.as("b"), col("a.id") < col("b.id"))
       .withColumn("cosine",
         cosineFromParts(dotQ(col("a.vec"), col("b.vec")), col("a.norm"), col("b.norm")))
@@ -253,10 +259,9 @@ object Similarity {
   def cosineNearDupPairs(df: DataFrame, idCol: String, vecCol: String,
                          threshold: Double, bands: Int = 8, bitsPerBand: Int = 8,
                          hotBucketCap: Option[Int] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val e0 = v.select(col("id"),
-      explode(bandKeys(col("vec"), bands, bitsPerBand)).as("bk"))
-    bandVerify(v, e0, threshold, hotBucketCap)
+    val v = normed(df, idCol, vecCol)
+    bandVerify(v, v.select(col("id"),
+      explode(bandKeys(col("vec"), bands, bitsPerBand)).as("bk")), threshold, hotBucketCap)
   }
 
   /** [[cosineNearDupPairs]] with band keys SAMPLED from the full sign
@@ -283,44 +288,81 @@ object Similarity {
                                 bitsPerBand: Int = 16, dims: Int = 64,
                                 seed: Long = 0x5EEDL,
                                 hotBucketCap: Option[Int] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val e0 = v.withColumn("sig", signSignature(col("vec"), dims))
-      .select(col("id"),
-        explode(sampledKeysFromSig(col("sig"), bands, bitsPerBand, dims, seed)).as("bk"))
-    bandVerify(v, e0, threshold, hotBucketCap)
+    val v = normed(df, idCol, vecCol)
+    bandVerify(v, sampledBands(v, "vec", Seq(col("id")), bands, bitsPerBand, dims, seed),
+      threshold, hotBucketCap)
   }
 
-  /** Shared tail of the banded near-dup shapes: optional hot-bucket cap,
-    * candidate generation by band-key self-EQUI-join, exact cosine verify.
-    * The (id, band-key) relation is materialized (persist, tracked in
-    * [[ExtCaches]]) because it feeds BOTH sides of the candidate self-join
-    * — same barrier as the shingle inverted index in
-    * [[Dedup.ngramJaccardPairs]]: without it Catalyst inlines the band-key
-    * expression into each side and every row pays the sign-gather twice
-    * (for the sampled 16×16 geometry that is a 256-term projection — the
-    * double evaluation measurably dominated the sf0.1 bench). At scale
-    * this relation IS the stored LSH index. */
-  private def bandVerify(v: DataFrame, e0raw: DataFrame, threshold: Double,
-                         hotBucketCap: Option[Int]): DataFrame = {
-    val e0 = ExtCaches.persistTracked(e0raw)
-    val e = hotBucketCap.fold(e0) { cap =>
+  /** (`keep`…, bk): one row per sampled band key of the quantized vector
+    * column `vec`. The signature materializes as a column first, so the
+    * bands×bits gathers read one long instead of re-expanding the
+    * dims-term sign sum each. */
+  private def sampledBands(df: DataFrame, vec: String, keep: Seq[Column], bands: Int,
+                           bitsPerBand: Int, dims: Int, seed: Long): DataFrame =
+    df.withColumn("sig", signSignature(col(vec), dims))
+      .select((keep :+ explode(sampledKeysFromSig(col("sig"), bands, bitsPerBand, dims,
+        seed)).as("bk")): _*)
+
+  /** The LSH band index: `keyed`'s (id…, bk) rows persisted, tracked in
+    * [[ExtCaches]] — at scale this relation IS the stored index, and it
+    * feeds both sides of a candidate join, so without the barrier
+    * Catalyst inlines the band-key expression into each side and every
+    * row pays the sign-gather twice (for the sampled 16×16 geometry a
+    * 256-term projection — the double evaluation measurably dominated
+    * the sf0.1 bench). `hotBucketCap` drops band keys shared by more
+    * than `cap` rows. */
+  private def bandIndex(keyed: DataFrame, hotBucketCap: Option[Int]): DataFrame = {
+    val e0 = ExtCaches.persistTracked(keyed)
+    hotBucketCap.fold(e0) { cap =>
       val keep = e0.groupBy(col("bk"))
         .agg(count(lit(1)).as("bucket_n"))
         .filter(col("bucket_n") <= cap)
         .select(col("bk"))
       e0.join(keep, Seq("bk"), "left_semi")
     }
+  }
+
+  /** Shared tail of the banded near-dup shapes: the band index over
+    * `keyed` (optional hot-bucket cap), candidate generation by band-key
+    * self-EQUI-join, exact cosine verify — the same index and scorer as
+    * the shingle inverted index in [[Dedup.ngramJaccardPairs]]. */
+  private def bandVerify(v: DataFrame, keyed: DataFrame, threshold: Double,
+                         hotBucketCap: Option[Int]): DataFrame = {
+    val e = bandIndex(keyed, hotBucketCap)
     val candidates = e.as("a")
       .join(e.as("b"), col("a.bk") === col("b.bk") && col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
       .distinct()
-    candidates
-      .join(v.select(col("id").as("id_a"), col("vec").as("va"), col("norm").as("na")), Seq("id_a"))
-      .join(v.select(col("id").as("id_b"), col("vec").as("vb"), col("norm").as("nb")), Seq("id_b"))
-      .withColumn("cosine", cosineFromParts(dotQ(col("va"), col("vb")), col("na"), col("nb")))
+    scorePairs(candidates, v, "id_a", "id_b")
       .filter(col("cosine") >= threshold)
       .select(col("id_a"), col("id_b"), col("cosine"))
   }
+
+  /** One side of an id-fetch over a [[normed]] relation: (id as `idAs`,
+    * vec as `vecAs`, norm as `normAs`). */
+  private def side(v: DataFrame, idAs: String, vecAs: String, normAs: String): DataFrame =
+    v.select(col("id").as(idAs), col("vec").as(vecAs), col("norm").as(normAs))
+
+  /** Exact cosine between the (vs, ns) source side and the (vn, nn)
+    * neighbor side a pair relation carries. */
+  private def pairCosine: Column =
+    cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn"))
+
+  /** The id-fetch pair scorer: `pairs`' (`src`, `nbr`) ids fetch their
+    * vectors back from `v` ([[normed]]) by two id equi-joins, and each
+    * pair gains its exact `cosine`. Candidates stay id-pair rows until
+    * this fetch. */
+  private def scorePairs(pairs: DataFrame, v: DataFrame, src: String = "src_id",
+                         nbr: String = "nbr_id"): DataFrame =
+    pairs.join(side(v, src, "vs", "ns"), Seq(src))
+      .join(side(v, nbr, "vn", "nn"), Seq(nbr))
+      .withColumn("cosine", pairCosine)
+
+  /** The per-source graph tail: each source's top `k` neighbors by
+    * (cosine desc, nbr_id) — (src_id, nbr_id, cosine, rnk). */
+  private def rankEdges(scored: DataFrame, k: Int): DataFrame =
+    TopK.perGroup(scored, Seq(col("src_id")), Seq(desc("cosine"), col("nbr_id")), k)
+      .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
 
   /** LSH-bounded k-nearest-neighbor graph: for every vector, its `k`
     * most-cosine-similar neighbors among the candidates that share at
@@ -355,30 +397,14 @@ object Similarity {
                bands: Int = 16, bitsPerBand: Int = 16, dims: Int = 64,
                seed: Long = 0x5EEDL,
                hotBucketCap: Option[Int] = None): DataFrame = {
-    val v = withNorm(df.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
-    val e0 = ExtCaches.persistTracked(
-      v.withColumn("sig", signSignature(col("vec"), dims))
-        .select(col("id"),
-          explode(sampledKeysFromSig(col("sig"), bands, bitsPerBand, dims, seed)).as("bk")))
-    val e = hotBucketCap.fold(e0) { cap =>
-      val keep = e0.groupBy(col("bk"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") <= cap)
-        .select(col("bk"))
-      e0.join(keep, Seq("bk"), "left_semi")
-    }
+    val v = normed(df, idCol, vecCol)
+    val e = bandIndex(sampledBands(v, "vec", Seq(col("id")), bands, bitsPerBand, dims, seed),
+      hotBucketCap)
     val candidates = e.as("a")
       .join(e.as("b"), col("a.bk") === col("b.bk") && col("a.id") =!= col("b.id"))
       .select(col("a.id").as("src_id"), col("b.id").as("nbr_id"))
       .distinct()
-    val scored = candidates
-      .join(v.select(col("id").as("src_id"), col("vec").as("vs"), col("norm").as("ns")), Seq("src_id"))
-      .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"), col("norm").as("nn")), Seq("nbr_id"))
-      .withColumn("cosine", cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
-    val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
+    rankEdges(scorePairs(candidates, v), k)
   }
 
   /** Incremental kNN: each INCOMING vector's top-k neighbors among the
@@ -401,20 +427,9 @@ object Similarity {
                      hotBucketCap: Option[Int] = None): DataFrame = {
     val vb = withNorm(base.select(col(idCol).as("base_id"), col(vecCol).as("b_vec")), "b_vec", "b_norm")
     val vi = withNorm(incoming.select(col(idCol).as("vec_id"), col(vecCol).as("i_vec")), "i_vec", "i_norm")
-    val eb0 = ExtCaches.persistTracked(
-      vb.withColumn("sig", signSignature(col("b_vec"), dims))
-        .select(col("base_id"),
-          explode(sampledKeysFromSig(col("sig"), bands, bitsPerBand, dims, seed)).as("bk")))
-    val eb = hotBucketCap.fold(eb0) { cap =>
-      val keep = eb0.groupBy(col("bk"))
-        .agg(count(lit(1)).as("bucket_n"))
-        .filter(col("bucket_n") <= cap)
-        .select(col("bk"))
-      eb0.join(keep, Seq("bk"), "left_semi")
-    }
-    val ei = vi.withColumn("sig", signSignature(col("i_vec"), dims))
-      .select(col("vec_id"),
-        explode(sampledKeysFromSig(col("sig"), bands, bitsPerBand, dims, seed)).as("bk"))
+    val eb = bandIndex(sampledBands(vb, "b_vec", Seq(col("base_id")), bands, bitsPerBand,
+      dims, seed), hotBucketCap)
+    val ei = sampledBands(vi, "i_vec", Seq(col("vec_id")), bands, bitsPerBand, dims, seed)
     val candidates = ei.join(eb, Seq("bk"))
       .select(col("vec_id"), col("base_id"))
       .distinct()
@@ -422,41 +437,10 @@ object Similarity {
       .join(vi.select(col("vec_id"), col("i_vec"), col("i_norm")), Seq("vec_id"))
       .join(vb, Seq("base_id"))
       .withColumn("cosine", cosineFromParts(dotQ(col("i_vec"), col("b_vec")), col("i_norm"), col("b_norm")))
-    val w = Window.partitionBy(col("vec_id")).orderBy(desc("cosine"), col("base_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("vec_id")), Seq(desc("cosine"), col("base_id")), k)
       .select(col("vec_id"), col("base_id"), col("cosine"), col("rnk"))
   }
 
-  /** kNN graph built on the TRAINED-CELL coarse quantizer instead of the
-    * sampled banding — the production graph builder the x85 measurement
-    * demands. x85 showed the 16×16 banded graph keeps ~1 % of true
-    * top-k edges at this corpus's neighbor regime (cosines 0.25–0.60 —
-    * below any sign-band's effective collision threshold), and the
-    * prototyped NN-descent refinement (Dong et al., WWW'11) converges
-    * at 1.3 % by round 2 on these i.i.d.-dim embeddings (SCALING.md —
-    * no navigable neighborhood structure to descend). What DOES carry
-    * recall here is the trained coarse quantizer (x71: the only arm
-    * above 50 %), so the graph form of it: every node probes its
-    * `nprobe` nearest Lloyd-trained cells (an [[IvfFront]] — the
-    * x73/x76 front end verbatim) and ranks the probed cells' members by
-    * EXACT quantized cosine (not the SQ8 code dot: ranking exactness is
-    * free at graph-build time and makes a miss purely a CELL-PROBE
-    * miss). Measured recall@3 vs the exact graph (x91):
-    * 0.744/0.732/0.698 at sf0.001/0.01/0.1 with the shipped nprobe=10/32
-    * (~32 % probed mass); the knob trades smoothly (sf0.01 prototype:
-    * 0.36 at nprobe=3 / 9.5 % mass, 0.87 at nprobe=16 / 51 % mass) — the smooth recall/cost knob the banding
-    * fundamentally lacks at this regime.
-    *
-    * Scale shape: cell training is the shared anchor-sized Lloyd chain;
-    * members and probes join on the CELL key (a pure equi-join — cost
-    * Σ_cells |members|·|probers| ≈ (nprobe/cells)·n² at fixed geometry,
-    * n^1.5 under the FAISS practice cells ∝ √n that [[ivfSq8TopKScaled]]
-    * documents); vectors are fetched back by id joins and never
-    * shuffled inside the scorer; WindowGroupLimit bounds each node's
-    * materialized candidates at k. Same output shape as [[knnGraph]],
-    * so every consumer (mutual-kNN clustering, SemDeDup neighborhoods)
-    * swaps in by reference. */
   /** Degenerate-cell fence for the Lloyd-cell joins (round 12 — the
     * x59/hotBucketCap discipline applied to the one bucketed family that
     * lacked it). A coarse quantizer trained on a REAL clustered corpus
@@ -551,9 +535,7 @@ object Similarity {
       * the final vector fetch); None when unfenced or when no cell
       * exceeds the cap. */
     def bandedScored(v: DataFrame): Option[DataFrame] = cap.filter(_ => anyBig).map { _ =>
-      val keys = v.withColumn("sig", signSignature(col("vec"), 64))
-        .select(col("id"),
-          explode(sampledKeysFromSig(col("sig"), 16, 16, 64, 0x5EEDL)).as("bk"))
+      val keys = sampledBands(v, "vec", Seq(col("id")), 16, 16, 64, 0x5EEDL)
       val srcK = bigProbes
         .join(keys.withColumnRenamed("id", "src_id"), Seq("src_id"))
       val nbrK = bigMembers
@@ -562,11 +544,7 @@ object Similarity {
         .filter(col("src_id") =!= col("nbr_id"))
         .select(col("src_id"), col("nbr_id"))
         .distinct()
-      cand
-        .join(v.select(col("id").as("src_id"), col("vec").as("vs"), col("norm").as("ns")), Seq("src_id"))
-        .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"), col("norm").as("nn")), Seq("nbr_id"))
-        .withColumn("cosine", cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
-        .select(col("src_id"), col("nbr_id"), col("cosine"))
+      scorePairs(cand, v).select(col("src_id"), col("nbr_id"), col("cosine"))
     }
 
     /** Residual sub-quantizer fallback — the BOUNDED alternative to
@@ -638,14 +616,8 @@ object Similarity {
           sub, subNprobe)
         .select(col("id.src_id").as("src_id"), col("id.cell").as("cell"),
           col("cell").as("subcell")))
-      pSub.join(mSub, Seq("cell", "subcell"))
-        .filter(col("src_id") =!= col("nbr_id"))
-        .join(v.select(col("id").as("src_id"), col("vec").as("vs"),
-          col("norm").as("ns")), Seq("src_id"))
-        .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"),
-          col("norm").as("nn")), Seq("nbr_id"))
-        .withColumn("cosine",
-          cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
+      scorePairs(pSub.join(mSub, Seq("cell", "subcell"))
+          .filter(col("src_id") =!= col("nbr_id")), v)
         .select(col("src_id"), col("nbr_id"), col("cosine"))
     }
 
@@ -785,13 +757,7 @@ object Similarity {
               zip_with(col("off"), col("cb"), (a, b) => a + b).as("off"))
         }
       }
-      emitted.reduce(_.unionByName(_)).distinct()
-        .join(v.select(col("id").as("src_id"), col("vec").as("vs"),
-          col("norm").as("ns")), Seq("src_id"))
-        .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"),
-          col("norm").as("nn")), Seq("nbr_id"))
-        .withColumn("cosine",
-          cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
+      scorePairs(emitted.reduce(_.unionByName(_)).distinct(), v)
         .select(col("src_id"), col("nbr_id"), col("cosine"))
     }
 
@@ -867,7 +833,36 @@ object Similarity {
   private def normed(corpus: DataFrame, idCol: String, vecCol: String): DataFrame =
     withNorm(corpus.select(col(idCol).as("id"), col(vecCol).as("vec")), "vec", "norm")
 
-  /** The IVF kNN graph over a built [[IvfFront]]. */
+  /** kNN graph built on the TRAINED-CELL coarse quantizer instead of the
+    * sampled banding — the production graph builder the x85 measurement
+    * demands. x85 showed the 16×16 banded graph keeps ~1 % of true
+    * top-k edges at this corpus's neighbor regime (cosines 0.25–0.60 —
+    * below any sign-band's effective collision threshold), and the
+    * prototyped NN-descent refinement (Dong et al., WWW'11) converges
+    * at 1.3 % by round 2 on these i.i.d.-dim embeddings (SCALING.md —
+    * no navigable neighborhood structure to descend). What DOES carry
+    * recall here is the trained coarse quantizer (x71: the only arm
+    * above 50 %), so the graph form of it: every node probes its
+    * `nprobe` nearest Lloyd-trained cells (an [[IvfFront]] — the
+    * x73/x76 front end verbatim) and ranks the probed cells' members by
+    * EXACT quantized cosine (not the SQ8 code dot: ranking exactness is
+    * free at graph-build time and makes a miss purely a CELL-PROBE
+    * miss). Measured recall@3 vs the exact graph (x91):
+    * 0.744/0.732/0.698 at sf0.001/0.01/0.1 with the shipped nprobe=10/32
+    * (~32 % probed mass); the knob trades smoothly (sf0.01 prototype:
+    * 0.36 at nprobe=3 / 9.5 % mass, 0.87 at nprobe=16 / 51 % mass) — the smooth recall/cost knob the banding
+    * fundamentally lacks at this regime.
+    *
+    * Scale shape: cell training is the shared anchor-sized Lloyd chain;
+    * members and probes join on the CELL key (a pure equi-join — cost
+    * Σ_cells |members|·|probers| ≈ (nprobe/cells)·n² at fixed geometry,
+    * n^1.5 under the FAISS practice cells ∝ √n that [[ivfSq8TopKScaled]]
+    * documents); vectors are fetched back by id joins and never
+    * shuffled inside the scorer; WindowGroupLimit bounds each node's
+    * materialized candidates at k. Same output shape as [[knnGraph]],
+    * so every consumer (mutual-kNN clustering, SemDeDup neighborhoods)
+    * swaps in by reference. This is the graph over a built
+    * [[IvfFront]]. */
   def knnGraphIvf(front: IvfFront, k: Int, maxCellSize: Option[Int],
                   assertUnderCap: Boolean): DataFrame =
     graphFromFront(front, k, maxCellSize, assertUnderCap, "knnGraphIvf",
@@ -952,21 +947,15 @@ object Similarity {
     // relation twice with both 64-long arrays aboard — measured 3×
     // slower at the x10 soak dir (158 → 52 s) and 15× at the
     // sqrt-n-cells variant (80.5 → 5.5 s), identical gated output.
-    val members = fence.okMembers
-      .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"), col("norm").as("nn")), Seq("nbr_id"))
-    val probes = fence.okProbes
-      .join(v.select(col("id").as("src_id"), col("vec").as("vs"), col("norm").as("ns")), Seq("src_id"))
+    val members = fence.okMembers.join(side(v, "nbr_id", "vn", "nn"), Seq("nbr_id"))
+    val probes = fence.okProbes.join(side(v, "src_id", "vs", "ns"), Seq("src_id"))
     // probed cells are distinct per node and each member has ONE cell,
     // so the candidate relation needs no dedup (the x73 argument)
     val exactScored = probes.join(members, Seq("cell"))
       .filter(col("src_id") =!= col("nbr_id"))
-      .withColumn("cosine", cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
+      .withColumn("cosine", pairCosine)
       .select(col("src_id"), col("nbr_id"), col("cosine"))
-    val scored = fallback(fence).fold(exactScored)(exactScored.unionByName(_))
-    val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
+    rankEdges(fallback(fence).fold(exactScored)(exactScored.unionByName(_)), k)
   }
 
   /** Incremental FOLD-IN of an ingest batch into a stored IVF kNN graph
@@ -1006,25 +995,18 @@ object Similarity {
       vd.select(col("id"), col("vec").as("v")), base.stats, base.nprobe))
     def members(p: DataFrame): DataFrame =
       p.filter(col("probe_rank") === 1).select(col("id").as("nbr_id"), col("cell"))
-    val withNbrVec = (m: DataFrame) => m.join(
-      v.select(col("id").as("nbr_id"), col("vec").as("vn"), col("norm").as("nn")),
-      Seq("nbr_id"))
+    val withNbrVec = (m: DataFrame) => m.join(side(v, "nbr_id", "vn", "nn"), Seq("nbr_id"))
     val withSrcVec = (p: DataFrame) => p.select(col("id").as("src_id"), col("cell"))
-      .join(v.select(col("id").as("src_id"), col("vec").as("vs"), col("norm").as("ns")),
-        Seq("src_id"))
+      .join(side(v, "src_id", "vs", "ns"), Seq("src_id"))
     val newMembers = withNbrVec(members(pd))
     val allMembers = withNbrVec(members(pb).unionByName(members(pd)))
     val delta = withSrcVec(pb).join(newMembers, Seq("cell"))
       .unionByName(withSrcVec(pd).join(allMembers, Seq("cell")))
       .filter(col("src_id") =!= col("nbr_id"))
-      .withColumn("cosine", cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
+      .withColumn("cosine", pairCosine)
       .select(col("src_id"), col("nbr_id"), col("cosine"))
-    val scored = baseEdges.select(col("src_id"), col("nbr_id"), col("cosine"))
-      .unionByName(delta)
-    val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
+    rankEdges(baseEdges.select(col("src_id"), col("nbr_id"), col("cosine"))
+      .unionByName(delta), k)
   }
 
   /** [[knnGraphIvf]] with the at-scale ranking tail: probed members are
@@ -1077,24 +1059,15 @@ object Similarity {
       .filter(col("src_id") =!= col("nbr_id"))
       .withColumn("dot_q8", dotQ(col("cs"), col("cn")))
       .select(col("src_id"), col("nbr_id"), col("dot_q8"))
-    val ws = Window.partitionBy(col("src_id")).orderBy(desc("dot_q8"), col("nbr_id"))
-    val short = adc.withColumn("srnk", row_number().over(ws))
-      .filter(col("srnk") <= shortlist)
+    val short = TopK.perGroup(adc, Seq(col("src_id")), Seq(desc("dot_q8"), col("nbr_id")),
+        shortlist, "srnk")
       .select(col("src_id"), col("nbr_id"))
-    val rer = short
-      .join(v.select(col("id").as("src_id"), col("vec").as("vs"), col("norm").as("ns")), Seq("src_id"))
-      .join(v.select(col("id").as("nbr_id"), col("vec").as("vn"), col("norm").as("nn")), Seq("nbr_id"))
-      .withColumn("cosine", cosineFromParts(dotQ(col("vs"), col("vn")), col("ns"), col("nn")))
-      .select(col("src_id"), col("nbr_id"), col("cosine"))
+    val rer = scorePairs(short, v).select(col("src_id"), col("nbr_id"), col("cosine"))
     // Fenced oversized cells contribute banded exact-scored edges
     // directly to the final rank (they are band-bounded already — the
     // SQ8 shortlist exists to shrink cell-exhaustive candidate mass,
     // which the banding has done for them).
-    val scored = fence.bandedScored(v).fold(rer)(rer.unionByName(_))
-    val w = Window.partitionBy(col("src_id")).orderBy(desc("cosine"), col("nbr_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("src_id"), col("nbr_id"), col("cosine"), col("rnk"))
+    rankEdges(fence.bandedScored(v).fold(rer)(rer.unionByName(_)), k)
   }
 
   /** Recall audit of ANY directed edge set against the exact per-node
@@ -1376,16 +1349,13 @@ object Similarity {
     val cells = probes.filter(col("probe_rank") === 1)
       .select(col("id"), col("cell"))
       .join(coded, Seq("id"))
-    val q = probes
-      .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val q = onQueries(probes, queryIds, idCol)
       .join(coded, Seq("id"))
       .select(col("id").as("q_id"), col("code").as("q_code"), col("cell"))
     val scored = cells.join(broadcast(q), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .withColumn("dot_q8", dotQ(col("q_code"), col("code")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("dot_q8"), col("id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("dot_q8"), col("id")), k)
       .select(col("q_id"), col("cell"), col("id").as("c_id"),
         col("dot_q8"), col("rnk"))
   }
@@ -1470,44 +1440,46 @@ object Similarity {
     * ([[pqTrainEncode]]); `queryIds` are corpus ids. */
   def pqTopK(pqState: PqState, queryIds: DataFrame, idCol: String, k: Int,
              m: Int, codes: Int): DataFrame = {
-    val (coded, lutRows) = pqCodesAndLut(pqState, queryIds, idCol, codes)
     // ALL queries packed into one row: the gate-clean 1-row anchor the
     // exhaustive ADC scan explodes per candidate row.
-    val lut = lutRows.agg(collect_list(struct(col("q_id"), col("lut"))).as("qs"))
-    val scored = coded.crossJoin(broadcast(lut))
+    val lut = queryLut(pqState, queryIds, idCol, codes)
+      .agg(collect_list(struct(col("q_id"), col("lut"))).as("qs"))
+    val scored = pqState._1.crossJoin(broadcast(lut))
       .select(col("id"), col("code"), explode(col("qs")).as("q"))
       .filter(col("id") =!= col("q.q_id"))
       .select(col("q.q_id").as("q_id"), col("id").as("c_id"),
         CellKernels.adcScore(col("q.lut"), col("code"), m).as("score_pq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("score_pq"), col("c_id")), k)
       .select(col("q_id"), col("c_id"), col("score_pq"), col("rnk"))
   }
 
-  /** The stored codes and per-query ADC tables of a trained PQ state —
-    * the stage x74's exhaustive scan and x76's IVF-scoped scan share;
-    * returns (coded = (id, code: m code ids ordered by subspace),
-    *  lutRows = (q_id, lut: per-subspace (code, term) struct lists)).
-    * See [[pqTopK]]'s Scaladoc for the joint-Lloyd training design and
-    * the determinism analysis. */
-  private def pqCodesAndLut(pqState: PqState, queryIds: DataFrame,
-                            idCol: String, codes: Int)
-      : (DataFrame, DataFrame) = {
-    val (coded, anchor, svRel) = pqState
-    // Per-query ADC tables: per (q, sub), the (code, term) struct list
-    // sorted by code (looked up BY KEY, so codebook cells that emptied
-    // out during training cannot misalign positions); per q, the m
-    // tables sorted by subspace.
-    val lutRows = svRel
-      .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
-      .select(col("id").as("q_id"), col("sub"),
-        pqTerms(codes, CellState.of(anchor, "pqCodesAndLut")).as("terms"))
-      .groupBy(col("q_id"))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
-        e => e("terms")).as("lut"))
-    (coded, lutRows)
-  }
+  /** The per-query ADC tables of a trained PQ state's own subvectors —
+    * the stage x74's exhaustive scan and x76's IVF-scoped scan share. */
+  private def queryLut(pqState: PqState, queryIds: DataFrame, idCol: String,
+                       codes: Int): DataFrame =
+    adcTables(onQueries(pqState._3, queryIds, idCol), codes, pqState._2, "queryLut")
+
+  /** `df`'s rows whose `id` is one of `queryIds`' ids (broadcast side). */
+  private def onQueries(df: DataFrame, queryIds: DataFrame, idCol: String): DataFrame =
+    df.join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+
+  /** Per-query ADC tables over (id, sub, sv) query subvector rows:
+    * (q_id, lut). Per (q, sub), the (code, term) struct list sorted by
+    * code (looked up BY KEY, so codebook cells that emptied out during
+    * training cannot misalign positions); per q, the m tables sorted by
+    * subspace. One spelling for the raw (x74/x75/x76) and residual (x77)
+    * codebooks — see [[pqTopK]]'s Scaladoc for the determinism analysis. */
+  private def adcTables(qsv: DataFrame, codes: Int, anchor: DataFrame,
+                        caller: String): DataFrame =
+    bySub(qsv.select(col("id").as("q_id"), col("sub"),
+      pqTerms(codes, CellState.of(anchor, caller)).as("terms")), "q_id", "terms", "lut")
+
+  /** Per `key`, its rows' `value`s as one array ordered by `sub` — the
+    * pack of the m per-subspace codes or ADC tables. */
+  private def bySub(rows: DataFrame, key: String, value: String, out: String): DataFrame =
+    rows.groupBy(col(key))
+      .agg(transform(array_sort(collect_list(struct(col("sub"), col(value)))),
+        e => e(value)).as(out))
 
   /** The c_label bounds [sub·codes, (sub + 1)·codes) of the enclosing
     * row's own subspace (`sub` column) — cell id = sub·codes + code. */
@@ -1537,30 +1509,30 @@ object Similarity {
     * codes per subspace) and the stored per-row code arrays. Returns
     * (coded = (id, code[m]), anchor = the driver-held codebook
     * [[centroidFold]] state, svRel = the persisted (id, sub, sv)
-    * subvector relation). Factored from [[pqCodesAndLut]] so the residual
-    * form (x77) trains on cell residuals with the IDENTICAL spelling. */
+    * subvector relation). The residual form (x77, [[residualPqState]])
+    * trains on cell residuals with the IDENTICAL spelling. */
   private[graft] def pqTrainEncode(q: DataFrame, m: Int, codes: Int,
                             lloydRounds: Int, dims: Int): PqState = {
     val svRel = pqSubvectors(q, m, dims)
     val anchor = pqCodebooks(svRel, codes, lloydRounds)
     // Stored PQ codes: per row, the m code ids ordered by subspace.
-    val coded = ExtCaches.persistTracked(
+    val coded = ExtCaches.persistTracked(bySub(
       svRel.select(col("id"), col("sub"),
-          pmod(pqArgmin(codes, CellState.of(anchor, "pqTrainEncode")),
-            lit(codes.toLong)).as("code"))
-        .groupBy(col("id"))
-        .agg(transform(array_sort(collect_list(struct(col("sub"), col("code")))),
-          e => e("code")).as("code")))
+        pmod(pqArgmin(codes, CellState.of(anchor, "pqTrainEncode")),
+          lit(codes.toLong)).as("code")), "id", "code", "code"))
     (coded, anchor, svRel)
   }
 
   /** (id, sub, sv): the m subvectors of every row, persisted. */
-  private[graft] def pqSubvectors(q: DataFrame, m: Int, dims: Int): DataFrame = {
+  private[graft] def pqSubvectors(q: DataFrame, m: Int, dims: Int): DataFrame =
+    ExtCaches.persistTracked(subvectorRows(q, m, dims))
+
+  /** (id, sub, sv): the m subvectors of every (id, v) row of `q`. */
+  private def subvectorRows(q: DataFrame, m: Int, dims: Int): DataFrame = {
     require(dims % m == 0, s"dims $dims not divisible by m $m")
     val sub = dims / m
-    ExtCaches.persistTracked(q.select(col("id"),
-      posexplode(array((0 until m).map(s =>
-        slice(col("v"), s * sub + 1, sub)): _*)).as(Seq("sub", "sv"))))
+    q.select(col("id"), posexplode(array((0 until m).map(s =>
+      slice(col("v"), s * sub + 1, sub)): _*)).as(Seq("sub", "sv")))
   }
 
   /** The joint PQ Lloyd chain over [[pqSubvectors]] rows: one
@@ -1595,22 +1567,27 @@ object Similarity {
     * ([[pqTrainEncode]] over the same corpus). */
   def ivfPqTopK(front: IvfFront, queryIds: DataFrame, idCol: String, k: Int,
                 m: Int, codes: Int, pqState: PqState): DataFrame = {
-    val probes = front.probes
-    val (coded, lutRows) = pqCodesAndLut(pqState, queryIds, idCol, codes)
-    val members = ownCell(probes).join(coded, Seq("id"))
-    val qp = probes
-      .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val lut = queryLut(pqState, queryIds, idCol, codes)
+    val qp = onQueries(front.probes, queryIds, idCol)
       .select(col("id").as("q_id"), col("cell"))
-      .join(lutRows, Seq("q_id"))
-    val scored = members.join(broadcast(qp), Seq("cell"))
+      .join(lut, Seq("q_id"))
+    ivfPqScan(front.probes, pqState._1, qp, k, m, None)
+  }
+
+  /** The IVF-PQ cell scan both IVF×PQ forms share: each corpus row's own
+    * cell ⋈ its stored code, equi-joined on the cell with the broadcast
+    * probe side `qp` = (q_id, cell, lut[, bias]) the caller builds, ADC-
+    * scored ([[CellKernels.adcScore]], plus `bias` when given), top `k`
+    * per query — (q_id, cell, c_id, score_pq, rnk). */
+  private def ivfPqScan(probes: DataFrame, coded: DataFrame, qp: DataFrame, k: Int,
+                        m: Int, bias: Option[Column]): DataFrame = {
+    val scored = ownCell(probes).join(coded, Seq("id"))
+      .join(broadcast(qp), Seq("cell"))
       .filter(col("id") =!= col("q_id"))
       .select(col("q_id"), col("cell"), col("id").as("c_id"),
-        CellKernels.adcScore(col("lut"), col("code"), m).as("score_pq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("cell"), col("c_id"), col("score_pq"),
-        col("rnk"))
+        CellKernels.adcScore(col("lut"), col("code"), m, bias).as("score_pq"))
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("score_pq"), col("c_id")), k)
+      .select(col("q_id"), col("cell"), col("c_id"), col("score_pq"), col("rnk"))
   }
 
   /** Integer-rounded cell centroids of a [[trainedCellStats]] relation:
@@ -1682,43 +1659,21 @@ object Similarity {
   def ivfPqResidualTopK(front: IvfFront, queryIds: DataFrame, idCol: String,
                         k: Int, m: Int, codes: Int, dims: Int,
                         pqState: PqState): DataFrame = {
-    require(dims % m == 0, s"dims $dims not divisible by m $m")
-    val subW = dims / m
     val (q, probes) = (front.q, front.probes)
     val cent = roundedCentroids(front.stats)
     val (coded, anchor, _) = pqState
     // LUT from the FULL query subvectors vs the residual codebook —
     // cell-independent, so one table per query (the x74 shape).
-    val qsv = q
-      .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
-      .select(col("id"),
-        posexplode(array((0 until m).map(s =>
-          slice(col("v"), s * subW + 1, subW)): _*)).as(Seq("sub", "sv")))
-    val lutRows = qsv
-      .select(col("id").as("q_id"), col("sub"),
-        pqTerms(codes, CellState.of(anchor, "ivfPqResidualTopK")).as("terms"))
-      .groupBy(col("q_id"))
-      .agg(transform(array_sort(collect_list(struct(col("sub"), col("terms")))),
-        e => e("terms")).as("lut"))
+    val lut = adcTables(subvectorRows(onQueries(q, queryIds, idCol), m, dims), codes,
+      anchor, "ivfPqResidualTopK")
     // Per-(query, probed cell) coarse bias: exact integer dot(q, cbar).
-    val qp = probes
-      .join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val qp = onQueries(probes, queryIds, idCol)
       .join(q, Seq("id"))
       .join(broadcast(cent), Seq("cell"))
       .select(col("id").as("q_id"), col("cell"),
         dotQ(col("v"), col("cbar")).as("bias"))
-      .join(lutRows, Seq("q_id"))
-    val members = ownCell(probes).join(coded, Seq("id"))
-    val scored = members.join(broadcast(qp), Seq("cell"))
-      .filter(col("id") =!= col("q_id"))
-      .select(col("q_id"), col("cell"), col("id").as("c_id"),
-        CellKernels.adcScore(col("lut"), col("code"), m,
-          Some(col("bias").cast(DoubleType))).as("score_pq"))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("score_pq"), col("c_id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
-      .select(col("q_id"), col("cell"), col("c_id"), col("score_pq"),
-        col("rnk"))
+      .join(lut, Seq("q_id"))
+    ivfPqScan(probes, coded, qp, k, m, Some(col("bias").cast(DoubleType)))
   }
 
   /** PQ shortlist + exact re-rank — the FAISS `refine` composition that
@@ -1740,18 +1695,8 @@ object Similarity {
                     codes: Int, pqState: PqState): DataFrame = {
     val short = pqTopK(pqState, queryIds, idCol, shortlist, m, codes)
       .select(col("q_id"), col("c_id"))
-    val v = withNorm(corpus.select(col(idCol).as("id"),
-      col(vecCol).as("vec")), "vec", "norm")
-    val rer = short
-      .join(v.select(col("id").as("q_id"), col("vec").as("qv"),
-        col("norm").as("qn")), Seq("q_id"))
-      .join(v.select(col("id").as("c_id"), col("vec").as("cv"),
-        col("norm").as("cn")), Seq("c_id"))
-      .withColumn("cosine",
-        cosineFromParts(dotQ(col("qv"), col("cv")), col("qn"), col("cn")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("cosine"), col("c_id"))
-    rer.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    val rer = scorePairs(short, normed(corpus, idCol, vecCol), "q_id", "c_id")
+    TopK.perGroup(rer, Seq(col("q_id")), Seq(desc("cosine"), col("c_id")), k)
       .select(col("q_id"), col("c_id"), col("cosine"), col("rnk"))
   }
 
@@ -1823,16 +1768,10 @@ object Similarity {
             .select(col("id"), col("assigned_label"), col("v"),
               col("norm_sq")))
         // Banded candidates WITHIN each oversized cluster: same sampled
-        // sign-signature geometry as cosineNearDupPairsSampled, with the
-        // cluster id prepended to the equi key. The signature materializes
-        // as a column FIRST (same discipline as that operator): inlining
-        // it would re-expand the 64-term sign sum inside each of the
-        // bands×bits gather terms — a ~16k-node expression tree.
-        val e = ExtCaches.persistTracked(big
-          .withColumn("sig", signSignature(col("v"), dims))
-          .select(col("assigned_label"), col("id"),
-            explode(sampledKeysFromSig(col("sig"),
-              fallbackBands, fallbackBitsPerBand, dims, seed)).as("bk")))
+        // sign-signature geometry as cosineNearDupPairsSampled
+        // ([[sampledBands]]), with the cluster id prepended to the equi key.
+        val e = ExtCaches.persistTracked(sampledBands(big, "v",
+          Seq(col("assigned_label"), col("id")), fallbackBands, fallbackBitsPerBand, dims, seed))
         val cand = e.as("x").join(e.as("y"),
             col("x.assigned_label") === col("y.assigned_label") &&
               col("x.bk") === col("y.bk") && col("x.id") < col("y.id"))
@@ -1907,14 +1846,12 @@ object Similarity {
     val coded = ExtCaches.persistTracked(
       sq8Codes(corpus, idCol, vecCol)
         .withColumn("bucket", signBucket(col("code"), bits)))
-    val q = coded.join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val q = onQueries(coded, queryIds, idCol)
       .select(col("id").as("q_id"), col("code").as("q_code"), col("bucket"))
     val scored = coded.join(broadcast(q), Seq("bucket"))
       .filter(col("id") =!= col("q_id"))
       .withColumn("dot_q8", dotQ(col("q_code"), col("code")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("dot_q8"), col("id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("dot_q8"), col("id")), k)
       .select(col("q_id"), col("bucket"), col("id").as("c_id"),
         col("dot_q8"), col("rnk"))
   }
@@ -1943,15 +1880,13 @@ object Similarity {
           .otherwise(lit("1")),
         substring(col("bucket"), i + 1, bits - i))
     }: _*)
-    val q = coded.join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val q = onQueries(coded, queryIds, idCol)
       .select(col("id").as("q_id"), col("code").as("q_code"),
         explode(probes).as("bucket"))
     val scored = coded.join(broadcast(q), Seq("bucket"))
       .filter(col("id") =!= col("q_id"))
       .withColumn("dot_q8", dotQ(col("q_code"), col("code")))
-    val w = Window.partitionBy(col("q_id")).orderBy(desc("dot_q8"), col("id"))
-    scored.withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    TopK.perGroup(scored, Seq(col("q_id")), Seq(desc("dot_q8"), col("id")), k)
       .select(col("q_id"), col("id").as("c_id"), col("dot_q8"), col("rnk"))
   }
 
@@ -2055,7 +1990,7 @@ object Similarity {
         .withColumn("norm", dotQ(col("vq"), col("vq")))
         .withColumn("bucket", signBucket(col("code"), bits))
         .select(col("id"), col("code"), col("vq"), col("norm"), col("bucket")))
-    val q = rel.join(broadcast(queryIds.select(col(idCol).as("id"))), Seq("id"))
+    val q = onQueries(rel, queryIds, idCol)
       .select(col("id").as("q_id"), col("code").as("q_code"),
         col("vq").as("q_vq"), col("norm").as("q_norm"), col("bucket"))
     val scored = rel.join(broadcast(q), Seq("bucket"))

@@ -257,14 +257,10 @@ object TextOps {
       .agg(count(lit(1)).as("tf"))
     val dfreq = occ.select(col("doc_id"), col("tok")).distinct()
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("doc_id"))
-      .orderBy(desc("salience"), col("tok"))
-    tf.join(broadcast(dfreq), Seq("tok"))
-      .withColumn("salience",
-        col("tf").cast(DoubleType) / col("df").cast(DoubleType))
-      .withColumn("rnk", row_number().over(w).cast(LongType))
-      .filter(col("rnk") <= k)
+    graft.ops.TopK.perGroup(tf.join(broadcast(dfreq), Seq("tok"))
+        .withColumn("salience",
+          col("tf").cast(DoubleType) / col("df").cast(DoubleType)),
+        Seq(col("doc_id")), Seq(desc("salience"), col("tok")), k)
       .select(col("doc_id"), col("rnk"), col("tok"), col("tf"), col("df"),
         col("salience"))
   }

@@ -28,6 +28,25 @@ import org.apache.spark.sql.types.LongType
   */
 object TopK {
   /** Keep the top `k` rows per group, ranked by `order` (must end with a
+    * unique tiebreak column, so the kept set is deterministic). Adds
+    * `rankCol` (long, row_number semantics: 1..min(k, group size)). The
+    * one literal-k top-k tail of the engine: every ANN search, graph
+    * build, hybrid-retrieval arm and per-group cap ends here.
+    *
+    * Scale shape: one hash-shuffle on the group key, then Spark ≥3.5
+    * plans the rank-filter as WindowGroupLimit — each partition keeps at
+    * most `k` rows per group in a bounded buffer instead of
+    * materializing and sorting whole groups (a flooding group is exactly
+    * the one you cannot afford to materialize). */
+  def perGroup(df: DataFrame, partition: Seq[Column], order: Seq[Column], k: Int,
+               rankCol: String = "rnk"): DataFrame = {
+    require(k > 0, s"k must be positive: $k")
+    val w = Window.partitionBy(partition: _*).orderBy(order: _*)
+    df.withColumn(rankCol, row_number().over(w).cast(LongType))
+      .filter(col(rankCol) <= k)
+  }
+
+  /** Keep the top `k` rows per group, ranked by `order` (must end with a
     * unique tiebreak column). Adds `rnk` (long, dense_rank semantics). */
   def perGroupDense(df: DataFrame, partition: Seq[Column], order: Seq[Column], k: Int,
                     rankCol: String = "rnk"): DataFrame = {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.ext.{Dedup, ExtCaches, Multimodal, Packing, Sampling, Similarity, TextOps}
-import graft.ops.Cdc
+import graft.ops.{Cdc, TopK}
 import graft.streaming.EventStreams
 import graft.tables.Tables
 
@@ -133,9 +133,9 @@ private[queries] trait ExtQualityGates { this: ExtCore =>
 
 
   def x30_source_caps(s: SparkSession, dir: String): DataFrame =
-    Sampling.capPerGroup(
+    TopK.perGroup(
         TextOps.qualityScore(Tables.documents(s, dir)),
-        col("source"), Seq(desc("quality_score"), col("doc_id")), SourceCap)
+        Seq(col("source")), Seq(desc("quality_score"), col("doc_id")), SourceCap)
       .select(col("source"), col("rnk"), col("doc_id"), col("quality_score"))
       .orderBy(col("source"), col("rnk"))
 

@@ -262,12 +262,8 @@ private[queries] trait ExtRetrievalGates { this: ExtCore =>
     val rrf =
       coalesce(lit(1.0) / (lit(RrfC.toDouble) + col("lex_rnk").cast(DoubleType)), lit(0.0)) +
       coalesce(lit(1.0) / (lit(RrfC.toDouble) + col("vec_rnk").cast(DoubleType)), lit(0.0))
-    val wf = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("arm"), col("q_id")).orderBy(desc("rrf"), col("id"))
-    val ranked = fusedAll
-      .withColumn("rrf", rrf)
-      .withColumn("rnk", row_number().over(wf).cast(LongType))
-      .filter(col("rnk") <= 2L * HybridArmK)
+    val ranked = graft.ops.TopK.perGroup(fusedAll.withColumn("rrf", rrf),
+      Seq(col("arm"), col("q_id")), Seq(desc("rrf"), col("id")), 2 * HybridArmK)
     // [[graft.ext.Relevance.hitsAtK]]'s aggregate, grouped by arm; the
     // static arm list left-joins the grouped counts so an arm that
     // retrieved nothing still emits its zero row (the ungrouped

@@ -297,7 +297,6 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
     * collisions canonicalized per batch (the batch `.distinct()`);
     * `batch_id=N` overwrite keeps the sink idempotent. */
   def x82_incremental_knn_stream(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.streaming.Trigger
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val prevProv = s.conf.getOption(provKey)
@@ -356,11 +355,8 @@ private[queries] trait ExtStreamGates { this: ExtCore =>
         .foreachBatch {
           (batch: org.apache.spark.sql.Dataset[graft.streaming.AnnStreams.KnnCand],
            id: Long) =>
-            val w = Window.partitionBy(col("vec_id"))
-              .orderBy(desc("cosine"), col("base_id"))
-            batch.dropDuplicates("vec_id", "base_id")
-              .withColumn("rnk", row_number().over(w).cast(LongType))
-              .filter(col("rnk") <= KnnGraphK)
+            graft.ops.TopK.perGroup(batch.dropDuplicates("vec_id", "base_id").toDF(),
+                Seq(col("vec_id")), Seq(desc("cosine"), col("base_id")), KnnGraphK)
               .write.mode("overwrite").parquet(s"$out/batch_id=$id")
         }
         .trigger(Trigger.AvailableNow())

@@ -954,13 +954,13 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("capPerGroup keeps exactly the cap best rows per group, all of small groups") {
-    import graft.ext.Sampling
+    import graft.ops.TopK
     // group g0: scores 100,99,…; group g1: 2 rows only
     val df = (0 until 10).map(i => ("g0", i.toLong, (100 - i).toDouble)) ++
       Seq(("g1", 100L, 5.0), ("g1", 101L, 9.0))
     val d = df.toDF("src", "id", "score")
-    val r = Sampling.capPerGroup(d, col("src"),
-        Seq(desc("score"), col("id")), cap = 3)
+    val r = TopK.perGroup(d, Seq(col("src")),
+        Seq(desc("score"), col("id")), k = 3)
       .orderBy("src", "rnk").collect()
     val g0 = r.filter(_.getAs[String]("src") == "g0")
     val g1 = r.filter(_.getAs[String]("src") == "g1")

@@ -218,8 +218,8 @@ class PropertySpec extends SparkSpec {
         val df = rows.zipWithIndex
           .map { case ((g, v), id) => (g, v.toDouble, id.toLong) }
           .toDF("grp", "v", "id")
-        val kept = graft.ext.Sampling
-          .capPerGroup(df, col("grp"), Seq(desc("v"), col("id")), cap)
+        val kept = graft.ops.TopK
+          .perGroup(df, Seq(col("grp")), Seq(desc("v"), col("id")), cap)
           .collect()
         val byGroup = rows.zipWithIndex.groupBy(_._1._1)
         byGroup.forall { case (g, members) =>

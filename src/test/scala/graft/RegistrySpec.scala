@@ -10,6 +10,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * substantive. No SparkSession needed; this is pure map hygiene. */
 class RegistrySpec extends AnyFunSuite {
 
+  /** Every `.scala` file under `d`, recursively. */
+  private def scalaFiles(d: java.io.File): Seq[java.io.File] =
+    d.listFiles().toSeq.flatMap { f =>
+      if (f.isDirectory) scalaFiles(f)
+      else if (f.getName.endsWith(".scala")) Seq(f)
+      else Nil
+    }
+
   test("every registered query has a DuckDB oracle (full 100% gate, no silent rows-only fallbacks)") {
     val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(missing.isEmpty,
@@ -102,12 +110,6 @@ class RegistrySpec extends AnyFunSuite {
     // the rest of the session and its storage memory outlives every
     // clear. persistTracked is the one path in.
     val bare = raw"\.persist\(|\.cache\(\)".r
-    def scalaFiles(d: java.io.File): Seq[java.io.File] =
-      d.listFiles().toSeq.flatMap { f =>
-        if (f.isDirectory) scalaFiles(f)
-        else if (f.getName.endsWith(".scala")) Seq(f)
-        else Nil
-      }
     val files = scalaFiles(new java.io.File("src/main"))
     assert(files.exists(_.getName == "ExtCaches.scala"), "source scan found no ExtCaches.scala")
     val offenders = files.filterNot(_.getName == "ExtCaches.scala").flatMap { f =>
@@ -119,6 +121,41 @@ class RegistrySpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"untracked persists (use ExtCaches.persistTracked):\n${offenders.mkString("\n")}")
+  }
+
+  test("every literal-k row_number top-k tail in src/main goes through TopK.perGroup") {
+    // A hand-rolled `row_number().over(w)` + `filter(rnk <= k)` tail is a
+    // second spelling of graft.ops.TopK.perGroup's. The ranks left in
+    // src/main are not top-k tails; they are pinned here by file and
+    // count, so a new rank anywhere else (or one more in these files)
+    // fails with its file and line.
+    val pinned = Map(
+      "graft/ops/TopK.scala" -> 2,                 // perGroup, perGroupFirst
+      "graft/ext/Sampling.scala" -> 1,             // stratified fraction bound
+      "graft/ext/TextOps.scala" -> 1,              // cumulative rank in a cell
+      "graft/ext/Dedup.scala" -> 2,                // prefix-filter bounds
+      "graft/queries/ExtQualityGates.scala" -> 1,  // per-source trim band
+      "graft/ext/Similarity.scala" -> 2)           // sq8Recall's two rankings
+    val root = new java.io.File("src/main/scala")
+    val hits = scalaFiles(root).flatMap { f =>
+      val rel = root.toPath.relativize(f.toPath).toString.replace('\\', '/')
+      val src = scala.io.Source.fromFile(f, "UTF-8")
+      val lines = try src.getLines().toVector finally src.close()
+      lines.zipWithIndex.collect {
+        case (l, i) if l.contains("row_number().over(") => (rel, s"$rel:${i + 1}: ${l.trim}")
+      }
+    }
+    assert(hits.exists(_._1 == "graft/ops/TopK.scala"), "source scan found no TopK.scala")
+    val byFile = hits.groupBy(_._1)
+    val off = (byFile.keySet ++ pinned.keySet).toSeq.sorted.filter { f =>
+      byFile.get(f).fold(0)(_.size) != pinned.getOrElse(f, 0)
+    }
+    assert(off.isEmpty,
+      "row_number ranks outside their pins (a top-k tail is TopK.perGroup):\n" +
+        off.map { f =>
+          s"$f: ${byFile.get(f).fold(0)(_.size)} found, ${pinned.getOrElse(f, 0)} pinned\n" +
+            byFile.getOrElse(f, Nil).map("  " + _._2).mkString("\n")
+        }.mkString("\n"))
   }
 
   test("documented registry count matches the code (SURVEY.md, README.md)") {
